@@ -101,19 +101,6 @@ def _shingle_rows(df: DataFrame, id_col: str, text_col: str, shingle_n: int, dis
 # MinHash + LSH near-dup (B48)
 # ---------------------------------------------------------------------------
 
-#: Materialize the window-annotated banded frame once for all four edge
-#: sources in :func:`minhash_lsh_candidates` (see the inline comment
-#: there). Module-level so the paired A/B harness and tests can pin the
-#: pre-r12 recompute shape.
-_LSH_CHECKPOINT = True
-
-#: r12-opt A/B pin (second pass): True = the minhash verify stage
-#: semi-join-restricts the per-doc attribute frame (shingles / digest) to
-#: candidate ids and materializes it once for both pair-join legs; False =
-#: the pre-r12 shape (each leg re-scans the corpus and recomputes the
-#: attribute for every doc).
-_VERIFY_SEMI = True
-
 
 def minhash_signatures(
     df: DataFrame,
@@ -236,10 +223,8 @@ def minhash_lsh_candidates(
     # metadata, never text or shingles) and every edge source reads it;
     # blocks are ContextCleaner-released when the frame drops (the
     # prefix.py/graph.py trade: executor loss after materialization means
-    # a job-level retry). _LSH_CHECKPOINT exists so the paired A/B (and
-    # any test) can pin the old recompute shape.
-    if _LSH_CHECKPOINT:
-        banded = banded.localCheckpoint(eager=False)
+    # a job-level retry).
+    banded = banded.localCheckpoint(eager=False)
     small = banded.filter(F.col("_bsz") <= dense_bucket_limit)
     left = small.alias("l")
     right = small.alias("r")
@@ -313,8 +298,7 @@ def ngram_jaccard_pairs(
         "_id",
         F.array_distinct(shingles(F.col("_vt"), shingle_n)).alias("_sh"),
     )
-    if _VERIFY_SEMI:
-        sh = sh.localCheckpoint(eager=False)
+    sh = sh.localCheckpoint(eager=False)
     scored = (
         candidates.join(sh.withColumnRenamed("_id", "a").withColumnRenamed("_sh", "sh_a"), "a")
         .join(sh.withColumnRenamed("_id", "b").withColumnRenamed("_sh", "sh_b"), "b")
@@ -355,12 +339,9 @@ def _verify_side_frame(
     and feeds BOTH join legs from it. ``candidates`` comes back
     checkpointed too (it is consumed three times: the id list + two legs).
     Inner joins on a/b ignore non-candidate ids by definition, so the
-    restriction is exact. ``_VERIFY_SEMI`` False pins the pre-r12
-    two-pass shape for the paired A/B and the equivalence tests.
+    restriction is exact.
     """
     base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_vt"))
-    if not _VERIFY_SEMI:
-        return candidates, base
     candidates = candidates.localCheckpoint(eager=False)
     ids = (
         candidates.select(F.col("a").alias("_id"))
@@ -680,8 +661,7 @@ def simhash_near_dup_pairs(
     # aggregation (shingle explode + packed-counter agg). Same narrow-row
     # checkpoint as minhash_lsh_candidates: (id, hash, blk, bval) —
     # 4 fixed-width columns, blocks rows/doc.
-    if _LSH_CHECKPOINT:
-        banded = banded.localCheckpoint(eager=False)
+    banded = banded.localCheckpoint(eager=False)
     left, right = banded.alias("l"), banded.alias("r")
     return (
         left.join(
@@ -973,8 +953,7 @@ def embedding_near_dup_pairs(
     # for ONE banding pass). Checkpoint the narrow (id, band, bkey) rows
     # once — vectors are re-attached by the join below, never
     # materialized here.
-    if _LSH_CHECKPOINT:
-        banded = banded.localCheckpoint(eager=False)
+    banded = banded.localCheckpoint(eager=False)
     withv = banded.join(base, "_id")
     return _verify_pairs_within_groups(withv, ["band", "bkey"], threshold, max_group_rows)
 
@@ -1070,8 +1049,7 @@ def semantic_dedup_pairs(
     # materialization each re-runs the assignment pandas_udf over every
     # vector. One checkpoint of the narrow (id, cell) rows (r12, same
     # rationale as the LSH banded frames above).
-    if _LSH_CHECKPOINT:
-        assigned = assigned.localCheckpoint(eager=False)
+    assigned = assigned.localCheckpoint(eager=False)
     if max_cell_size:
         # Occupancy = DISTINCT members per cell. Under soft assignment each
         # vector lands in up to ``probes`` cells, so a raw row count would be

@@ -28,6 +28,7 @@ Everything uses the Hadoop FileSystem API through Spark, so ``file://``,
 
 from __future__ import annotations
 
+import json
 import os
 import time
 import uuid
@@ -129,13 +130,14 @@ class ExchangeManager:
         t0 = time.monotonic()
         out.write.mode("overwrite").parquet(path)
         elapsed = time.monotonic() - t0
+        nbytes, nfiles = self._du(path)
         if num_partitions is None:
             # written-file count == partition count for a fresh write; avoids
             # a DF→RDD conversion just to ask getNumPartitions.
-            _, nfiles = self._du(path)
             num_partitions = nfiles or int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        st = ExchangeStats(stage, path, num_partitions, elapsed)
-        st.bytes_written, st.num_files = self._du(path)
+        st = ExchangeStats(
+            stage, path, num_partitions, elapsed, bytes_written=nbytes, num_files=nfiles
+        )
         self.stats[stage] = st
         return st
 
@@ -310,18 +312,12 @@ class ExchangeManager:
         return self.spark.table(table)
 
     # -- Hadoop FS plumbing ------------------------------------------------
-    def _fs(self, path: str):
-        jvm = self.spark._jvm
-        jsc = self.spark._jsc
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        return hpath.getFileSystem(jsc.hadoopConfiguration()), hpath, jvm
-
     def _du(self, path: str) -> tuple[int, int]:
         """(bytes, file count) of the stage's DATA files only. Walks the
         tree and filters to ``part-*`` — getContentSummary would also count
         ``_SUCCESS`` and local-FS ``.crc`` sidecars, inflating the recorded
         partition count (e.g. 5 for a 4-partition write)."""
-        fs, hpath, _ = self._fs(path)
+        fs, hpath, _ = _fs(self.spark, path)
         if not fs.exists(hpath):
             return 0, 0
         nbytes = nfiles = 0
@@ -335,7 +331,7 @@ class ExchangeManager:
 
     # -- cleanup (A13 analogue: per-stage and whole-app delete) ------------
     def remove_stage(self, stage: str) -> bool:
-        fs, hpath, _ = self._fs(self.stage_path(stage))
+        fs, hpath, _ = _fs(self.spark, self.stage_path(stage))
         ok = bool(fs.delete(hpath, True)) if fs.exists(hpath) else False
         self.stats.pop(stage, None)
         return ok
@@ -347,7 +343,7 @@ class ExchangeManager:
         removed = 0
         for shard in range(self.prefixes):
             p = os.path.join(self.root, f"p{shard}", self.app_id)
-            fs, hpath, _ = self._fs(p)
+            fs, hpath, _ = _fs(self.spark, p)
             if fs.exists(hpath):
                 fs.delete(hpath, True)
                 removed += 1
@@ -355,25 +351,65 @@ class ExchangeManager:
         return removed
 
 
-# -- content checksums (A4/A5 analogue) ------------------------------------
+# -- Hadoop FS and content-integrity helpers (also used by maintenance.py) ---
+
+def _fs(spark: SparkSession, path: str):
+    """(FileSystem, Path, jvm) for any Hadoop-FS URI."""
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def _write_json(spark: SparkSession, path: str, doc: dict) -> None:
+    """Write ``doc`` as a JSON sidecar file (key order as given)."""
+    fs, hpath, _ = _fs(spark, path)
+    out = fs.create(hpath, True)
+    try:
+        out.write(bytearray(json.dumps(doc).encode("utf-8")))
+    finally:
+        out.close()
+
+
+def _read_json(spark: SparkSession, path: str) -> dict | None:
+    """A JSON sidecar file's content, or None when the file is missing."""
+    fs, hpath, _ = _fs(spark, path)
+    if not fs.exists(hpath):
+        return None
+    stream = fs.open(hpath)
+    try:
+        return json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
+    finally:
+        stream.close()
+
+
 # The plugin writes per-reduce-partition Adler32/CRC32 objects at shuffle
 # write and validates them at partition boundaries on read
 # (S3ShuffleHelper.scala:49-51,83-92; S3ChecksumValidationStream.scala:
 # 17-92). The engine-level analogue validates CONTENT, not byte streams:
-# an order-independent row-hash sum over the materialized stage, written
-# as a sidecar at stage_write time and recomputed at read time — catching
+# an order-independent row-hash sum over the materialized data, written
+# as a sidecar at write time and recomputed at read time — catching
 # lost/truncated/duplicated files and corrupted values regardless of how
 # the object store re-chunked the bytes.
 
+def _digest_aggs(cols: list[str]) -> list:
+    """Aggregates ``rows`` and ``digest``: row count and the sum of
+    per-row xxhash64 over ``cols``, accumulated exactly in decimal(38,0)
+    so the digest is independent of partitioning and read order. Use in
+    ``select`` for one digest or ``groupBy(...).agg`` for one per group."""
+    return [
+        F.count(F.lit(1)).alias("rows"),
+        F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("digest"),
+    ]
+
+
+def _digest_of(row) -> tuple[int, str]:
+    """(rows, digest) of a row computed with :func:`_digest_aggs`."""
+    return int(row["rows"]), str(row["digest"] if row["digest"] is not None else 0)
+
+
 def _content_checksum(df) -> tuple[int, str]:
-    """(row_count, order-independent content digest): sum of per-row
-    xxhash64 over ALL columns, accumulated exactly in decimal(38,0) so the
-    digest is independent of partitioning and read order."""
-    row = df.select(
-        F.count(F.lit(1)).alias("n"),
-        F.sum(F.xxhash64(*df.columns).cast("decimal(38,0)")).alias("s"),
-    ).first()
-    return int(row["n"]), str(row["s"] if row["s"] is not None else 0)
+    """(row_count, order-independent content digest) over ALL columns."""
+    return _digest_of(df.select(*_digest_aggs(df.columns)).first())
 
 
 def _checksum_path(stage_path: str) -> str:
@@ -384,15 +420,10 @@ def write_stage_checksum(mgr: "ExchangeManager", stage: str) -> dict:
     """Compute + persist the content checksum of a materialized stage
     (reads the files AT REST, so what is validated later is what the
     object store actually holds, not what the writer intended)."""
-    import json as _json
-
     path = mgr.stage_path(stage)
     n, digest = _content_checksum(mgr.spark.read.parquet(path))
     doc = {"stage": stage, "rows": n, "digest": digest}
-    fs, _, jvm = mgr._fs(path)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(_checksum_path(path)), True)
-    out.write(bytearray(_json.dumps(doc).encode("utf-8")))
-    out.close()
+    _write_json(mgr.spark, _checksum_path(path), doc)
     return doc
 
 
@@ -401,19 +432,10 @@ def verify_stage_checksum(mgr: "ExchangeManager", stage: str) -> bool:
     (A5 read-side validation). Returns False on any mismatch or missing
     sidecar — callers decide whether to refetch/rebuild the stage, the
     same recovery the plugin's validation stream triggers."""
-    import json as _json
-
     path = mgr.stage_path(stage)
-    fs, _, jvm = mgr._fs(path)
-    cpath = jvm.org.apache.hadoop.fs.Path(_checksum_path(path))
-    if not fs.exists(cpath):
+    want = _read_json(mgr.spark, _checksum_path(path))
+    if want is None:
         return False
-    stream = fs.open(cpath)
-    try:
-        raw = bytes(stream.readAllBytes())
-    finally:
-        stream.close()
-    want = _json.loads(raw.decode("utf-8"))
     # Total corruption — every parquet file missing/deleted — makes the
     # read itself raise (unable to infer schema) rather than produce a
     # mismatching digest; that is still "validation failed", so report

@@ -28,14 +28,13 @@ from __future__ import annotations
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
-
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(
-        spark.sparkContext._jsc.sc().hadoopConfiguration()
-    )
-    return fs, hpath, jvm
+from spark_s3_shuffle_spark.operators.exchange import (
+    _digest_aggs,
+    _digest_of,
+    _fs,
+    _read_json,
+    _write_json,
+)
 
 
 def list_shard_files(spark: SparkSession, root: str) -> dict[str, int]:
@@ -376,6 +375,17 @@ def snapshot_diff(old, new, key_cols: list[str]):
     )
 
 
+def _shard_digests(df) -> dict:
+    """shard -> {"digest", "rows"} over the non-shard columns, shards and
+    keys in sorted order (the ``_integrity.json`` layout)."""
+    data_cols = [c for c in df.columns if c != "shard"]
+    out = {}
+    for r in df.groupBy("shard").agg(*_digest_aggs(data_cols)).collect():
+        rows, digest = _digest_of(r)
+        out[str(r["shard"])] = {"digest": digest, "rows": rows}
+    return dict(sorted(out.items()))
+
+
 def export_integrity_manifest(spark: SparkSession, root: str) -> dict:
     """Per-shard content checksums for a sharded export: ONE pass over the
     table computes (rows, order-independent xxhash64 sum in exact
@@ -383,26 +393,8 @@ def export_integrity_manifest(spark: SparkSession, root: str) -> dict:
     the shards. A training consumer can then verify any single shard it
     downloads — or the whole export — without trusting transport or
     storage. Returns the manifest dict."""
-    import json as _json
-
-    df = spark.read.parquet(root)
-    data_cols = [c for c in df.columns if c != "shard"]
-    per_shard = (
-        df.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.xxhash64(*data_cols).cast("decimal(38,0)")).alias("digest"),
-        )
-        .collect()
-    )
-    manifest = {
-        str(r["shard"]): {"rows": int(r["rows"]), "digest": str(r["digest"])}
-        for r in per_shard
-    }
-    fs, _, jvm = _fs(spark, root)
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(f"{root}/_integrity.json"), True)
-    out.write(bytearray(_json.dumps(manifest, sort_keys=True).encode("utf-8")))
-    out.close()
+    manifest = _shard_digests(spark.read.parquet(root))
+    _write_json(spark, f"{root}/_integrity.json", manifest)
     return manifest
 
 
@@ -413,17 +405,9 @@ def verify_export_integrity(
     With ``shard`` set, only that shard's files are read (partition-pruned
     scan) — the single-download verification path. Returns False on any
     mismatch or missing manifest."""
-    import json as _json
-
-    fs, _, jvm = _fs(spark, root)
-    mpath = jvm.org.apache.hadoop.fs.Path(f"{root}/_integrity.json")
-    if not fs.exists(mpath):
+    manifest = _read_json(spark, f"{root}/_integrity.json")
+    if manifest is None:
         return False
-    stream = fs.open(mpath)
-    try:
-        manifest = _json.loads(bytes(stream.readAllBytes()).decode("utf-8"))
-    finally:
-        stream.close()
     # Total loss — every shard's parquet gone, only the manifest left —
     # makes the read itself raise rather than produce a digest mismatch;
     # report False (verification failed) like every other corruption,
@@ -439,14 +423,4 @@ def verify_export_integrity(
             return False
     else:
         want = manifest
-    data_cols = [c for c in df.columns if c != "shard"]
-    got = {
-        str(r["shard"]): {"rows": int(r["rows"]), "digest": str(r["digest"])}
-        for r in df.groupBy("shard")
-        .agg(
-            F.count(F.lit(1)).alias("rows"),
-            F.sum(F.xxhash64(*data_cols).cast("decimal(38,0)")).alias("digest"),
-        )
-        .collect()
-    }
-    return got == want
+    return _shard_digests(df) == want

@@ -60,13 +60,6 @@ MEDIA_SCHEMA = StructType([
 ])
 
 
-#: r12-opt A/B pin: True = pin_for_sort materializes decoded feature
-#: frames before a global sort; False = the pre-r12 shape (the sort's
-#: range-partitioning sample pass re-executes the whole plant+decode
-#: Python chain before the shuffle write executes it again).
-_FEATURES_CHECKPOINT = True
-
-
 def pin_for_sort(df: DataFrame) -> DataFrame:
     """Materialize a narrow computed frame once before a global sort
     (media feature frames, per-doc text scores — any expensive
@@ -83,7 +76,7 @@ def pin_for_sort(df: DataFrame) -> DataFrame:
     sample and shuffle passes re-read a small local materialization
     instead of re-decoding the corpus. §1.4/§8: decode once, sort the
     decided rows."""
-    return df.localCheckpoint(eager=False) if _FEATURES_CHECKPOINT else df
+    return df.localCheckpoint(eager=False)
 
 
 def as_media(df: DataFrame, id_col: str, payload_col: str, mime: str) -> DataFrame:

@@ -229,13 +229,19 @@ def stage_write(
 
 def read_manifest(stage: str, cfg: S3Config) -> dict | None:
     """The stage exists iff its manifest object exists — listing the data
-    prefix is never consulted (uncommitted garbage is invisible)."""
+    prefix is never consulted (uncommitted garbage is invisible). Only a
+    missing key means "no stage": any other error (wrong bucket, endpoint
+    or credentials) raises."""
+    from botocore.exceptions import ClientError
+
     try:
         body = cfg.client().get_object(
             Bucket=cfg.bucket, Key=f"{stage}/{_MANIFEST}"
         )["Body"].read()
-    except Exception:
-        return None
+    except ClientError as e:
+        if e.response.get("Error", {}).get("Code") in ("NoSuchKey", "404"):
+            return None
+        raise
     return json.loads(body.decode("utf-8"))
 
 
@@ -309,20 +315,13 @@ def stage_read(
     stage: str,
     cfg: S3Config,
     num_tasks: int | None = None,
-    adaptive: bool = True,
-    simulated_latency_ms: float = 0.0,
     fault_injection=None,
 ) -> DataFrame:
     """Read a committed stage back as a DataFrame: the manifest's keys
     are sliced round-robin across ``num_tasks`` reader tasks; each task
-    GETs its objects through an :class:`AdaptiveFetcher` (or a single
-    serial fetcher with ``adaptive=False`` — the A/B baseline) and
-    parses them into Arrow batches. Data flows store → executor;
-    nothing routes through the driver.
-
-    ``simulated_latency_ms`` adds a fixed per-GET sleep — moto responds
-    in microseconds, so tests use it to give the hill-climber a real
-    latency floor to climb against (documented test-only knob).
+    GETs its objects through an :class:`AdaptiveFetcher` and parses them
+    into Arrow batches. Data flows store → executor; nothing routes
+    through the driver.
 
     ``fault_injection`` (test-only seam, round-10): picklable
     ``callable(partition_id, task_attempt_number)`` invoked in-task after
@@ -352,18 +351,10 @@ def stage_read(
         if not my_keys:
             return
         client = cfg.client()
-
-        def fetch_one(key):
-            if simulated_latency_ms:
-                time.sleep(simulated_latency_ms / 1000.0)
-            return client.get_object(Bucket=cfg.bucket, Key=key)["Body"].read()
-
-        if adaptive:
-            fetcher = AdaptiveFetcher(fetch_one)
-            stream = fetcher.fetch_all(my_keys)
-        else:
-            stream = ((k, fetch_one(k)) for k in my_keys)
-        for _key, payload in stream:
+        fetcher = AdaptiveFetcher(
+            lambda key: client.get_object(Bucket=cfg.bucket, Key=key)["Body"].read()
+        )
+        for _key, payload in fetcher.fetch_all(my_keys):
             table = pq.read_table(pa.BufferReader(payload))
             yield from table.to_batches()
             if fault_injection is not None:

@@ -41,12 +41,6 @@ Builder = Callable[[SparkSession, str], DataFrame]
 #: As-of cutoff for q11: 2024-01-15T00:00:00Z (events span 2024-01).
 ASOF_CUTOFF = "2024-01-15 00:00:00"
 
-#: r12-opt A/B pin: True = q161 generates basket pairs in-task from one
-#: grouped scan; False = the pre-r12 lineitem self-join (kept only so the
-#: paired benchmark and the equivalence test can flip shapes in one JVM).
-_Q161_GROUPED = True
-
-
 @dataclass
 class QuerySpec:
     name: str
@@ -6167,34 +6161,27 @@ def q160(spark, sf_dir):
 )
 def q161(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    if not _Q161_GROUPED:  # pre-r12 self-join shape, pinned for paired A/B
-        a = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p1"))
-        b = li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("p2"))
-        pairs = a.join(b, "ok").filter(F.col("p1") < F.col("p2"))
-    else:
-        baskets = (
-            li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-            .groupBy("ok")
-            .agg(F.sort_array(F.collect_list("pk")).alias("pks"))
-        )
-        pairs = baskets.select(
-            F.explode(
-                F.flatten(
-                    F.transform(
-                        "pks",
-                        lambda x, i: F.filter(
-                            F.transform(
-                                F.slice(F.col("pks"), i + F.lit(2), F.size("pks")),
-                                lambda y: F.struct(
-                                    x.alias("p1"), y.alias("p2")
-                                ),
-                            ),
-                            lambda s: s["p1"] != s["p2"],
+    baskets = (
+        li.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+        .groupBy("ok")
+        .agg(F.sort_array(F.collect_list("pk")).alias("pks"))
+    )
+    pairs = baskets.select(
+        F.explode(
+            F.flatten(
+                F.transform(
+                    "pks",
+                    lambda x, i: F.filter(
+                        F.transform(
+                            F.slice(F.col("pks"), i + F.lit(2), F.size("pks")),
+                            lambda y: F.struct(x.alias("p1"), y.alias("p2")),
                         ),
-                    )
+                        lambda s: s["p1"] != s["p2"],
+                    ),
                 )
-            ).alias("_pr")
-        ).select(F.col("_pr.p1").alias("p1"), F.col("_pr.p2").alias("p2"))
+            )
+        ).alias("_pr")
+    ).select(F.col("_pr.p1").alias("p1"), F.col("_pr.p2").alias("p2"))
     return (
         pairs.groupBy("p1", "p2")
         .agg(F.count(F.lit(1)).alias("n"))

@@ -95,65 +95,41 @@ def test_minhash_dedup_drops_dup(spark, docs):
 
 
 def test_lsh_candidates_checkpoint_equivalent(spark, docs):
-    """The r12 banded-frame localCheckpoint is a pure materialization:
-    the candidate edge set must be identical with and without it
-    (covering all four edge sources — the tiny dense_bucket_limit forces
-    the oversize star/chain paths too)."""
-    def pairs():
-        cand = D.minhash_lsh_candidates(
-            docs, num_hashes=32, bands=16, shingle_n=3, dense_bucket_limit=1
-        )
-        return {(r["a"], r["b"]) for r in cand.collect()}
-
-    old_flag = D._LSH_CHECKPOINT
-    try:
-        D._LSH_CHECKPOINT = True
-        with_cp = pairs()
-        D._LSH_CHECKPOINT = False
-        without_cp = pairs()
-    finally:
-        D._LSH_CHECKPOINT = old_flag
-    assert with_cp == without_cp and with_cp
+    """The banded-frame localCheckpoint is a pure materialization: the
+    candidate edge set is the one the recompute shape produced, covering
+    all four edge sources (the tiny dense_bucket_limit forces the
+    oversize star/chain paths too)."""
+    cand = D.minhash_lsh_candidates(
+        docs, num_hashes=32, bands=16, shingle_n=3, dense_bucket_limit=1
+    )
+    assert {(r["a"], r["b"]) for r in cand.collect()} == {(0, 1), (0, 2), (1, 2)}
 
 
 def test_verify_semi_restriction_equivalent(spark, docs):
-    """The r12 second-pass verify restriction (semi-join the shingle /
-    digest frame to candidate ids, materialize once for both legs) is a
-    pure recompute cut: confirmed pairs and survivor sets must be
-    identical with the flag on and off, on BOTH verify tiers (ngram
-    Jaccard sub-1.0 and digest-equality 1.0)."""
-    def snapshot():
-        cand = D.minhash_lsh_candidates(docs, num_hashes=32, bands=16, shingle_n=3)
-        ng = frozenset(
-            (r["a"], r["b"], r["jaccard"])
-            for r in D.ngram_jaccard_pairs(docs, cand, shingle_n=3, threshold=0.5).collect()
-        )
-        ex = frozenset(
-            (r["a"], r["b"]) for r in D.exact_duplicate_pairs(docs, cand).collect()
-        )
-        kept = frozenset(
-            r["doc_id"]
-            for r in D.minhash_dedup(
-                docs, num_hashes=32, bands=16, jaccard_threshold=1.0
-            ).collect()
-        )
-        return ng, ex, kept
-
-    old_flag = D._VERIFY_SEMI
-    try:
-        D._VERIFY_SEMI = True
-        on = snapshot()
-        D._VERIFY_SEMI = False
-        off = snapshot()
-    finally:
-        D._VERIFY_SEMI = old_flag
-    assert on == off and on[0] and on[1]
+    """The verify restriction (semi-join the shingle / digest frame to
+    candidate ids, materialize once for both legs) is a pure recompute
+    cut: confirmed pairs and survivors are the ones the two-pass shape
+    produced, on BOTH verify tiers (ngram Jaccard sub-1.0 and
+    digest-equality 1.0)."""
+    cand = D.minhash_lsh_candidates(docs, num_hashes=32, bands=16, shingle_n=3)
+    ng = {
+        (r["a"], r["b"], r["jaccard"])
+        for r in D.ngram_jaccard_pairs(docs, cand, shingle_n=3, threshold=0.5).collect()
+    }
+    ex = {(r["a"], r["b"]) for r in D.exact_duplicate_pairs(docs, cand).collect()}
+    kept = {
+        r["doc_id"]
+        for r in D.minhash_dedup(docs, num_hashes=32, bands=16, jaccard_threshold=1.0).collect()
+    }
+    assert ng == {(0, 1, 1.0), (0, 2, 0.8462), (1, 2, 0.8462)}
+    assert ex == {(0, 1)}
+    assert kept == {0, 2, 3, 4}
 
 
 def test_banded_checkpoint_equivalent_simhash_embedding_semantic(spark, docs):
-    """The r12 checkpoints in the simhash / sign-LSH / semantic paths are
-    pure materializations: survivors and pair sets must be identical with
-    the flag on and off."""
+    """The checkpoints in the simhash / sign-LSH / semantic paths are pure
+    materializations: survivors and pair sets are the ones the recompute
+    shape produced."""
     vrows = [
         (0, [1.0, 0.0, 0.0, 0.0]),
         (1, [0.999, 0.01, 0.0, 0.0]),
@@ -162,32 +138,20 @@ def test_banded_checkpoint_equivalent_simhash_embedding_semantic(spark, docs):
     ]
     vdf = spark.createDataFrame(vrows, "vec_id long, embedding array<double>")
 
-    def snapshot():
-        sim = frozenset(r["doc_id"] for r in D.simhash_dedup(docs).collect())
-        emb = frozenset(
-            (r["a"], r["b"])
-            for r in D.embedding_near_dup_pairs(
-                vdf, threshold=0.95, num_planes=8, bands=4, dim=4
-            ).collect()
-        )
-        sem = frozenset(
-            (r["a"], r["b"], r["cos"])
-            for r in D.semantic_dedup_pairs(
-                vdf, threshold=0.95, num_cells=2, probes=1
-            ).collect()
-        )
-        return sim, emb, sem
-
-    old_flag = D._LSH_CHECKPOINT
-    try:
-        D._LSH_CHECKPOINT = True
-        on = snapshot()
-        D._LSH_CHECKPOINT = False
-        off = snapshot()
-    finally:
-        D._LSH_CHECKPOINT = old_flag
-    assert on == off
-    assert on[0] and on[1]  # non-degenerate: survivors + at least one pair
+    sim = {r["doc_id"] for r in D.simhash_dedup(docs).collect()}
+    emb = {
+        (r["a"], r["b"])
+        for r in D.embedding_near_dup_pairs(
+            vdf, threshold=0.95, num_planes=8, bands=4, dim=4
+        ).collect()
+    }
+    sem = {
+        (r["a"], r["b"], r["cos"])
+        for r in D.semantic_dedup_pairs(vdf, threshold=0.95, num_cells=2, probes=1).collect()
+    }
+    assert sim == {0, 2, 3, 4}
+    assert emb == {(0, 1), (2, 3)}
+    assert sem == {(0, 1, 0.9999), (2, 3, 0.9949)}
 
 
 def test_connected_components_chain(spark):
@@ -2271,29 +2235,21 @@ def test_jpeg_decode_spark_path(spark):
 
 
 def test_pin_for_sort_equivalent(spark):
-    """The r12 pin_for_sort materialization (decode once, then sort the
-    narrow feature rows) is a pure recompute cut: ordered results must be
-    identical with the flag on and off."""
+    """The pin_for_sort materialization (decode once, then sort the narrow
+    feature rows) is a pure recompute cut: the ordered rows are the ones
+    the unpinned sort produced."""
     df = spark.createDataFrame([(i,) for i in (9, 2, 41, 0, 17)], "doc_id long")
-
-    def rows():
-        return [
-            tuple(r)
-            for r in MM.pin_for_sort(
-                MM.extract_jpeg_features(MM.plant_jpeg_media(df, "doc_id"))
-            ).orderBy("media_id").collect()
-        ]
-
-    old_flag = MM._FEATURES_CHECKPOINT
-    try:
-        MM._FEATURES_CHECKPOINT = True
-        on = rows()
-        MM._FEATURES_CHECKPOINT = False
-        off = rows()
-    finally:
-        MM._FEATURES_CHECKPOINT = old_flag
-    assert on == off and len(on) == 5
-    assert [r[0] for r in on] == [0, 2, 9, 17, 41]
+    rows = [
+        tuple(r)
+        for r in MM.pin_for_sort(
+            MM.extract_jpeg_features(MM.plant_jpeg_media(df, "doc_id"))
+        ).orderBy("media_id").collect()
+    ]
+    # (media_id, ok, width, height, channels, sum_r/g/b, mean_r/g/b)
+    assert rows == [
+        (mid, "true", 32, 16, 1, s, s, s, s / 512, s / 512, s / 512)
+        for mid, s in ((0, 47104), (2, 58368), (9, 81408), (17, 44544), (41, 48640))
+    ]
 
 
 def test_avi_codec_roundtrip_and_failure_modes():

@@ -19,20 +19,25 @@ def test_query_runs(spark, sf_dir, name):
 
 
 def test_q161_grouped_pairs_equivalent_to_self_join(spark, sf_dir):
-    """The r12 in-task basket-pair generation must emit exactly the rows
-    of the pre-r12 lineitem self-join (same pairs, same multiplicity —
-    duplicate partkeys within one order included), in the same order."""
-    from spark_s3_shuffle_spark.queries import registry as REG
+    """q161 generates basket pairs in-task; its DuckDB oracle states the
+    same query as the lineitem self-join. Both must emit the same rows
+    (same pairs, same multiplicity — duplicate partkeys within one order
+    included), in the same order."""
+    import os
+    import sys
 
-    old_flag = REG._Q161_GROUPED
-    try:
-        REG._Q161_GROUPED = True
-        grouped = QUERIES["q161_basket_cooccurrence"].builder(spark, sf_dir).collect()
-        REG._Q161_GROUPED = False
-        joined = QUERIES["q161_basket_cooccurrence"].builder(spark, sf_dir).collect()
-    finally:
-        REG._Q161_GROUPED = old_flag
-    assert list(map(tuple, grouped)) == list(map(tuple, joined)) and grouped
+    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+    from check_correctness import duck_connection, rows_canon
+
+    spec = QUERIES["q161_basket_cooccurrence"]
+    sdf = spec.builder(spark, sf_dir)
+    grouped = [tuple(r) for r in sdf.collect()]
+    res = duck_connection(sf_dir).execute(spec.oracle)
+    joined = res.fetchall()
+    assert [d[0] for d in res.description] == sdf.columns
+    assert rows_canon(sdf.columns, grouped) == rows_canon(sdf.columns, joined) and grouped
+    # ORDER BY n DESC, p1, p2 is a total order: the row order must match too
+    assert grouped == joined
 
 
 def test_parquet_sink_roundtrip(spark, sf_dir):

@@ -172,35 +172,35 @@ def test_adaptive_fetcher_climbs_and_beats_serial():
     assert sum(hist.values()) == len(keys)
 
 
-def test_stage_read_adaptive_ab(spark, s3cfg):
-    """End-to-end A/B through Spark reader tasks: same stage, same
-    simulated 50 ms GET latency (32 objects per reader task, so the
-    latency signal — seconds — dwarfs Spark job overhead) — the
-    adaptive reader must return identical content and beat the serial
-    reader's wall clock."""
+def test_stage_read_adaptive_many_objects_per_task(spark, s3cfg):
+    """End-to-end through Spark reader tasks: 32 objects per reader task,
+    so each task's fetcher runs several probe windows (and changes its
+    thread count between them) — the content must come back exactly.
+    The fetcher's speed-up over a serial loop is
+    test_adaptive_fetcher_climbs_and_beats_serial."""
     df = _frame(spark, n=8_000, parts=64)
     S3X.stage_write(df, "stages/ab", s3cfg)
-
-    t0 = time.monotonic()
-    serial = S3X.stage_read(
-        spark, "stages/ab", s3cfg, num_tasks=2, adaptive=False,
-        simulated_latency_ms=50,
-    )
-    n_serial = serial.count()
-    t_serial = time.monotonic() - t0
-
-    t0 = time.monotonic()
-    adaptive = S3X.stage_read(
-        spark, "stages/ab", s3cfg, num_tasks=2, adaptive=True,
-        simulated_latency_ms=50,
-    )
-    n_adaptive = adaptive.count()
-    t_adaptive = time.monotonic() - t0
-
-    assert n_serial == n_adaptive == 8_000
-    assert adaptive.exceptAll(df).count() == 0
-    assert t_adaptive < t_serial, (t_adaptive, t_serial)
+    back = S3X.stage_read(spark, "stages/ab", s3cfg, num_tasks=2)
+    assert back.count() == 8_000
+    assert back.exceptAll(df).count() == 0
     S3X.remove_stage("stages/ab", s3cfg)
+
+
+def test_missing_bucket_raises_instead_of_no_manifest(spark, s3cfg):
+    """Only a missing manifest KEY means "no stage". A wrong bucket must
+    surface as the store's error, not as FileNotFoundError("no committed
+    manifest"), and remove_stage must not silently skip the manifest."""
+    import dataclasses
+
+    from botocore.exceptions import ClientError
+
+    assert S3X.read_manifest("stages/never-written", s3cfg) is None
+    wrong = dataclasses.replace(s3cfg, bucket="graft-no-such-bucket")
+    with pytest.raises(ClientError) as err:
+        S3X.stage_read(spark, "stages/any", wrong)
+    assert err.value.response["Error"]["Code"] == "NoSuchBucket"
+    with pytest.raises(ClientError):
+        S3X.remove_stage("stages/any", wrong)
 
 
 def test_bulk_delete_pages_thousand_key_batches(s3cfg):
