@@ -130,6 +130,11 @@ def vanilla_spark() -> SparkSession:
 #: ratio equally instead of whichever separate process ran at the worse
 #: moment — separate-process ratios showed a different spurious 1.6-2.3x
 #: "worst query" on every rerun; paired ratios are stable.
+#: One static conf is NOT identical: ``spark.sql.codegen.cache.maxEntries``
+#: is set by get_spark, so both sides of every pair share it, but the
+#: separate-process ``--baseline`` session (vanilla_spark) leaves it at
+#: Spark's default of 100 entries, where repeated draws may recompile
+#: generated code the engine session keeps cached.
 VANILLA_DELTA = {
     "spark.sql.shuffle.partitions": "200",  # Spark default
     "spark.sql.parquet.aggregatePushdown": "false",  # Spark default

@@ -33,10 +33,14 @@ cannot fake:
   multipart via boto3's transfer manager — exercised with an
   over-threshold stage in tests.
 - **Executor-side data plane.** Writes and reads are ``mapInArrow``
-  passes: each task serializes/parses its own partition and talks to S3
+  passes: a write task per core writes an object per input partition,
+  a reader task parses its key slice, and each task talks to S3
   itself. At 1000 executors that is 1000 concurrent S3 clients and ZERO
   driver bytes — only the per-partition manifest rows (one JSON line
   each) ever reach the driver.
+- **At most one Python task per core per op** (unless a caller asks
+  for more reader tasks): a Python worker task costs ~0.17 s of CPU to
+  start, whatever it does (README, "Benchmarking & verification").
 - **Integrity.** The manifest pins per-object SHA-256 + row count at
   write time; ``verify_stage`` re-downloads and re-hashes distributedly
   (A4/A5 parity with `exchange.py`'s content checksums).
@@ -59,9 +63,12 @@ from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
 _MANIFEST = "_manifest.json"
+#: Column that carries each row's input partition id into the write tasks.
+_PID = "__s3x_partition_id"
 
 
 @dataclass(frozen=True)
@@ -119,16 +126,29 @@ def stage_write(
     """Materialize ``df`` to the object store and PUBLISH it atomically.
 
     ``sort_within`` (same contract as ``exchange.ExchangeManager.
-    stage_write``) sorts rows inside each task's partition before upload,
+    stage_write``) sorts rows inside each input partition before upload,
     so each stage object is internally ordered — the property sorted
     merge-readers and range probes rely on.
 
-    One ``mapInArrow`` pass: each task streams its partition into an
+    One ``mapInArrow`` pass with at most ``defaultParallelism`` tasks:
+    every row is tagged with its input partition id, then the frame is
+    coalesced (never widened, never shuffled) to one task per core. A
+    coalesced task reads its parent partitions one after another, so
+    each tag forms one contiguous run, and the task streams each run into an
     in-memory parquet file, uploads it (multipart above the threshold)
     to its prefix shard, and emits ONE manifest row (key, rows, bytes,
     sha256). The driver then PUTs ``_manifest.json`` — schema, object
     list, totals — as the single atomic commit point. Returns the
-    manifest dict.
+    manifest dict. An object is flushed as soon as the next run starts,
+    so a task holds one partition in memory at a time, and a task reuses
+    one boto3 client for all its objects.
+
+    Trade-off: the object layout is the input partitioning, but an
+    uncached upstream is computed at most ``defaultParallelism`` tasks
+    wide, in static groups of partitions rather than scheduled
+    dynamically — a slow partition holds up the rest of its group. In
+    exchange the op pays the Python worker start-up cost once per core
+    instead of once per partition.
 
     Scale: data bytes never touch the driver; the driver sees
     |partitions| manifest rows. P prefix shards give the store P
@@ -136,75 +156,90 @@ def stage_write(
 
     ``fault_injection`` (test-only seam, round-10): a picklable
     ``callable(partition_id, task_attempt_number)`` invoked in-task AFTER
-    the object upload and BEFORE the manifest row is emitted — the worst
-    executor-death point (bytes uploaded, nothing committed). Raising
+    each object upload and BEFORE its manifest row is emitted — the worst
+    executor-death point (bytes uploaded, nothing committed).
+    ``partition_id`` is the input partition the object holds. Raising
     there simulates the reference's failure scenario
     (`S3ShuffleWriter.scala:10-18`): Spark retries the task, the retry
-    re-uploads the SAME key (the attempt token is per stage_write call,
+    re-uploads the SAME keys (the attempt token is per stage_write call,
     driver-side), the full-object PUT is last-writer-wins, and the
     manifest only ever records the surviving attempt — so the crashed
     attempt's bytes can never tear the stage. Proven in
     `tests/test_s3exchange.py::test_task_death_mid_write_replays_idempotently`.
     """
-    import pyarrow as pa
-
     if sort_within:
         df = df.sortWithinPartitions(*sort_within)
     schema_json = df.schema.json()
     shards = cfg.prefix_shards
     attempt = uuid.uuid4().hex[:12]
+    tagged = df.withColumn(_PID, F.spark_partition_id()).coalesce(
+        df.sparkSession.sparkContext.defaultParallelism
+    )
 
-    def write_partition(batches):
-        import pyarrow as pa2
+    def write_partitions(batches):
+        import numpy as np
+        import pyarrow as pa
         import pyarrow.parquet as pq
         from pyspark import TaskContext
 
-        pid = TaskContext.get().partitionId()
-        collected = [b for b in batches if b.num_rows > 0]
-        if not collected:
-            yield pa2.RecordBatch.from_pydict(
-                {"key": pa2.array([], pa2.string()),
-                 "rows": pa2.array([], pa2.int64()),
-                 "bytes": pa2.array([], pa2.int64()),
-                 "sha256": pa2.array([], pa2.string())}
-            )
-            return
-        table = pa2.Table.from_batches(collected)
-        sink = pa2.BufferOutputStream()
-        pq.write_table(table, sink, compression="snappy")
-        data = sink.getvalue().to_pybytes()
-        sha = hashlib.sha256(data).hexdigest()
-        shard = pid % shards
-        key = _part_key(stage, shard, pid, attempt)
-        client = cfg.client()
-        if len(data) >= cfg.multipart_threshold:
-            from boto3.s3.transfer import TransferConfig
+        client = None
 
-            client.upload_fileobj(
-                io.BytesIO(data),
-                cfg.bucket,
-                key,
-                Config=TransferConfig(
-                    multipart_threshold=cfg.multipart_threshold,
-                    multipart_chunksize=max(
-                        5 * 1024 * 1024, cfg.multipart_threshold // 2
+        def upload(pid, run):
+            nonlocal client
+            table = pa.Table.from_batches(run).drop_columns(_PID)
+            sink = pa.BufferOutputStream()
+            pq.write_table(table, sink, compression="snappy")
+            data = sink.getvalue().to_pybytes()
+            sha = hashlib.sha256(data).hexdigest()
+            key = _part_key(stage, pid % shards, pid, attempt)
+            if client is None:
+                client = cfg.client()
+            if len(data) >= cfg.multipart_threshold:
+                from boto3.s3.transfer import TransferConfig
+
+                client.upload_fileobj(
+                    io.BytesIO(data),
+                    cfg.bucket,
+                    key,
+                    Config=TransferConfig(
+                        multipart_threshold=cfg.multipart_threshold,
+                        multipart_chunksize=max(
+                            5 * 1024 * 1024, cfg.multipart_threshold // 2
+                        ),
                     ),
-                ),
+                )
+            else:
+                client.put_object(Bucket=cfg.bucket, Key=key, Body=data)
+            if fault_injection is not None:
+                fault_injection(pid, TaskContext.get().attemptNumber())
+            return pa.RecordBatch.from_pydict(
+                {"key": pa.array([key]),
+                 "rows": pa.array([table.num_rows], pa.int64()),
+                 "bytes": pa.array([len(data)], pa.int64()),
+                 "sha256": pa.array([sha])}
             )
-        else:
-            client.put_object(Bucket=cfg.bucket, Key=key, Body=data)
-        if fault_injection is not None:
-            fault_injection(pid, TaskContext.get().attemptNumber())
-        yield pa2.RecordBatch.from_pydict(
-            {"key": pa2.array([key]),
-             "rows": pa2.array([table.num_rows], pa2.int64()),
-             "bytes": pa2.array([len(data)], pa2.int64()),
-             "sha256": pa2.array([sha])}
-        )
+
+        run_pid, run = None, []
+        for b in batches:
+            if b.num_rows == 0:
+                continue
+            # a batch may straddle input partitions: split it at each
+            # change of tag and flush the finished run before the next
+            pids = b.column(_PID).to_numpy()
+            cuts = [0, *(np.flatnonzero(pids[1:] != pids[:-1]) + 1), len(pids)]
+            for lo, hi in zip(cuts, cuts[1:]):
+                pid = int(pids[lo])
+                if pid != run_pid:
+                    if run:
+                        yield upload(run_pid, run)
+                    run_pid, run = pid, []
+                run.append(b.slice(lo, hi - lo))
+        if run:
+            yield upload(run_pid, run)
 
     t0 = time.monotonic()
-    rows = df.mapInArrow(
-        write_partition, "key string, rows long, bytes long, sha256 string"
+    rows = tagged.mapInArrow(
+        write_partitions, "key string, rows long, bytes long, sha256 string"
     ).collect()
     objects = [
         {"key": r["key"], "rows": r["rows"], "bytes": r["bytes"],
@@ -310,6 +345,19 @@ class AdaptiveFetcher:
         return out
 
 
+def _key_slices(spark: SparkSession, keys: list[str], n: int) -> DataFrame:
+    """``keys`` dealt round-robin into ``n`` rows of one ``keys
+    array<string>`` column, one row per reader partition. The frame is
+    built from a ``pyarrow.Table``, which the JVM ingests by itself; a
+    Python list would become a ``parallelize`` job that runs one Python
+    worker task per default-parallelism slice just to decode the key
+    lists."""
+    import pyarrow as pa
+
+    slices = pa.array([keys[i::n] for i in range(n)], pa.list_(pa.string()))
+    return spark.createDataFrame(pa.table({"keys": slices})).repartition(n)
+
+
 def stage_read(
     spark: SparkSession,
     stage: str,
@@ -336,9 +384,7 @@ def stage_read(
     schema = StructType.fromJson(json.loads(manifest["schema"]))
     keys = [o["key"] for o in manifest["objects"]]
     n = num_tasks or min(len(keys), spark.sparkContext.defaultParallelism)
-    n = max(n, 1)
-    assignments = [(keys[i::n],) for i in range(n)] or [([],)]
-    kdf = spark.createDataFrame(assignments, "keys array<string>").repartition(n)
+    kdf = _key_slices(spark, keys, max(n, 1))
 
     def read_partition(batches):
         import pyarrow as pa
@@ -378,9 +424,7 @@ def verify_stage(spark: SparkSession, stage: str, cfg: S3Config) -> bool:
     want = {o["key"]: (o["sha256"], o["rows"]) for o in manifest["objects"]}
     keys = sorted(want)
     n = max(min(len(keys), spark.sparkContext.defaultParallelism), 1)
-    kdf = spark.createDataFrame(
-        [(keys[i::n],) for i in range(n)], "keys array<string>"
-    ).repartition(n)
+    kdf = _key_slices(spark, keys, n)
 
     def check(batches):
         import pyarrow as pa
@@ -457,7 +501,7 @@ class S3ExchangeManager:
         """Tear down every stage of this app across all prefix shards —
         the applicationRemoved sweep. One paginated LIST per shard prefix
         (`x{NN}/{app_id}/`) feeding bulk DeleteObjects. Returns keys
-        deleted."""
+        deleted; raises if the store reports a key it did not delete."""
         client = self.cfg.client()
         deleted = 0
         paginator = client.get_paginator("list_objects_v2")
@@ -469,16 +513,30 @@ class S3ExchangeManager:
             ):
                 keys.extend(o["Key"] for o in page.get("Contents", []))
             for i in range(0, len(keys), 1000):
-                batch = keys[i: i + 1000]
-                client.delete_objects(
-                    Bucket=self.cfg.bucket,
-                    Delete={
-                        "Objects": [{"Key": k} for k in batch],
-                        "Quiet": True,
-                    },
+                deleted += _delete_objects(
+                    client, self.cfg.bucket, keys[i: i + 1000]
                 )
-                deleted += len(batch)
         return deleted
+
+
+def _delete_objects(client, bucket: str, keys: list[str]) -> int:
+    """One bulk ``DeleteObjects`` request for up to 1000 keys. Quiet mode
+    answers with the failures only: a key listed under ``Errors`` is
+    still in the store, so raise instead of counting it as deleted.
+    Returns the number of keys deleted."""
+    resp = client.delete_objects(
+        Bucket=bucket,
+        Delete={"Objects": [{"Key": k} for k in keys], "Quiet": True},
+    )
+    errors = resp.get("Errors") or []
+    if errors:
+        first = errors[0]
+        raise RuntimeError(
+            f"DeleteObjects on {bucket} failed for {len(errors)} of "
+            f"{len(keys)} keys; first: {first.get('Key')} "
+            f"({first.get('Code')}: {first.get('Message')})"
+        )
+    return len(keys)
 
 
 def remove_stage(stage: str, cfg: S3Config, delete_threads: int = 4) -> int:
@@ -487,7 +545,8 @@ def remove_stage(stage: str, cfg: S3Config, delete_threads: int = 4) -> int:
     a thread pool — removeShuffle parity
     (`S3ShuffleDispatcher.scala:104-118`). Unmanifested orphans under
     the stage prefix (crashed writers) are swept by a paginated LIST.
-    Returns the number of keys deleted."""
+    Returns the number of keys deleted; raises if the store reports a key
+    it did not delete."""
     client = cfg.client()
     keys = set()
     manifest = read_manifest(stage, cfg)
@@ -501,12 +560,7 @@ def remove_stage(stage: str, cfg: S3Config, delete_threads: int = 4) -> int:
     batches = [all_keys[i: i + 1000] for i in range(0, len(all_keys), 1000)]
 
     def delete_batch(batch):
-        client_local = cfg.client()
-        client_local.delete_objects(
-            Bucket=cfg.bucket,
-            Delete={"Objects": [{"Key": k} for k in batch], "Quiet": True},
-        )
-        return len(batch)
+        return _delete_objects(cfg.client(), cfg.bucket, batch)
 
     if not batches:
         return 0

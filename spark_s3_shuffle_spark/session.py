@@ -159,6 +159,16 @@ def get_spark(
         # Cost is listener-memory only (~KB/stage).
         .config("spark.ui.retainedStages", "40000")
         .config("spark.ui.retainedJobs", "40000")
+        # Generated-code cache (static, JVM-wide LRU of compiled Janino
+        # classes). The llm_pipeline workload's six queries alone compile
+        # 209 distinct classes, so at Spark's default of 100 entries every
+        # repeat of a query recompiles what the LRU just evicted (125-151
+        # compilations per pass, CodegenMetrics.METRIC_COMPILATION_TIME);
+        # with room for the working set a repeat compiles nothing. 1000
+        # gives ~5x headroom over that set, for sessions that mix more
+        # queries. It is a ceiling, not a reservation: an entry exists only
+        # for code that was actually compiled.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
     for k, v in RUNTIME_CONFS.items():
         builder = builder.config(k, v)

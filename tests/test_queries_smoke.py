@@ -74,3 +74,30 @@ def test_registry_contract_pins_rows_only_set():
     # guard: every oracle SELECT list mentions AS or bare column names —
     # enforced implicitly by the sweeps; here we pin total counts)
     assert len(QUERIES) >= 192
+
+
+#: The queries of the benchmark's llm_pipeline workload (perfbench/workloads.py).
+LLM_PIPELINE_QUERIES = (
+    "q42_minhash_dedup", "q137_pagerank_trade_graph", "q93_duplicated_spans",
+    "q40_lang_id", "q319_jpeg_decode", "q34_cosine_topk",
+)
+
+
+def test_codegen_cache_holds_llm_pipeline_working_set(spark, sf_dir):
+    """spark.sql.codegen.cache.maxEntries (session.get_spark) must hold the
+    generated classes of the llm_pipeline queries: a second round of the
+    same six queries in the same session compiles nothing. At Spark's
+    default of 100 entries the LRU evicts them before they are reused."""
+    compilations = (
+        spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+        .METRIC_COMPILATION_TIME()
+    )
+
+    def run_round():
+        for name in LLM_PIPELINE_QUERIES:
+            QUERIES[name].builder(spark, sf_dir).collect()
+
+    run_round()
+    before = compilations.getCount()
+    run_round()
+    assert compilations.getCount() - before == 0

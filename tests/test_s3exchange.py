@@ -217,6 +217,140 @@ def test_bulk_delete_pages_thousand_key_batches(s3cfg):
     assert listed["KeyCount"] == 0
 
 
+def test_stage_write_runs_one_task_per_core(spark, s3cfg):
+    """A frame with twice as many partitions as cores is written by at
+    most one task per core (8 partitions on local[4]: <= 4 tasks), and
+    still as one object per input partition on its own prefix shard."""
+    cores = spark.sparkContext.defaultParallelism
+    parts = 2 * cores
+    df = spark.range(0, 8_000, 1, numPartitions=parts).select(
+        F.col("id").alias("k"),
+        F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+    )
+    sc = spark.sparkContext
+    sc.setJobGroup("s3x-write-per-core", "s3x-write-per-core")
+    try:
+        man = S3X.stage_write(df, "stages/percore", s3cfg)
+    finally:
+        sc._jsc.clearJobGroup()
+    tracker = sc.statusTracker()
+    tasks = [
+        tracker.getStageInfo(sid).numTasks
+        for jid in tracker.getJobIdsForGroup("s3x-write-per-core")
+        for sid in tracker.getJobInfo(jid).stageIds
+    ]
+    assert tasks and max(tasks) <= cores, (tasks, cores)
+    assert len(man["objects"]) == parts and man["total_rows"] == 8_000
+    pids = sorted(int(o["key"].rsplit("part-", 1)[1][:5]) for o in man["objects"])
+    assert pids == list(range(parts))
+    prefixes = {o["key"].split("/")[2] for o in man["objects"]}
+    assert len(prefixes) == min(parts, s3cfg.prefix_shards)
+    S3X.remove_stage("stages/percore", s3cfg)
+
+
+def test_write_objects_match_source_partitions_across_batch_seams(spark, s3cfg):
+    """With 7-row Arrow batches and uneven partitions (one empty), the
+    batches a write task receives straddle input partitions. Every object
+    must still hold exactly its source partition's rows, in sort_within
+    order, without the partition-id tag column; the empty partition
+    writes no object."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    sizes = [0, 3, 29, 7, 41, 1, 16, 22]
+    keep = F.element_at(
+        F.array(*map(F.lit, sizes)), (F.col("id") / 100).cast("int") + 1
+    )
+    df = (
+        spark.range(0, 800, 1, numPartitions=8)
+        .where(F.col("id") % 100 < keep)
+        .select(
+            F.col("id").alias("k"),
+            F.sha2(F.col("id").cast("string"), 256).alias("payload"),
+        )
+    )
+    want = {}
+    for r in df.select(F.spark_partition_id().alias("pid"), "*").collect():
+        want.setdefault(r["pid"], []).append((r["k"], r["payload"]))
+    assert sorted(len(v) for v in want.values()) == sorted(n for n in sizes if n)
+    want = {pid: sorted(rows, key=lambda kp: kp[1]) for pid, rows in want.items()}
+
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prior = spark.conf.get(conf)
+    spark.conf.set(conf, "7")
+    try:
+        man = S3X.stage_write(df, "stages/seam", s3cfg, sort_within=["payload"])
+    finally:
+        spark.conf.set(conf, prior)
+
+    client = s3cfg.client()
+    got = {}
+    for o in man["objects"]:
+        body = client.get_object(Bucket=s3cfg.bucket, Key=o["key"])["Body"].read()
+        table = pq.read_table(pa.BufferReader(body))
+        assert table.column_names == ["k", "payload"]
+        assert o["rows"] == table.num_rows
+        pid = int(o["key"].rsplit("part-", 1)[1][:5])
+        got[pid] = list(zip(table.column("k").to_pylist(),
+                            table.column("payload").to_pylist()))
+    assert got == want
+    S3X.remove_stage("stages/seam", s3cfg)
+
+
+def test_key_slices_are_ingested_without_python_tasks(spark):
+    """The reader/verifier key-slice frame comes from an Arrow table the
+    JVM ingests itself: no PythonRDD anywhere in its lineage, and the
+    slices still deal every key out exactly once."""
+    keys = [f"k{i:02d}" for i in range(16)]
+    kdf = S3X._key_slices(spark, keys, 4)
+    lineage = kdf._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+    slices = sorted(r["keys"] for r in kdf.collect())
+    assert slices == sorted(keys[i::4] for i in range(4))
+
+
+def test_remove_raises_on_delete_objects_errors(spark, s3cfg, monkeypatch):
+    """DeleteObjects answers 200 even when it could not delete some keys
+    and lists them under ``Errors``. remove_stage and remove_all must
+    raise instead of counting those keys as deleted."""
+    real_client = S3X.S3Config.client
+
+    class RefusesFirstKey:
+        def __init__(self, inner):
+            self._inner = inner
+
+        def __getattr__(self, name):
+            return getattr(self._inner, name)
+
+        def delete_objects(self, Bucket, Delete):
+            first, *rest = Delete["Objects"]
+            if rest:
+                self._inner.delete_objects(
+                    Bucket=Bucket, Delete={"Objects": rest, "Quiet": True}
+                )
+            return {"Errors": [{"Key": first["Key"], "Code": "AccessDenied",
+                                "Message": "Access Denied"}]}
+
+    client = s3cfg.client()
+    mgr = S3X.S3ExchangeManager(spark, s3cfg, app_id="delerr")
+    for i in range(3):
+        client.put_object(Bucket=s3cfg.bucket, Key=f"stages/delerr/p00/o{i}", Body=b"z")
+        client.put_object(
+            Bucket=s3cfg.bucket, Key=f"{mgr.stage_key('s')}/p00/o{i}", Body=b"z"
+        )
+
+    monkeypatch.setattr(S3X.S3Config, "client", lambda cfg: RefusesFirstKey(real_client(cfg)))
+    with pytest.raises(RuntimeError, match="AccessDenied"):
+        S3X.remove_stage("stages/delerr", s3cfg)
+    with pytest.raises(RuntimeError, match="AccessDenied"):
+        mgr.remove_all()
+    monkeypatch.undo()
+
+    # the refused keys are really still there, and a working client clears them
+    assert S3X.remove_stage("stages/delerr", s3cfg) == 1
+    assert mgr.remove_all() == 1
+
+
 # ---------------------------------------------------------------------------
 # Backend parametrization: the SAME protocol body against the filesystem
 # exchange and the S3 exchange — the reference's "file:// and object-store
