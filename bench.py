@@ -44,7 +44,7 @@ from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 
 from spark_s3_shuffle_spark.queries.registry import QUERIES, prepare_map
-from spark_s3_shuffle_spark.session import get_spark
+from spark_s3_shuffle_spark.session import default_parallelism, engine_sql_confs, get_spark
 from spark_s3_shuffle_spark.sources.catalog import load_table
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
@@ -109,10 +109,9 @@ def vanilla_spark() -> SparkSession:
     shuffle partitions; no engine conf. (The nanos/UTC runtime confs are
     applied by load_table — required to *read* the fixtures at all, and the
     protocol pins AQE on anyway.)"""
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
     return (
         SparkSession.builder.appName("vanilla-baseline")
-        .master(f"local[{cpus}]")
+        .master(f"local[{default_parallelism()}]")
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
@@ -146,19 +145,7 @@ VANILLA_DELTA = {
 
 
 def engine_delta() -> dict[str, str]:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    parts = os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", str(max(cpus, 32)))
-    return {
-        "spark.sql.shuffle.partitions": parts,
-        "spark.sql.parquet.aggregatePushdown": "true",
-        # round-10 engine profile (see session.py): 32/64 MiB broadcast
-        # thresholds + generous AQE initial partition count
-        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
-        "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
-        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(
-            8 * max(cpus, int(parts))
-        ),
-    }
+    return engine_sql_confs()
 
 
 #: Sub-second stabilization (round 10): a paired ratio over a query whose

@@ -39,6 +39,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from spark_s3_shuffle_spark.plans.inspect import group_stages, job_group
+
 
 @dataclass
 class ExchangeStats:
@@ -83,7 +85,7 @@ class ExchangeManager:
     root: str
     prefixes: int = 10
     app_id: str = ""
-    stats: dict[str, ExchangeStats] = field(default_factory=dict)
+    stats: dict[str, ExchangeStats] = field(default_factory=dict, init=False)
 
     def __post_init__(self) -> None:
         if not self.app_id:
@@ -91,12 +93,10 @@ class ExchangeManager:
 
     # -- path layout (plugin: ``{rootDir}/{mapId % prefixes}/{appId}/{shuffleId}``)
     def stage_path(self, stage: str) -> str:
-        # crc32, NOT builtin hash(): Python salts str hashes per process
-        # (PYTHONHASHSEED), so hash(stage) would send a restarted driver to a
-        # different prefix than the one the stage was written under —
-        # breaking exactly the cross-process re-read the exchange exists for.
-        shard = zlib.crc32(stage.encode("utf-8")) % self.prefixes
-        return os.path.join(self.root, f"p{shard}", self.app_id, stage)
+        return os.path.join(self._app_dir(shard_of(stage, self.prefixes)), stage)
+
+    def _app_dir(self, shard: int) -> str:
+        return os.path.join(self.root, f"p{shard}", self.app_id)
 
     # -- write leg: repartition on keys + parquet write (A2 analogue)
     def stage_write(
@@ -141,56 +141,25 @@ class ExchangeManager:
         self.stats[stage] = st
         return st
 
-    def stage_read(self, stage: str, meter: bool = True) -> DataFrame:
+    def stage_read(self, stage: str) -> DataFrame:
         """Read an exchange back (B-side of the barrier). Parquet footers
         give per-file stats, so downstream filters still prune.
 
-        ``meter`` records the read on the stage's ExchangeStats (read-side
-        A15 parity: bytes at rest + listing latency; per-task stream timing
-        belongs to the Spark UI / task metrics, which local mode exposes via
-        the status tracker)."""
+        The read is recorded on the stage's ExchangeStats (read-side A15
+        parity: bytes at rest + listing latency; per-task input metrics
+        come from :meth:`metered_read`)."""
         path = self.stage_path(stage)
         t0 = time.monotonic()
         df = self.spark.read.parquet(path)
-        if meter:
-            st = self.stats.get(stage)
-            if st is None:
-                st = ExchangeStats(stage, path, 0)
-                self.stats[stage] = st
-            bytes_at_rest, _ = self._du(path)
-            st.bytes_read += bytes_at_rest
-            st.read_secs += time.monotonic() - t0
-            st.num_reads += 1
+        st = self.stats.get(stage)
+        if st is None:
+            st = ExchangeStats(stage, path, 0)
+            self.stats[stage] = st
+        bytes_at_rest, _ = self._du(path)
+        st.bytes_read += bytes_at_rest
+        st.read_secs += time.monotonic() - t0
+        st.num_reads += 1
         return df
-
-    # -- task-level read metering (A15 read side) --------------------------
-    def _stage_list(self):
-        """All stages from the driver's AppStatusStore — the store Spark's
-        own AppStatusListener populates from per-task metric updates."""
-        sc = self.spark.sparkContext
-        jvm = sc._jvm
-        store = sc._jsc.sc().statusStore()
-        return store.stageList(
-            jvm.java.util.ArrayList(), False, False,
-            sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-        )
-
-    def _stage_input_metrics(self, completed_only: bool = False) -> dict[int, tuple[int, int, int]]:
-        """stageId -> (inputBytes, inputRecords, executorRunTimeMillis).
-
-        ``completed_only`` keeps only stages with status COMPLETE — a stage
-        still RUNNING reports partial task metrics that would be harvested
-        once and never reconciled with its final values."""
-        stages = self._stage_list()
-        out: dict[int, tuple[int, int, int]] = {}
-        for i in range(stages.size()):
-            s = stages.apply(i)
-            if completed_only and str(s.status()) != "COMPLETE":
-                continue
-            out[int(s.stageId())] = (
-                int(s.inputBytes()), int(s.inputRecords()), int(s.executorRunTime()),
-            )
-        return out
 
     @contextmanager
     def metered_read(self, stage: str):
@@ -205,23 +174,22 @@ class ExchangeManager:
             with mgr.metered_read("stage") as df:
                 df.agg(...).collect()      # any action(s)
 
-        On exit, input bytes/records and executor run time of every stage
-        that completed inside the window are added to the stage's
-        ExchangeStats (task_input_bytes / task_input_records /
-        task_read_millis). Only stages with status COMPLETE at window exit
-        are harvested — a RUNNING stage's partial counts would be added once
-        and never reconciled. The window attributes ALL new completed stages
-        to this read — meter one exchange read at a time per driver."""
-        before = set(self._stage_input_metrics())
-        df = self.stage_read(stage)
-        yield df
+        The window runs under a job group unique to it
+        (``plans.inspect.job_group``). On exit, input bytes/records and
+        executor run time of every completed stage of that group's jobs
+        are added to the stage's ExchangeStats (task_input_bytes /
+        task_input_records / task_read_millis). Jobs that other threads
+        run meanwhile are outside the group and are not counted."""
+        tag = f"metered-read-{uuid.uuid4().hex}"
+        with job_group(self.spark, tag):
+            yield self.stage_read(stage)
         st = self.stats[stage]
-        for sid, (ib, ir, rt) in self._stage_input_metrics(completed_only=True).items():
-            if sid in before:
+        for s in group_stages(self.spark, tag)[0]:
+            if str(s.status()) != "COMPLETE":
                 continue
-            st.task_input_bytes += ib
-            st.task_input_records += ir
-            st.task_read_millis += rt
+            st.task_input_bytes += int(s.inputBytes())
+            st.task_input_records += int(s.inputRecords())
+            st.task_read_millis += int(s.executorRunTime())
             st.metered_stages += 1
 
     def tune_read_partition_bytes(
@@ -292,13 +260,12 @@ class ExchangeManager:
         scratch semantics.
         """
         path = self.stage_path(stage)
-        table = f"exchange_{stage}".replace("-", "_").replace("/", "_")
         t0 = time.monotonic()
         writer = df.write.mode("overwrite").format("parquet").option("path", path)
         writer = writer.bucketBy(num_buckets, *keys)
         if sort_within:
             writer = writer.sortBy(*sort_within)
-        writer.saveAsTable(table)
+        writer.saveAsTable(_table_name(stage))
         elapsed = time.monotonic() - t0
         st = ExchangeStats(stage, path, num_buckets, elapsed)
         st.bytes_written, st.num_files = self._du(path)
@@ -308,8 +275,7 @@ class ExchangeManager:
     def stage_read_bucketed(self, stage: str) -> DataFrame:
         """Read a bucketed exchange via the catalog (keeps the bucket spec —
         a plain ``spark.read.parquet`` of the same files would discard it)."""
-        table = f"exchange_{stage}".replace("-", "_").replace("/", "_")
-        return self.spark.table(table)
+        return self.spark.table(_table_name(stage))
 
     # -- Hadoop FS plumbing ------------------------------------------------
     def _du(self, path: str) -> tuple[int, int]:
@@ -331,24 +297,45 @@ class ExchangeManager:
 
     # -- cleanup (A13 analogue: per-stage and whole-app delete) ------------
     def remove_stage(self, stage: str) -> bool:
-        fs, hpath, _ = _fs(self.spark, self.stage_path(stage))
-        ok = bool(fs.delete(hpath, True)) if fs.exists(hpath) else False
+        """Delete the stage's files and drop its bucketed table, if any.
+        Returns False when the stage does not exist; raises when the
+        filesystem refuses the delete."""
+        self._drop_table(stage)
+        removed = _delete_tree(self.spark, self.stage_path(stage))
         self.stats.pop(stage, None)
-        return ok
+        return removed
 
     def remove_all(self) -> int:
         """Delete this app's scratch across all prefixes (plugin's
-        ``removeRoot``). One delete call per prefix tree — on S3 the FS
-        client fans these out; prefix sharding keeps each tree small."""
-        removed = 0
-        for shard in range(self.prefixes):
-            p = os.path.join(self.root, f"p{shard}", self.app_id)
-            fs, hpath, _ = _fs(self.spark, p)
-            if fs.exists(hpath):
-                fs.delete(hpath, True)
-                removed += 1
+        ``removeRoot``) and drop the bucketed tables of the stages this
+        manager holds. One delete call per prefix tree — on S3 the FS
+        client fans these out; prefix sharding keeps each tree small.
+        Returns the number of prefix trees deleted."""
+        for stage in self.stats:
+            self._drop_table(stage)
+        removed = sum(
+            _delete_tree(self.spark, self._app_dir(shard)) for shard in range(self.prefixes)
+        )
         self.stats.clear()
         return removed
+
+    def _drop_table(self, stage: str) -> None:
+        self.spark.sql(f"DROP TABLE IF EXISTS `{_table_name(stage)}`")
+
+
+def shard_of(stage: str, prefixes: int) -> int:
+    """The prefix shard of ``stage`` among ``prefixes``, for both exchange
+    backends. A checksum of the name, NOT builtin hash(): Python salts str
+    hashes per process (PYTHONHASHSEED), so hash(stage) would send a
+    restarted driver to a different prefix than the one the stage was
+    written under — breaking exactly the cross-process re-read the
+    exchange exists for."""
+    return zlib.crc32(stage.encode("utf-8")) % prefixes
+
+
+def _table_name(stage: str) -> str:
+    """Session-catalog table of a bucketed stage."""
+    return f"exchange_{stage}".replace("-", "_").replace("/", "_")
 
 
 # -- Hadoop FS and content-integrity helpers (also used by maintenance.py) ---
@@ -358,6 +345,18 @@ def _fs(spark: SparkSession, path: str):
     jvm = spark._jvm
     hpath = jvm.org.apache.hadoop.fs.Path(path)
     return hpath.getFileSystem(spark._jsc.hadoopConfiguration()), hpath, jvm
+
+
+def _delete_tree(spark: SparkSession, path: str) -> bool:
+    """Recursively delete ``path``. False when it does not exist. Hadoop's
+    ``delete`` reports a refusal by returning False rather than raising,
+    so a refused delete of an existing path raises here."""
+    fs, hpath, _ = _fs(spark, path)
+    if not fs.exists(hpath):
+        return False
+    if not fs.delete(hpath, True):
+        raise RuntimeError(f"filesystem refused to delete {path}")
+    return True
 
 
 def _write_json(spark: SparkSession, path: str, doc: dict) -> None:

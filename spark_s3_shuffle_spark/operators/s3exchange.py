@@ -26,9 +26,13 @@ cannot fake:
   ``{stage}/p{shard:02d}/`` prefixes (the reference's
   ``folderPrefixes``, `S3ShuffleDispatcher.scala:61,142-143`) so S3's
   per-prefix request-rate limits see P independent key ranges.
-- **Bulk parallel delete.** Cleanup pages the manifest keys through
-  ``DeleteObjects`` (1000/batch) from a thread pool
-  (`S3ShuffleDispatcher.scala:104-118` removeShuffle parity).
+- **Bulk parallel delete.** Cleanup is one prefix sweep: a paginated
+  LIST of the stage (or app shard) prefix feeds ``DeleteObjects``
+  (1000/batch) from a pool of 4 threads
+  (`S3ShuffleDispatcher.scala:104-118` removeShuffle parity). The
+  manifest is not read: it and every data key sit under the stage
+  prefix, and S3 LIST is strongly consistent, so the LIST returns every
+  key the manifest names, plus crashed writers' orphans.
 - **Multipart upload.** Parts above the threshold stream through S3
   multipart via boto3's transfer manager — exercised with an
   over-threshold stage in tests.
@@ -65,6 +69,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
+
+from spark_s3_shuffle_spark.operators.exchange import shard_of
 
 _MANIFEST = "_manifest.json"
 #: Column that carries each row's input partition id into the write tasks.
@@ -290,24 +296,28 @@ class AdaptiveFetcher:
     pinning a static readahead. Records per-GET latencies so callers can
     export the histogram the tuner consumed."""
 
-    def __init__(self, fetch_one, min_threads=1, max_threads=16, window=6):
+    MIN_THREADS = 1
+    MAX_THREADS = 16
+    #: keys fetched per probe window, between two concurrency steps
+    WINDOW = 6
+    #: upper bounds (ms) of the exported latency histogram's buckets
+    BUCKETS_MS = (5, 10, 25, 50, 100, 250, 1000)
+
+    def __init__(self, fetch_one):
         self.fetch_one = fetch_one
-        self.min_threads = min_threads
-        self.max_threads = max_threads
-        self.window = window
         self.latencies: list[float] = []
         self.thread_trace: list[int] = []
 
     def fetch_all(self, keys: list[str]):
         """Yield (key, payload) for every key; order not guaranteed
         within a probe window."""
-        threads = self.min_threads
+        threads = self.MIN_THREADS
         prev_rate = 0.0
         direction = 1
         i = 0
         while i < len(keys):
-            chunk = keys[i: i + self.window]
-            i += self.window
+            chunk = keys[i: i + self.WINDOW]
+            i += self.WINDOW
             self.thread_trace.append(threads)
             t0 = time.monotonic()
             with ThreadPoolExecutor(max_workers=threads) as pool:
@@ -325,18 +335,18 @@ class AdaptiveFetcher:
                 direction = -direction  # last step hurt: reverse
             prev_rate = rate
             threads = min(
-                self.max_threads, max(self.min_threads, threads + direction)
+                self.MAX_THREADS, max(self.MIN_THREADS, threads + direction)
             )
 
-    def latency_histogram(self, buckets=(5, 10, 25, 50, 100, 250, 1000)):
+    def latency_histogram(self):
         """Observed GET latency histogram in ms — the signal the
         hill-climber consumed, exported for operators (the reference
         logs the same from its prefetch iterator)."""
-        out = {f"<={b}ms": 0 for b in buckets}
+        out = {f"<={b}ms": 0 for b in self.BUCKETS_MS}
         out["inf"] = 0
         for lat in self.latencies:
             ms = lat * 1000
-            for b in buckets:
+            for b in self.BUCKETS_MS:
                 if ms <= b:
                     out[f"<={b}ms"] += 1
                     break
@@ -356,6 +366,26 @@ def _key_slices(spark: SparkSession, keys: list[str], n: int) -> DataFrame:
 
     slices = pa.array([keys[i::n] for i in range(n)], pa.list_(pa.string()))
     return spark.createDataFrame(pa.table({"keys": slices})).repartition(n)
+
+
+def _manifest_slices(
+    spark: SparkSession, stage: str, cfg: S3Config, num_tasks: int | None = None
+) -> tuple[dict, DataFrame] | None:
+    """(manifest, key-slice frame) of a committed stage, or None when it
+    has no manifest. The manifest's keys go to ``num_tasks`` reader rows,
+    by default one per object up to ``defaultParallelism``; each task
+    gets its keys back with :func:`_task_keys`."""
+    manifest = read_manifest(stage, cfg)
+    if manifest is None:
+        return None
+    keys = [o["key"] for o in manifest["objects"]]
+    n = num_tasks or min(len(keys), spark.sparkContext.defaultParallelism)
+    return manifest, _key_slices(spark, keys, max(n, 1))
+
+
+def _task_keys(batches) -> list[str]:
+    """In a task over a :func:`_key_slices` frame: the keys of its rows."""
+    return [k for b in batches for klist in b.column("keys").to_pylist() for k in klist or []]
 
 
 def stage_read(
@@ -378,22 +408,17 @@ def stage_read(
     so Spark's task retry re-fetches the slice and the query result is
     byte-identical (the failed attempt's partial output is discarded by
     the scheduler)."""
-    manifest = read_manifest(stage, cfg)
-    if manifest is None:
+    front = _manifest_slices(spark, stage, cfg, num_tasks)
+    if front is None:
         raise FileNotFoundError(f"stage {stage} has no committed manifest")
+    manifest, kdf = front
     schema = StructType.fromJson(json.loads(manifest["schema"]))
-    keys = [o["key"] for o in manifest["objects"]]
-    n = num_tasks or min(len(keys), spark.sparkContext.defaultParallelism)
-    kdf = _key_slices(spark, keys, max(n, 1))
 
     def read_partition(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        my_keys = []
-        for b in batches:
-            for klist in b.column("keys").to_pylist():
-                my_keys.extend(klist or [])
+        my_keys = _task_keys(batches)
         if not my_keys:
             return
         client = cfg.client()
@@ -418,36 +443,30 @@ def verify_stage(spark: SparkSession, stage: str, cfg: S3Config) -> bool:
     and compared to the SHA-256 + row count pinned at write time.
     False on any missing/corrupt/short object or a missing manifest —
     callers decide refetch/rebuild."""
-    manifest = read_manifest(stage, cfg)
-    if manifest is None:
+    front = _manifest_slices(spark, stage, cfg)
+    if front is None:
         return False
+    manifest, kdf = front
     want = {o["key"]: (o["sha256"], o["rows"]) for o in manifest["objects"]}
-    keys = sorted(want)
-    n = max(min(len(keys), spark.sparkContext.defaultParallelism), 1)
-    kdf = _key_slices(spark, keys, n)
 
     def check(batches):
         import pyarrow as pa
         import pyarrow.parquet as pq
 
         client = cfg.client()
-        for b in batches:
-            for klist in b.column("keys").to_pylist():
-                for key in klist or []:
-                    try:
-                        body = client.get_object(
-                            Bucket=cfg.bucket, Key=key
-                        )["Body"].read()
-                        sha = hashlib.sha256(body).hexdigest()
-                        rows = pq.read_table(pa.BufferReader(body)).num_rows
-                        ok = True
-                    except Exception:
-                        sha, rows, ok = "", -1, False
-                    yield pa.RecordBatch.from_pydict(
-                        {"key": pa.array([key]), "sha256": pa.array([sha]),
-                         "rows": pa.array([rows], pa.int64()),
-                         "ok": pa.array([ok])}
-                    )
+        for key in _task_keys(batches):
+            try:
+                body = client.get_object(Bucket=cfg.bucket, Key=key)["Body"].read()
+                sha = hashlib.sha256(body).hexdigest()
+                rows = pq.read_table(pa.BufferReader(body)).num_rows
+                ok = True
+            except Exception:
+                sha, rows, ok = "", -1, False
+            yield pa.RecordBatch.from_pydict(
+                {"key": pa.array([key]), "sha256": pa.array([sha]),
+                 "rows": pa.array([rows], pa.int64()),
+                 "ok": pa.array([ok])}
+            )
 
     got = kdf.mapInArrow(
         check, "key string, sha256 string, rows long, ok boolean"
@@ -467,19 +486,18 @@ class S3ExchangeManager:
     swapping the manager, not their code — the reference's promise that
     ``file://`` and object-store roots run the same pipeline
     (`README.md:38-40`). Stage paths are prefix-sharded per stage name
-    (crc32, process-stable) under ``{app_id}/{stage}``."""
+    (``exchange.shard_of``, process-stable) under ``{app_id}/{stage}``."""
 
     def __init__(self, spark: SparkSession, cfg: S3Config, app_id: str = "app"):
-        import zlib
-
         self.spark = spark
         self.cfg = cfg
         self.app_id = app_id
-        self._crc = zlib.crc32
 
     def stage_key(self, stage: str) -> str:
-        shard = self._crc(stage.encode("utf-8")) % self.cfg.prefix_shards
-        return f"x{shard:02d}/{self.app_id}/{stage}"
+        return self._app_prefix(shard_of(stage, self.cfg.prefix_shards)) + stage
+
+    def _app_prefix(self, shard: int) -> str:
+        return f"x{shard:02d}/{self.app_id}/"
 
     def stage_write(
         self, df: DataFrame, stage: str, sort_within: list[str] | None = None
@@ -499,24 +517,14 @@ class S3ExchangeManager:
 
     def remove_all(self) -> int:
         """Tear down every stage of this app across all prefix shards —
-        the applicationRemoved sweep. One paginated LIST per shard prefix
-        (`x{NN}/{app_id}/`) feeding bulk DeleteObjects. Returns keys
-        deleted; raises if the store reports a key it did not delete."""
+        the applicationRemoved sweep. One prefix sweep per shard prefix
+        (`x{NN}/{app_id}/`). Returns keys deleted; raises if the store
+        reports a key it did not delete."""
         client = self.cfg.client()
-        deleted = 0
-        paginator = client.get_paginator("list_objects_v2")
-        for shard in range(self.cfg.prefix_shards):
-            keys = []
-            prefix = f"x{shard:02d}/{self.app_id}/"
-            for page in paginator.paginate(
-                Bucket=self.cfg.bucket, Prefix=prefix
-            ):
-                keys.extend(o["Key"] for o in page.get("Contents", []))
-            for i in range(0, len(keys), 1000):
-                deleted += _delete_objects(
-                    client, self.cfg.bucket, keys[i: i + 1000]
-                )
-        return deleted
+        return sum(
+            _sweep(client, self.cfg.bucket, self._app_prefix(shard))
+            for shard in range(self.cfg.prefix_shards)
+        )
 
 
 def _delete_objects(client, bucket: str, keys: list[str]) -> int:
@@ -539,33 +547,33 @@ def _delete_objects(client, bucket: str, keys: list[str]) -> int:
     return len(keys)
 
 
-def remove_stage(stage: str, cfg: S3Config, delete_threads: int = 4) -> int:
-    """Tear a stage down: the manifest's keys (plus the manifest itself)
-    go through bulk DeleteObjects, 1000 per request, batches issued from
-    a thread pool — removeShuffle parity
-    (`S3ShuffleDispatcher.scala:104-118`). Unmanifested orphans under
-    the stage prefix (crashed writers) are swept by a paginated LIST.
-    Returns the number of keys deleted; raises if the store reports a key
-    it did not delete."""
-    client = cfg.client()
-    keys = set()
-    manifest = read_manifest(stage, cfg)
-    if manifest:
-        keys.update(o["key"] for o in manifest["objects"])
-    paginator = client.get_paginator("list_objects_v2")
-    for page in paginator.paginate(Bucket=cfg.bucket, Prefix=f"{stage}/"):
-        for obj in page.get("Contents", []):
-            keys.add(obj["Key"])
-    all_keys = sorted(keys)
-    batches = [all_keys[i: i + 1000] for i in range(0, len(all_keys), 1000)]
-
-    def delete_batch(batch):
-        return _delete_objects(cfg.client(), cfg.bucket, batch)
-
-    if not batches:
+def _sweep(client, bucket: str, prefix: str) -> int:
+    """Delete every key under ``prefix``: a paginated LIST, then bulk
+    ``DeleteObjects`` of 1000 keys per request, issued from a pool of 4
+    threads sharing ``client`` (boto3 clients are thread-safe). Returns
+    the number of keys deleted; raises if the store reports a key it did
+    not delete."""
+    keys = [
+        o["Key"]
+        for page in client.get_paginator("list_objects_v2").paginate(Bucket=bucket, Prefix=prefix)
+        for o in page.get("Contents", [])
+    ]
+    if not keys:
         return 0
-    with ThreadPoolExecutor(max_workers=delete_threads) as pool:
-        return sum(pool.map(delete_batch, batches))
+    batches = [keys[i: i + 1000] for i in range(0, len(keys), 1000)]
+    with ThreadPoolExecutor(max_workers=4) as pool:
+        return sum(pool.map(lambda batch: _delete_objects(client, bucket, batch), batches))
+
+
+def remove_stage(stage: str, cfg: S3Config) -> int:
+    """Tear a stage down with one prefix sweep of ``{stage}/`` —
+    removeShuffle parity (`S3ShuffleDispatcher.scala:104-118`). No
+    manifest read: the manifest and every data key start with
+    ``{stage}/`` and S3 LIST is strongly consistent, so the LIST returns
+    every key the manifest names, and the orphans of crashed writers
+    too. Returns the number of keys deleted; raises if the store reports
+    a key it did not delete."""
+    return _sweep(cfg.client(), cfg.bucket, f"{stage}/")
 
 
 def sweep_incomplete_uploads(stage: str, cfg: S3Config) -> int:

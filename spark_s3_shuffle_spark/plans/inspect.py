@@ -9,6 +9,7 @@ properties instead of hoping (SURVEY "optimize for scale" checklist).
 from __future__ import annotations
 
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame
 
@@ -109,6 +110,59 @@ def codegen_stage_count(df: DataFrame) -> int:
     return 1 if re.search(r"^\s*(?:[+:]-\s*)?\* ", plan, re.MULTILINE) else 0
 
 
+#: The local properties ``SparkContext.setJobGroup`` sets on the thread.
+_GROUP_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def job_group(spark, tag: str):
+    """Run the block's jobs under job group ``tag``. Job groups are
+    thread-local, so jobs other threads run meanwhile stay outside it. On
+    exit the caller's own group (or none) is restored, so a tagged window
+    nested in an outer one hands the outer group back."""
+    sc = spark.sparkContext
+    saved = [sc.getLocalProperty(k) for k in _GROUP_PROPS]
+    sc.setJobGroup(tag, tag)
+    try:
+        yield
+    finally:
+        for k, v in zip(_GROUP_PROPS, saved):
+            sc.setLocalProperty(k, v)  # None removes the property
+
+
+def group_stages(spark, tag: str) -> tuple[list, int]:
+    """(stage records, missing) for every job run under job group ``tag``:
+    the AppStatusStore's ``StageData`` of each stage attempt of those jobs,
+    and how many of their stage ids the store no longer holds.
+
+    The store is filled by a listener on Spark's asynchronous event bus,
+    so the bus is drained first: a stage whose completion event is still
+    queued would otherwise read as RUNNING with partial task metrics.
+
+    Eviction guard: the store retains only ``spark.ui.retainedStages``
+    entries (Spark default 1000), so in a long sweep stages of an earlier
+    job can be evicted by later work. ``get_spark`` raises the retention
+    for tool sessions; independently, ``missing`` counts the tagged stage
+    ids NOT found, so a caller can flag an undercount instead of
+    reporting a clean low number."""
+    sc = spark.sparkContext
+    jvm = sc._jvm
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    sids = set()
+    for jid in tracker.getJobIdsForGroup(tag):
+        info = tracker.getJobInfo(jid)
+        if info:
+            sids.update(int(s) for s in info.stageIds)
+    stages = sc._jsc.sc().statusStore().stageList(
+        jvm.java.util.ArrayList(), False, False,
+        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
+    )
+    found = [s for s in (stages.apply(i) for i in range(stages.size()))
+             if int(s.stageId()) in sids]
+    return found, len(sids - {int(s.stageId()) for s in found})
+
+
 def executed_shuffle_metrics(spark, run, tag: str) -> dict:
     """PHYSICAL shuffle facts of everything ``run()`` executes, from the
     AppStatusStore's per-stage listener metrics (round-7: replaces
@@ -116,39 +170,19 @@ def executed_shuffle_metrics(spark, run, tag: str) -> dict:
     query like the prefix machinery shows the same exchange once per
     re-print, and AQE-reused or skipped stages never execute at all).
 
-    Tags the work with a job group, runs it, then aggregates the stages
-    of exactly those jobs: shuffle write/read bytes+records actually
-    moved, the number of stages that wrote shuffle output (= executed
-    exchanges), and spill. Stages with status SKIPPED (reused exchange)
-    contribute zero — precisely the difference between the plan text
-    and what ran. Mirrors the reference's write-side metering
-    (S3MeasureOutputStream.scala:8-65) at stage granularity.
-
-    Eviction guard: the AppStatusStore retains only
-    ``spark.ui.retainedStages`` entries (Spark default 1000), so in a long
-    sweep stages of an earlier-tagged job can be evicted by later work and
-    the aggregate would silently undercount. ``get_spark`` raises the
-    retention for tool sessions; independently, any tagged stage id NOT
-    found in the store marks the result ``"partial": True`` with the
-    missing count, so an undercount is flagged instead of reported as a
-    clean low number."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    sc.setJobGroup(tag, tag)
-    try:
+    Runs ``run()`` under job group ``tag`` (:func:`job_group`), then
+    aggregates the stages of exactly those jobs (:func:`group_stages`):
+    shuffle write/read bytes+records actually moved, the number of stages
+    that wrote shuffle output (= executed exchanges), and spill. Stages
+    with status SKIPPED (reused exchange) contribute zero — precisely the
+    difference between the plan text and what ran. Mirrors the
+    reference's write-side metering (S3MeasureOutputStream.scala:8-65) at
+    stage granularity. Tagged stages the store has evicted mark the
+    result ``"partial": True`` with their count in
+    ``"missing_stage_ids"``."""
+    with job_group(spark, tag):
         result = run()
-    finally:
-        sc.setJobGroup("", "")
-    sids = set()
-    for jid in sc.statusTracker().getJobIdsForGroup(tag):
-        info = sc.statusTracker().getJobInfo(jid)
-        if info:
-            sids.update(int(s) for s in info.stageIds)
-    store = sc._jsc.sc().statusStore()
-    stages = store.stageList(
-        jvm.java.util.ArrayList(), False, False,
-        sc._gateway.new_array(jvm.double, 0), jvm.java.util.ArrayList(),
-    )
+    stages, missing = group_stages(spark, tag)
     agg = {
         "shuffle_write_bytes": 0,
         "shuffle_write_records": 0,
@@ -160,14 +194,8 @@ def executed_shuffle_metrics(spark, run, tag: str) -> dict:
         "disk_bytes_spilled": 0,
         "memory_bytes_spilled": 0,
     }
-    seen_sids = set()
-    for i in range(stages.size()):
-        s = stages.apply(i)
-        if int(s.stageId()) not in sids:
-            continue
-        seen_sids.add(int(s.stageId()))
-        status = str(s.status())
-        if status == "SKIPPED":
+    for s in stages:
+        if str(s.status()) == "SKIPPED":
             agg["stages_skipped"] += 1
             continue
         agg["stages_run"] += 1
@@ -180,10 +208,9 @@ def executed_shuffle_metrics(spark, run, tag: str) -> dict:
         agg["memory_bytes_spilled"] += int(s.memoryBytesSpilled())
         if wb > 0:
             agg["exchanges_executed"] += 1
-    missing = sids - seen_sids
     if missing:
         agg["partial"] = True
-        agg["missing_stage_ids"] = len(missing)
+        agg["missing_stage_ids"] = missing
     agg["result"] = result
     return agg
 

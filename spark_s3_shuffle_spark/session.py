@@ -55,6 +55,55 @@ def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
 
+def engine_sql_confs(shuffle_partitions: int | None = None) -> dict[str, str]:
+    """The five SQL confs of the engine profile that differ from Spark's
+    defaults. All are dynamic, so ``bench.py`` flips them per sample to
+    pair engine and vanilla draws in one session. ``shuffle_partitions``
+    defaults to $SPARK_GRAFT_SHUFFLE_PARTITIONS, else max(cpus, 32)."""
+    cpus = default_parallelism()
+    parts = shuffle_partitions or int(
+        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(cpus, 32))
+    )
+    return {
+        "spark.sql.shuffle.partitions": str(parts),
+        "spark.sql.parquet.aggregatePushdown": "true",
+        # Broadcast thresholds (round-10): Spark's 10 MiB default is tuned
+        # for small executors; the sf10 shuffle-volume sweep measured ds5's
+        # shuffle exploding 2 MB -> 4.3 GB the moment the 12 MB dims crossed
+        # it (SHUFFLE_SF10_r10) — the fact started shuffling for dim joins.
+        # Static threshold 32 MiB: covers real dimension tables (TPC-DS
+        # SF1000's item parquet is ~30-80 MB; stores/dates far less) and is
+        # measured SAFE against estimate misfires on this fixture — at 64
+        # MiB Catalyst broadcast a column-pruned 208 MB fact (orders, whose
+        # pruned ESTIMATE slipped under the bar) and blew the driver heap;
+        # at 32 MiB no fact side broadcasts at any tested SF. The adaptive
+        # twin at 64 MiB converts SMJ->BHJ at runtime from MEASURED sizes
+        # (estimate-proof — this is what catches derived/aggregated dims
+        # whose static estimates are fact-sized). SQL-text queries (no
+        # DataFrame broadcast hints) are the beneficiaries; the DataFrame
+        # helpers already hint dims explicitly.
+        # DEPLOYMENT FLOOR (ADVICE r10): a static threshold is
+        # ESTIMATE-based, so it shares the 64 MiB misfire's failure mode
+        # on data whose pruned estimates undershoot reality. 32 MiB is
+        # measured safe on these fixtures with an 8g driver; deployments
+        # with <4g drivers or wildly skewed column stats should drop
+        # spark.sql.autoBroadcastJoinThreshold back to the 10 MiB default
+        # (or -1) and rely on the AQE adaptive threshold below, which
+        # converts from MEASURED sizes and cannot misfire this way.
+        "spark.sql.autoBroadcastJoinThreshold": str(32 * 1024 * 1024),
+        "spark.sql.adaptive.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # AQE partition sizing (round-10): with coalescing ON, the initial
+        # partition count is a CEILING — AQE merges small partitions but
+        # never splits an exchange beyond it (skew-join aside), so
+        # max(cpus, 32) silently capped sf10's 4 GB fact-fact shuffles at
+        # 32 partitions of ~128 MB and pushed the SMJ sorts into 3.4 GB of
+        # spill (SHUFFLE_SF10_r10, ds75). Start wide (8x parallelism);
+        # AQE's advisoryPartitionSize coalesces small stages back down, so
+        # small queries pay nothing and big shuffles right-size themselves.
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum": str(8 * max(cpus, parts)),
+    }
+
+
 def apply_runtime_confs(spark: SparkSession) -> SparkSession:
     """Apply dynamic confs to any session (incl. one the driver provides)."""
     for k, v in RUNTIME_CONFS.items():
@@ -100,58 +149,15 @@ def get_spark(
     Local testing runs ``local[$SPARK_GRAFT_CPUS]``; on a cluster the same
     factory is used with ``master`` unset (spark-submit provides it).
     """
-    cpus = default_parallelism()
-    master = master or f"local[{cpus}]"
-    shuffle_partitions = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", max(cpus, 32))
-    )
+    master = master or f"local[{default_parallelism()}]"
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.parquet.filterPushdown", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        # Broadcast thresholds (round-10): Spark's 10 MiB default is tuned
-        # for small executors; the sf10 shuffle-volume sweep measured ds5's
-        # shuffle exploding 2 MB -> 4.3 GB the moment the 12 MB dims crossed
-        # it (SHUFFLE_SF10_r10) — the fact started shuffling for dim joins.
-        # Static threshold 32 MiB: covers real dimension tables (TPC-DS
-        # SF1000's item parquet is ~30-80 MB; stores/dates far less) and is
-        # measured SAFE against estimate misfires on this fixture — at 64
-        # MiB Catalyst broadcast a column-pruned 208 MB fact (orders, whose
-        # pruned ESTIMATE slipped under the bar) and blew the driver heap;
-        # at 32 MiB no fact side broadcasts at any tested SF. The adaptive
-        # twin at 64 MiB converts SMJ->BHJ at runtime from MEASURED sizes
-        # (estimate-proof — this is what catches derived/aggregated dims
-        # whose static estimates are fact-sized). SQL-text queries (no
-        # DataFrame broadcast hints) are the beneficiaries; the DataFrame
-        # helpers already hint dims explicitly.
-        # DEPLOYMENT FLOOR (ADVICE r10): a static threshold is
-        # ESTIMATE-based, so it shares the 64 MiB misfire's failure mode
-        # on data whose pruned estimates undershoot reality. 32 MiB is
-        # measured safe on these fixtures with an 8g driver; deployments
-        # with <4g drivers or wildly skewed column stats should drop
-        # spark.sql.autoBroadcastJoinThreshold back to the 10 MiB default
-        # (or -1) and rely on the AQE adaptive threshold below, which
-        # converts from MEASURED sizes and cannot misfire this way.
-        .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
-        .config("spark.sql.adaptive.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # AQE partition sizing (round-10): with coalescing ON, the initial
-        # partition count is a CEILING — AQE merges small partitions but
-        # never splits an exchange beyond it (skew-join aside), so
-        # max(cpus, 32) silently capped sf10's 4 GB fact-fact shuffles at
-        # 32 partitions of ~128 MB and pushed the SMJ sorts into 3.4 GB of
-        # spill (SHUFFLE_SF10_r10, ds75). Start wide (8x parallelism);
-        # AQE's advisoryPartitionSize coalesces small stages back down, so
-        # small queries pay nothing and big shuffles right-size themselves.
-        .config(
-            "spark.sql.adaptive.coalescePartitions.initialPartitionNum",
-            str(8 * max(cpus, shuffle_partitions)),
-        )
         # AppStatusStore retention: the executed-plan shuffle metering
         # (plans/inspect.py executed_shuffle_metrics) reads per-stage task
         # metrics from the store after the fact; Spark's default of 1000
@@ -170,7 +176,7 @@ def get_spark(
         # for code that was actually compiled.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
-    for k, v in RUNTIME_CONFS.items():
+    for k, v in {**engine_sql_confs(shuffle_partitions), **RUNTIME_CONFS}.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

@@ -170,6 +170,66 @@ def test_metered_read_populates_task_metrics(spark, mgr):
     assert st.task_input_bytes <= st.bytes_read * 2
 
 
+def test_metered_read_counts_only_its_own_jobs(spark, mgr):
+    """A job another thread runs inside the metering window is not the
+    read's: the window records exactly the stage's 50,000 input rows, not
+    the 10,000 rows the other thread reads from a second stage."""
+    import threading
+
+    df = spark.range(50_000).withColumn("k", F.col("id") % 7)
+    mgr.stage_write(df, "mine", keys=["k"], num_partitions=4)
+    mgr.stage_write(spark.range(10_000), "other", num_partitions=2)
+    other = []
+    with mgr.metered_read("mine") as back:
+        assert back.count() == 50_000
+        t = threading.Thread(target=lambda: other.append(mgr.stage_read("other").count()))
+        t.start()
+        t.join(timeout=120)
+        assert not t.is_alive()
+    assert other == [10_000]
+    assert mgr.stats["mine"].task_input_records == 50_000
+
+
+def test_removed_bucketed_stage_no_longer_resolves(spark, mgr):
+    """remove_stage and remove_all drop a bucketed stage's catalog table
+    with its files, so reading the stage back raises instead of
+    resolving a table over missing (or silently empty) files."""
+    df = spark.range(200).withColumn("k", F.col("id") % 5)
+    mgr.stage_write_bucketed(df, "bk_one", keys=["k"], num_buckets=2)
+    assert spark.catalog.tableExists("exchange_bk_one")
+    assert mgr.remove_stage("bk_one")
+    assert not spark.catalog.tableExists("exchange_bk_one")
+    with pytest.raises(Exception):
+        mgr.stage_read_bucketed("bk_one").count()
+
+    mgr.stage_write_bucketed(df, "bk-two", keys=["k"], num_buckets=2)
+    mgr.stage_write(df, "plain", num_partitions=1)
+    assert mgr.remove_all() >= 1
+    assert not spark.catalog.tableExists("exchange_bk_two")
+    with pytest.raises(Exception):
+        mgr.stage_read_bucketed("bk-two").count()
+
+
+def test_refused_delete_raises(spark, mgr, monkeypatch):
+    """Hadoop's FileSystem.delete reports a refusal by returning False;
+    remove_stage and remove_all must raise rather than report the stage
+    removed (or absent)."""
+    from spark_s3_shuffle_spark.operators import exchange
+
+    class RefusingFS:
+        def exists(self, path):
+            return True
+
+        def delete(self, path, recursive):
+            return False
+
+    monkeypatch.setattr(exchange, "_fs", lambda spark, path: (RefusingFS(), path, None))
+    with pytest.raises(RuntimeError, match="refused"):
+        mgr.remove_stage("any")
+    with pytest.raises(RuntimeError, match="refused"):
+        mgr.remove_all()
+
+
 def test_content_checksum_write_and_verify(spark, mgr):
     """A4/A5 parity at the engine level: the content checksum validates a
     materialized stage at rest; losing a part file (or any row) fails
@@ -255,7 +315,7 @@ def test_tune_read_partition_bytes_changes_scan_parallelism(spark, mgr):
         spark.conf.set(key, str(64 * 1024))
         with mgr.metered_read("tune") as d:
             d.agg(F.count(F.lit(1))).collect()
-        wide = mgr.stage_read("tune", meter=False).rdd.getNumPartitions()
+        wide = mgr.stage_read("tune").rdd.getNumPartitions()
 
         st = mgr.stats["tune"]
         assert st.task_input_bytes > 0 and st.task_read_millis > 0
@@ -266,7 +326,7 @@ def test_tune_read_partition_bytes_changes_scan_parallelism(spark, mgr):
         )
         assert decision["new_max_partition_bytes"] >= 1 << 20
         assert int(spark.conf.get(key)) == decision["new_max_partition_bytes"]
-        narrow = mgr.stage_read("tune", meter=False).rdd.getNumPartitions()
+        narrow = mgr.stage_read("tune").rdd.getNumPartitions()
         assert narrow < wide, (narrow, wide, decision)
     finally:
         spark.conf.set(key, old)

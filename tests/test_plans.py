@@ -416,6 +416,30 @@ def test_q160_physical_exchange_count_pinned(spark, sf_dir):
     assert m["shuffle_write_records"] < 60_000  # narrow frames, never fact-sized
 
 
+def test_executed_shuffle_metrics_restores_the_callers_job_group(spark):
+    """Metering a nested window hands the enclosing job group back: a job
+    run after executed_shuffle_metrics still belongs to the outer group,
+    and the metered jobs belong to the inner tag only."""
+    from spark_s3_shuffle_spark.plans.inspect import executed_shuffle_metrics
+
+    sc = spark.sparkContext
+    sc.setJobGroup("restore-outer", "restore-outer")
+    try:
+        m = executed_shuffle_metrics(
+            spark,
+            lambda: spark.range(100).groupBy((F.col("id") % 3).alias("g")).count().collect(),
+            "restore-inner",
+        )
+        spark.range(10).count()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert m["exchanges_executed"] >= 1
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    outer = set(sc.statusTracker().getJobIdsForGroup("restore-outer"))
+    inner = set(sc.statusTracker().getJobIdsForGroup("restore-inner"))
+    assert outer and inner and not outer & inner, (outer, inner)
+
+
 def test_nested_loop_bound_detector_sees_data_sized_broadcast(spark, sf_dir):
     """Guard against a vacuous bound-checker: a deliberately data-sized
     nested-loop broadcast (every customer row cross-joined) must be

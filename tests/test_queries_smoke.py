@@ -101,3 +101,15 @@ def test_codegen_cache_holds_llm_pipeline_working_set(spark, sf_dir):
     before = compilations.getCount()
     run_round()
     assert compilations.getCount() - before == 0
+
+
+def test_bench_engine_delta_matches_get_spark(spark, monkeypatch):
+    """bench.py's paired engine side sets the same values of the engine
+    SQL confs as a get_spark session starts with."""
+    import bench
+
+    conf = spark.sparkContext.getConf()
+    monkeypatch.setenv("SPARK_GRAFT_SHUFFLE_PARTITIONS", conf.get("spark.sql.shuffle.partitions"))
+    delta = bench.engine_delta()
+    assert len(delta) == 5
+    assert delta == {k: conf.get(k) for k in delta}

@@ -160,7 +160,7 @@ def test_adaptive_fetcher_climbs_and_beats_serial():
         slow_fetch(k)
     serial = time.monotonic() - t0
 
-    fetcher = S3X.AdaptiveFetcher(slow_fetch, window=6)
+    fetcher = S3X.AdaptiveFetcher(slow_fetch)
     t0 = time.monotonic()
     got = list(fetcher.fetch_all(keys))
     adaptive = time.monotonic() - t0
