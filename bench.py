@@ -129,11 +129,14 @@ def vanilla_spark() -> SparkSession:
 #: ratio equally instead of whichever separate process ran at the worse
 #: moment — separate-process ratios showed a different spurious 1.6-2.3x
 #: "worst query" on every rerun; paired ratios are stable.
-#: One static conf is NOT identical: ``spark.sql.codegen.cache.maxEntries``
-#: is set by get_spark, so both sides of every pair share it, but the
-#: separate-process ``--baseline`` session (vanilla_spark) leaves it at
-#: Spark's default of 100 entries, where repeated draws may recompile
-#: generated code the engine session keeps cached.
+#: Two static confs are NOT identical. get_spark sets both, so both sides
+#: of every pair share them, but the separate-process ``--baseline``
+#: session (vanilla_spark) leaves them at Spark's defaults:
+#: ``spark.sql.codegen.cache.maxEntries`` (100 entries there, where repeated
+#: draws may recompile generated code the engine session keeps cached) and
+#: ``spark.python.daemon.module`` (PySpark's own daemon there, whose Python
+#: tasks each pay the per-task archive re-read that the engine's
+#: ``worker_daemon`` removes).
 VANILLA_DELTA = {
     "spark.sql.shuffle.partitions": "200",  # Spark default
     "spark.sql.parquet.aggregatePushdown": "false",  # Spark default

@@ -12,10 +12,26 @@ multimodal columns).
 Everything relational is declared through the DataFrame/SQL API so Catalyst
 plans it (predicate pushdown, column pruning, broadcast selection, AQE);
 Python-side execution only appears in clearly-marked Pandas-UDF paths.
+
+The exports resolve on first use (PEP 562), so importing the package
+imports no PySpark: ``python -m spark_s3_shuffle_spark.worker_daemon``
+must prune the worker's ``sys.path`` before PySpark loads.
 """
 
-from spark_s3_shuffle_spark.session import get_spark
-from spark_s3_shuffle_spark.sources.catalog import TABLES, load_table, load_tables
+import importlib
+
+_EXPORTS = {
+    "get_spark": "spark_s3_shuffle_spark.session",
+    "TABLES": "spark_s3_shuffle_spark.sources.catalog",
+    "load_table": "spark_s3_shuffle_spark.sources.catalog",
+    "load_tables": "spark_s3_shuffle_spark.sources.catalog",
+}
 
 __all__ = ["get_spark", "load_table", "load_tables", "TABLES"]
 __version__ = "0.1.0"
+
+
+def __getattr__(name: str):
+    if name in _EXPORTS:
+        return getattr(importlib.import_module(_EXPORTS[name]), name)
+    raise AttributeError(f"module {__name__!r} has no attribute {name!r}")

@@ -43,8 +43,10 @@ cannot fake:
   driver bytes — only the per-partition manifest rows (one JSON line
   each) ever reach the driver.
 - **At most one Python task per core per op** (unless a caller asks
-  for more reader tasks): a Python worker task costs ~0.17 s of CPU to
-  start, whatever it does (README, "Benchmarking & verification").
+  for more reader tasks): whatever it does, a Python worker task costs
+  ~0.02 s of CPU to start under the engine's worker daemon and ~0.25 s
+  under PySpark's own, which ``get_spark`` keeps on non-local masters
+  (README, "What a Python worker task costs").
 - **Integrity.** The manifest pins per-object SHA-256 + row count at
   write time; ``verify_stage`` re-downloads and re-hashes distributedly
   (A4/A5 parity with `exchange.py`'s content checksums).
@@ -153,8 +155,9 @@ def stage_write(
     uncached upstream is computed at most ``defaultParallelism`` tasks
     wide, in static groups of partitions rather than scheduled
     dynamically — a slow partition holds up the rest of its group. In
-    exchange the op pays the Python worker start-up cost once per core
-    instead of once per partition.
+    exchange the op pays the Python worker start-up cost (~0.02 s of CPU
+    under the engine's worker daemon, ~0.25 s under PySpark's own) once
+    per core instead of once per partition.
 
     Scale: data bytes never touch the driver; the driver sees
     |partitions| manifest rows. P prefix shards give the store P

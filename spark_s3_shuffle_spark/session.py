@@ -25,6 +25,7 @@ Scale notes (100 TB mindset):
 from __future__ import annotations
 
 import os
+import site
 
 from pyspark.sql import SparkSession
 
@@ -138,6 +139,27 @@ def decommission_fallback_conf(fallback_path: str) -> dict[str, str]:
     }
 
 
+def worker_daemon_conf(master: str) -> dict[str, str]:
+    """``spark.python.daemon.module`` set to ``worker_daemon``, which loads
+    PySpark in the Python workers from its installed package instead of
+    ``pyspark.zip`` and so takes most of the fixed cost out of every Python
+    task (README, "What a Python worker task costs"). Only for ``local``
+    masters: there the driver's own JVM forks the daemon, with the driver's
+    cwd and environment, so the daemon module resolves wherever this
+    package sits in the cwd, on ``$PYTHONPATH`` or in site-packages (the
+    worker's path; ``python -m`` puts the cwd first). Other masters' executors
+    may get the package only through ``addPyFile``, after the daemon starts,
+    so they keep PySpark's daemon."""
+    if master != "local" and not master.startswith("local["):
+        return {}
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    worker_path = [os.getcwd(), *os.environ.get("PYTHONPATH", "").split(os.pathsep),
+                   *site.getsitepackages()]
+    if root not in {os.path.abspath(p) for p in worker_path if p}:
+        return {}
+    return {"spark.python.daemon.module": "spark_s3_shuffle_spark.worker_daemon"}
+
+
 def get_spark(
     app_name: str = "spark-s3-shuffle-spark",
     master: str | None = None,
@@ -176,7 +198,9 @@ def get_spark(
         # for code that was actually compiled.
         .config("spark.sql.codegen.cache.maxEntries", "1000")
     )
-    for k, v in {**engine_sql_confs(shuffle_partitions), **RUNTIME_CONFS}.items():
+    confs = {**worker_daemon_conf(master), **engine_sql_confs(shuffle_partitions),
+             **RUNTIME_CONFS}
+    for k, v in confs.items():
         builder = builder.config(k, v)
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
