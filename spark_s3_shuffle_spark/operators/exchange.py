@@ -36,8 +36,10 @@ import zlib
 from contextlib import contextmanager
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.errors import AnalysisException
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from spark_s3_shuffle_spark.plans.inspect import group_stages, job_group
 
@@ -63,6 +65,12 @@ class ExchangeStats:
     task_input_records: int = 0
     task_read_millis: int = 0
     metered_stages: int = 0
+    # integrity record captured by the write itself (see _materialize):
+    # row count and content digest (None when xxhash64 rejects a column
+    # type), and the written frame's schema as JSON
+    rows: int | None = None
+    digest: str | None = None
+    schema_json: str | None = None
 
     def mib_per_sec(self) -> float:
         return (self.bytes_written / (1 << 20)) / self.write_secs if self.write_secs else 0.0
@@ -119,7 +127,6 @@ class ExchangeManager:
         each partition (the plugin's reduce-side-sort analogue,
         S3ShuffleReader.scala:141-149).
         """
-        path = self.stage_path(stage)
         out = df
         if keys:
             out = out.repartition(num_partitions, *keys) if num_partitions else out.repartition(*keys)
@@ -127,8 +134,29 @@ class ExchangeManager:
             out = out.repartition(num_partitions)
         if sort_within:
             out = out.sortWithinPartitions(*sort_within)
+        return self._materialize(stage, out, num_partitions, lambda writer, path: writer.parquet(path))
+
+    def _materialize(self, stage: str, out: DataFrame, num_partitions: int | None, save) -> ExchangeStats:
+        """Write ``out`` with ``save(writer, path)`` and record the stage's
+        ExchangeStats, including its integrity record.
+
+        The content digest (:func:`_digest_aggs`) is observed as the last
+        node before the writer, after any repartition or sort, so it runs
+        in the write's result stage: Spark applies each result task's
+        accumulator update once, so task retries never double-count. The
+        write therefore yields the digest of exactly what it wrote, and
+        :func:`write_stage_checksum` pins it without reading the stage.
+        A frame whose column types ``xxhash64`` rejects (map, variant) is
+        written without a digest."""
+        path = self.stage_path(stage)
+        obs = Observation(f"exchange-digest-{uuid.uuid4().hex}")
+        try:
+            observed = out.observe(obs, *_digest_aggs(out.columns))
+        except AnalysisException:
+            observed, obs = out, None
         t0 = time.monotonic()
-        out.write.mode("overwrite").parquet(path)
+        save(observed.write.mode("overwrite"), path)
+        rows, digest = _digest_of(obs.get) if obs is not None else (None, None)
         elapsed = time.monotonic() - t0
         nbytes, nfiles = self._du(path)
         if num_partitions is None:
@@ -136,7 +164,8 @@ class ExchangeManager:
             # a DF→RDD conversion just to ask getNumPartitions.
             num_partitions = nfiles or int(self.spark.conf.get("spark.sql.shuffle.partitions", "200"))
         st = ExchangeStats(
-            stage, path, num_partitions, elapsed, bytes_written=nbytes, num_files=nfiles
+            stage, path, num_partitions, elapsed, bytes_written=nbytes, num_files=nfiles,
+            rows=rows, digest=digest, schema_json=out.schema.json(),
         )
         self.stats[stage] = st
         return st
@@ -147,15 +176,26 @@ class ExchangeManager:
 
         The read is recorded on the stage's ExchangeStats (read-side A15
         parity: bytes at rest + listing latency; per-task input metrics
-        come from :meth:`metered_read`)."""
+        come from :meth:`metered_read`).
+
+        A stage this manager wrote is read with the schema its write
+        recorded, so Spark runs no schema-inference job, as long as the
+        part files' bytes and count are still the ones the write recorded;
+        otherwise (another manager rewrote the shared path, or the stage is
+        not this manager's) the schema is inferred from the files. Raises
+        FileNotFoundError when the stage has no part file: with an explicit
+        schema, total loss would otherwise read as an empty frame."""
         path = self.stage_path(stage)
         t0 = time.monotonic()
-        df = self.spark.read.parquet(path)
+        bytes_at_rest, nfiles = self._du(path)
+        if not nfiles:
+            raise FileNotFoundError(f"stage {stage} has no part files under {path}")
         st = self.stats.get(stage)
         if st is None:
             st = ExchangeStats(stage, path, 0)
             self.stats[stage] = st
-        bytes_at_rest, _ = self._du(path)
+        unchanged = (bytes_at_rest, nfiles) == (st.bytes_written, st.num_files)
+        df = _parquet_reader(self.spark, st.schema_json if unchanged else None).parquet(path)
         st.bytes_read += bytes_at_rest
         st.read_secs += time.monotonic() - t0
         st.num_reads += 1
@@ -259,18 +299,14 @@ class ExchangeManager:
         (catalog-sanitized). Lifetime is the session's, matching shuffle
         scratch semantics.
         """
-        path = self.stage_path(stage)
-        t0 = time.monotonic()
-        writer = df.write.mode("overwrite").format("parquet").option("path", path)
-        writer = writer.bucketBy(num_buckets, *keys)
-        if sort_within:
-            writer = writer.sortBy(*sort_within)
-        writer.saveAsTable(_table_name(stage))
-        elapsed = time.monotonic() - t0
-        st = ExchangeStats(stage, path, num_buckets, elapsed)
-        st.bytes_written, st.num_files = self._du(path)
-        self.stats[stage] = st
-        return st
+
+        def save(writer, path):
+            writer = writer.format("parquet").option("path", path).bucketBy(num_buckets, *keys)
+            if sort_within:
+                writer = writer.sortBy(*sort_within)
+            writer.saveAsTable(_table_name(stage))
+
+        return self._materialize(stage, df, num_buckets, save)
 
     def stage_read_bucketed(self, stage: str) -> DataFrame:
         """Read a bucketed exchange via the catalog (keeps the bucket spec —
@@ -381,20 +417,24 @@ def _read_json(spark: SparkSession, path: str) -> dict | None:
         stream.close()
 
 
-# The plugin writes per-reduce-partition Adler32/CRC32 objects at shuffle
-# write and validates them at partition boundaries on read
-# (S3ShuffleHelper.scala:49-51,83-92; S3ChecksumValidationStream.scala:
-# 17-92). The engine-level analogue validates CONTENT, not byte streams:
-# an order-independent row-hash sum over the materialized data, written
-# as a sidecar at write time and recomputed at read time — catching
-# lost/truncated/duplicated files and corrupted values regardless of how
-# the object store re-chunked the bytes.
+# The plugin computes each reduce partition's Adler32/CRC32 while the map
+# output is written, stores it beside the data, and validates it at
+# partition boundaries on read (S3ShuffleHelper.scala:49-51,83-92;
+# S3ChecksumValidationStream.scala:17-92). The engine-level analogue
+# validates CONTENT, not byte streams: an order-independent row-hash sum.
+# ExchangeManager's writes observe it in the job that writes the stage,
+# write_stage_checksum pins it as a sidecar without reading the stage, and
+# verify_stage_checksum recomputes it from the files at rest — catching
+# files lost or duplicated at any point after the write, truncated files
+# and corrupted values, regardless of how the object store re-chunked the
+# bytes.
 
 def _digest_aggs(cols: list[str]) -> list:
     """Aggregates ``rows`` and ``digest``: row count and the sum of
     per-row xxhash64 over ``cols``, accumulated exactly in decimal(38,0)
     so the digest is independent of partitioning and read order. Use in
-    ``select`` for one digest or ``groupBy(...).agg`` for one per group."""
+    ``select`` for one digest, ``groupBy(...).agg`` for one per group, or
+    ``observe`` for the digest of what an action wrote."""
     return [
         F.count(F.lit(1)).alias("rows"),
         F.sum(F.xxhash64(*cols).cast("decimal(38,0)")).alias("digest"),
@@ -402,7 +442,8 @@ def _digest_aggs(cols: list[str]) -> list:
 
 
 def _digest_of(row) -> tuple[int, str]:
-    """(rows, digest) of a row computed with :func:`_digest_aggs`."""
+    """(rows, digest) of a row (or observed-metrics dict) computed with
+    :func:`_digest_aggs`."""
     return int(row["rows"]), str(row["digest"] if row["digest"] is not None else 0)
 
 
@@ -411,37 +452,63 @@ def _content_checksum(df) -> tuple[int, str]:
     return _digest_of(df.select(*_digest_aggs(df.columns)).first())
 
 
+def _parquet_reader(spark: SparkSession, schema_json: str | None):
+    """A parquet reader with the given schema (JSON), so reading runs no
+    schema-inference job; with None, Spark infers the schema as usual."""
+    reader = spark.read
+    if schema_json is not None:
+        reader = reader.schema(StructType.fromJson(json.loads(schema_json)))
+    return reader
+
+
 def _checksum_path(stage_path: str) -> str:
     return f"{stage_path}/_content_checksum.json"
 
 
 def write_stage_checksum(mgr: "ExchangeManager", stage: str) -> dict:
-    """Compute + persist the content checksum of a materialized stage
-    (reads the files AT REST, so what is validated later is what the
-    object store actually holds, not what the writer intended)."""
+    """Persist the content checksum of a materialized stage as a sidecar:
+    ``{"stage", "rows", "digest", "schema"}``.
+
+    For a stage this manager wrote, the rows, digest and schema are the
+    ones the write recorded in the job that wrote the stage, so pinning
+    runs no Spark job, and a file lost between the write and this call
+    fails :func:`verify_stage_checksum` instead of being baked into the
+    pin; likewise, if another manager rewrote the shared path since, the
+    pin is of what this manager wrote and verification fails. A stage
+    with no such record (written by another process, or by a frame whose
+    column types ``xxhash64`` rejects) is digested from its files at
+    rest, which raises for those column types."""
     path = mgr.stage_path(stage)
-    n, digest = _content_checksum(mgr.spark.read.parquet(path))
-    doc = {"stage": stage, "rows": n, "digest": digest}
+    st = mgr.stats.get(stage)
+    if st is not None and st.digest is not None:
+        n, digest, schema_json = st.rows, st.digest, st.schema_json
+    else:
+        df = mgr.spark.read.parquet(path)
+        n, digest = _content_checksum(df)
+        schema_json = df.schema.json()
+    doc = {"stage": stage, "rows": n, "digest": digest, "schema": schema_json}
     _write_json(mgr.spark, _checksum_path(path), doc)
     return doc
 
 
 def verify_stage_checksum(mgr: "ExchangeManager", stage: str) -> bool:
-    """Recompute the stage's content checksum and compare with the sidecar
-    (A5 read-side validation). Returns False on any mismatch or missing
-    sidecar — callers decide whether to refetch/rebuild the stage, the
-    same recovery the plugin's validation stream triggers."""
+    """Recompute the stage's content checksum from its files at rest and
+    compare with the sidecar (A5 read-side validation); the files are
+    read with the sidecar's schema, so no schema-inference job runs.
+    Returns False on any mismatch or missing sidecar — callers decide
+    whether to refetch/rebuild the stage, the same recovery the plugin's
+    validation stream triggers."""
     path = mgr.stage_path(stage)
     want = _read_json(mgr.spark, _checksum_path(path))
     if want is None:
         return False
-    # Total corruption — every parquet file missing/deleted — makes the
-    # read itself raise (unable to infer schema) rather than produce a
-    # mismatching digest; that is still "validation failed", so report
-    # False and let the caller refetch/rebuild, mirroring the
-    # missing-sidecar path above.
+    # Total corruption — every parquet file missing/deleted — reads as an
+    # empty frame under the sidecar's schema (a mismatching digest), but
+    # makes a read without one raise (unable to infer schema); that is
+    # still "validation failed", so report False and let the caller
+    # refetch/rebuild, mirroring the missing-sidecar path above.
     try:
-        df = mgr.spark.read.parquet(path)
+        df = _parquet_reader(mgr.spark, want.get("schema")).parquet(path)
         n, digest = _content_checksum(df)
     except Exception:
         return False

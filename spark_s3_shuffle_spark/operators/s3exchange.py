@@ -48,8 +48,9 @@ cannot fake:
   under PySpark's own, which ``get_spark`` keeps on non-local masters
   (README, "What a Python worker task costs").
 - **Integrity.** The manifest pins per-object SHA-256 + row count at
-  write time; ``verify_stage`` re-downloads and re-hashes distributedly
-  (A4/A5 parity with `exchange.py`'s content checksums).
+  write time; ``verify_stage`` re-downloads and re-hashes distributedly,
+  taking each object's row count from its parquet footer rather than
+  decoding it (A4/A5 parity with `exchange.py`'s content checksums).
 
 Read-side concurrency is ADAPTIVE (A10 parity,
 `S3BufferedPrefetchIterator.scala:32-69`): see
@@ -364,11 +365,17 @@ def _key_slices(spark: SparkSession, keys: list[str], n: int) -> DataFrame:
     built from a ``pyarrow.Table``, which the JVM ingests by itself; a
     Python list would become a ``parallelize`` job that runs one Python
     worker task per default-parallelism slice just to decode the key
-    lists."""
+    lists. Its ``LocalTableScan`` splits into min(rows,
+    ``defaultParallelism``) partitions, so for ``n <= defaultParallelism``
+    each row already is its own partition and no shuffle is added; only a
+    wider ``n`` is spread by a round-robin ``repartition(n)``."""
     import pyarrow as pa
 
     slices = pa.array([keys[i::n] for i in range(n)], pa.list_(pa.string()))
-    return spark.createDataFrame(pa.table({"keys": slices})).repartition(n)
+    kdf = spark.createDataFrame(pa.table({"keys": slices}))
+    if n > spark.sparkContext.defaultParallelism:
+        kdf = kdf.repartition(n)
+    return kdf
 
 
 def _manifest_slices(
@@ -443,7 +450,9 @@ def stage_read(
 def verify_stage(spark: SparkSession, stage: str, cfg: S3Config) -> bool:
     """A4/A5 read-side validation against the manifest: every object is
     re-downloaded and re-hashed (distributed, one task slice per reader)
-    and compared to the SHA-256 + row count pinned at write time.
+    and compared to the SHA-256 + row count pinned at write time. The
+    SHA-256 covers every byte, so the row count is read from the parquet
+    footer, not by decoding the object.
     False on any missing/corrupt/short object or a missing manifest —
     callers decide refetch/rebuild."""
     front = _manifest_slices(spark, stage, cfg)
@@ -461,7 +470,7 @@ def verify_stage(spark: SparkSession, stage: str, cfg: S3Config) -> bool:
             try:
                 body = client.get_object(Bucket=cfg.bucket, Key=key)["Body"].read()
                 sha = hashlib.sha256(body).hexdigest()
-                rows = pq.read_table(pa.BufferReader(body)).num_rows
+                rows = pq.ParquetFile(pa.BufferReader(body)).metadata.num_rows
                 ok = True
             except Exception:
                 sha, rows, ok = "", -1, False

@@ -292,6 +292,138 @@ def test_content_checksum_invariant_to_read_parallelism(spark, mgr):
     assert (doc["rows"], doc["digest"]) == (doc2["rows"], doc2["digest"])
 
 
+def test_checksum_catches_loss_between_write_and_pin(spark, mgr):
+    """The pinned digest is the one the write observed, not one re-derived
+    from the files at rest: a part file lost after the write but before
+    write_stage_checksum must fail verification, not be baked into the
+    pin."""
+    import glob
+
+    from spark_s3_shuffle_spark.operators.exchange import (
+        verify_stage_checksum,
+        write_stage_checksum,
+    )
+
+    df = spark.range(2000).withColumn("k", F.col("id") % 7)
+    mgr.stage_write(df, "pin", keys=["k"], num_partitions=5)
+    path = mgr.stage_path("pin").replace("file:", "")
+    os.remove(sorted(glob.glob(f"{path}/part-*.parquet"))[0])
+    doc = write_stage_checksum(mgr, "pin")
+    assert doc["rows"] == 2000
+    assert not verify_stage_checksum(mgr, "pin")
+
+
+_DIGEST_CASES = {
+    "long": "(CAST(9223372036854775807 AS BIGINT)), (CAST(-1 AS BIGINT)), (CAST(NULL AS BIGINT))",
+    "int": "(2147483647), (-7), (CAST(NULL AS INT))",
+    "double": "(CAST(-0.0 AS DOUBLE)), (CAST(0.0 AS DOUBLE)), (CAST('NaN' AS DOUBLE)), "
+              "(CAST(NULL AS DOUBLE)), (1.5D)",
+    "string": "(''), (CAST(NULL AS STRING)), ('naïve 日本語 ✓'), ('x')",
+    "decimal(38,10)": "(CAST('1234567890123456789012345678.0123456789' AS DECIMAL(38,10))), "
+                      "(CAST(-0.5 AS DECIMAL(38,10))), (CAST(NULL AS DECIMAL(38,10)))",
+    "date": "(DATE'1970-01-01'), (DATE'2024-02-29'), (CAST(NULL AS DATE))",
+    "timestamp": "(TIMESTAMP'2024-02-29 12:34:56.789012'), (TIMESTAMP'1900-01-01 00:00:00'), "
+                 "(CAST(NULL AS TIMESTAMP))",
+    "binary": "(X''), (X'00FF10'), (CAST(NULL AS BINARY))",
+    "array<string>": "(array('a', NULL, '')), (CAST(array() AS ARRAY<STRING>)), "
+                     "(CAST(NULL AS ARRAY<STRING>))",
+    "struct": "(named_struct('a', 1, 'b', 'x')), "
+              "(named_struct('a', CAST(NULL AS INT), 'b', CAST(NULL AS STRING))), "
+              "(CAST(NULL AS STRUCT<a: INT, b: STRING>))",
+}
+
+
+@pytest.mark.parametrize("kind", sorted(_DIGEST_CASES))
+def test_write_time_digest_equals_at_rest_digest(spark, mgr, kind):
+    """The digest observed while writing equals the digest recomputed from
+    the parquet files at rest, for every column type the digest hashes,
+    edge values included (-0.0, NaN, nulls, empty and non-ASCII strings)."""
+    from spark_s3_shuffle_spark.operators.exchange import _content_checksum
+
+    df = spark.sql(f"SELECT * FROM VALUES {_DIGEST_CASES[kind]} AS t(c)")
+    st = mgr.stage_write(df, "types", num_partitions=2)
+    assert st.digest is not None
+    at_rest = _content_checksum(spark.read.parquet(mgr.stage_path("types")))
+    assert (st.rows, st.digest) == at_rest
+
+
+def test_map_typed_stage_writes_without_digest(spark, mgr):
+    """xxhash64 rejects map columns: such a frame still writes and reads
+    back, with no digest recorded, and pinning it raises."""
+    from pyspark.errors import AnalysisException
+
+    from spark_s3_shuffle_spark.operators.exchange import write_stage_checksum
+
+    df = spark.range(5).select(F.create_map(F.col("id"), F.lit("x")).alias("m"))
+    st = mgr.stage_write(df, "maps", num_partitions=2)
+    assert st.digest is None and st.rows is None
+    back = mgr.stage_read("maps")
+    assert sorted(r["m"] for r in back.selectExpr("map_keys(m)[0] AS m").collect()) == list(range(5))
+    with pytest.raises(AnalysisException):
+        write_stage_checksum(mgr, "maps")
+
+
+def test_pinned_reads_run_no_inference_job(spark, mgr):
+    """A recorded stage is pinned without any job and read and verified
+    with its pinned schema, so no parquet schema-inference job runs; a
+    manager that did not write the stage still reads (inferring) and
+    verifies (with the sidecar's schema); and a stage whose part files are
+    all gone raises on read instead of reading as empty."""
+    import glob
+    import uuid
+
+    from spark_s3_shuffle_spark.operators.exchange import (
+        verify_stage_checksum,
+        write_stage_checksum,
+    )
+    from spark_s3_shuffle_spark.plans.inspect import group_stages, job_group
+
+    def window(run):
+        tag = f"pinned-{uuid.uuid4().hex}"
+        with job_group(spark, tag):
+            result = run()
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup(tag)
+        return result, len(jobs), [str(s.name()) for s in group_stages(spark, tag)[0]]
+
+    df = spark.range(3000).withColumn("k", F.col("id") % 11)
+    mgr.stage_write(df, "pinned", keys=["k"], num_partitions=4)
+    doc, jobs, _ = window(lambda: write_stage_checksum(mgr, "pinned"))
+    assert doc["rows"] == 3000 and jobs == 0
+
+    n, jobs, names = window(lambda: mgr.stage_read("pinned").count())
+    assert n == 3000 and jobs >= 1
+    assert not any(name.startswith("parquet") for name in names), names
+    ok, jobs, names = window(lambda: verify_stage_checksum(mgr, "pinned"))
+    assert ok and jobs >= 1
+    assert not any(name.startswith("parquet") for name in names), names
+
+    fresh = ExchangeManager(spark, mgr.root, prefixes=mgr.prefixes, app_id=mgr.app_id)
+    assert fresh.stage_read("pinned").count() == 3000
+    assert verify_stage_checksum(fresh, "pinned")
+
+    path = mgr.stage_path("pinned").replace("file:", "")
+    for part in glob.glob(f"{path}/part-*.parquet"):
+        os.remove(part)
+    for m in (mgr, fresh):
+        with pytest.raises(FileNotFoundError):
+            m.stage_read("pinned")
+
+
+def test_stage_read_infers_schema_after_another_manager_rewrites(spark, mgr):
+    """The shard path is shared across managers: once another manager
+    rewrites the stage with an extra column, the first manager's recorded
+    schema no longer describes the files, so its read infers the real
+    schema instead of dropping the new column."""
+    df = spark.range(500).withColumn("k", F.col("id") % 3)
+    mgr.stage_write(df, "shared", num_partitions=2)
+    other = ExchangeManager(spark, mgr.root, prefixes=mgr.prefixes, app_id=mgr.app_id)
+    other.stage_write(df.withColumn("extra", F.col("id") * 2), "shared", num_partitions=2)
+    back = mgr.stage_read("shared")
+    assert sorted(back.columns) == ["extra", "id", "k"]
+    assert back.where(F.col("extra") != F.col("id") * 2).count() == 0
+    assert back.where(F.col("extra").isNull()).count() == 0
+
+
 def test_tune_read_partition_bytes_changes_scan_parallelism(spark, mgr):
     """A10 parity, A/B-measured: the knob consumes REAL metered-read task
     metrics and resizes the scan split; under a deliberately tiny split

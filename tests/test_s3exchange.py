@@ -300,13 +300,25 @@ def test_write_objects_match_source_partitions_across_batch_seams(spark, s3cfg):
 def test_key_slices_are_ingested_without_python_tasks(spark):
     """The reader/verifier key-slice frame comes from an Arrow table the
     JVM ingests itself: no PythonRDD anywhere in its lineage, and the
-    slices still deal every key out exactly once."""
+    slices still deal every key out exactly once. Up to
+    defaultParallelism slices, the scan already puts each row in its own
+    partition, so the plan has no Exchange; a wider slice count is spread
+    over exactly that many partitions by a repartition."""
     keys = [f"k{i:02d}" for i in range(16)]
-    kdf = S3X._key_slices(spark, keys, 4)
-    lineage = kdf._jdf.queryExecution().toRdd().toDebugString()
-    assert "PythonRDD" not in lineage, lineage
-    slices = sorted(r["keys"] for r in kdf.collect())
-    assert slices == sorted(keys[i::4] for i in range(4))
+    dp = spark.sparkContext.defaultParallelism
+    for n in sorted({1, min(4, dp), dp, dp + 1}):
+        kdf = S3X._key_slices(spark, keys, n)
+        lineage = kdf._jdf.queryExecution().toRdd().toDebugString()
+        assert "PythonRDD" not in lineage, lineage
+        plan = kdf._jdf.queryExecution().executedPlan().toString()
+        if n <= dp:
+            assert "Exchange" not in plan, plan
+            assert kdf.rdd.glom().map(len).collect() == [1] * n
+        else:
+            assert "Exchange" in plan, plan
+            assert kdf.rdd.getNumPartitions() == n
+        slices = sorted(r["keys"] for r in kdf.collect())
+        assert slices == sorted(keys[i::n] for i in range(n))
 
 
 def test_remove_raises_on_delete_objects_errors(spark, s3cfg, monkeypatch):
