@@ -8,8 +8,6 @@ B48/B49).
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd  # module-level: stringized pandas_udf hints resolve here
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -31,36 +29,3 @@ def norm(a: Column) -> Column:
 def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity; NULL-safe-ish (0-norm yields NULL, as in DuckDB)."""
     return dot(a, b) / (norm(a) * norm(b))
-
-
-def l2_distance(a: Column, b: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine_batch():
-    """Arrow-batched cosine for PAIR-verification hot paths: one numpy
-    row-wise dot/norm per batch instead of a per-row higher-order-function
-    walk. The Column `cosine` above is right for a scan-side expression
-    (stays in codegen, no Python boundary); this one wins when a candidate
-    generator emits millions of (a, b) vector pairs and the HOF form
-    becomes the dominant cost (measured ~4x on the sf0.1 SemDeDup pair
-    set). Returns a pandas_udf(double) of two array columns."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        A = np.vstack(a.to_numpy()).astype(np.float64)
-        B = np.vstack(b.to_numpy()).astype(np.float64)
-        num = np.einsum("ij,ij->i", A, B)
-        den = np.linalg.norm(A, axis=1) * np.linalg.norm(B, axis=1)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            out = num / den
-        return pd.Series(np.where(den == 0, np.nan, out))
-
-    return cos

@@ -2,8 +2,8 @@
 
 Images/audio/video are opaque ``binary`` payload columns plus a typed
 metadata struct. The Spark-side machinery — schema, content hashing,
-partition-parallel Arrow batching through ``mapInPandas``, batch shape — is
-real and tested. REAL zero-dependency decoders cover ``text/plain``
+partition-parallel Arrow batching, batch shape — is real and tested.
+REAL zero-dependency decoders cover ``text/plain``
 (:func:`decode_text`: charset detection + byte/char/line stats,
 oracle-checked by q47), binary PPM images (:func:`decode_ppm`), RIFF/WAVE
 audio (:func:`decode_wav`: PCM, and — round 11, the compressed-audio tier
@@ -23,15 +23,17 @@ non-MJPG compressed streams fail closed) and PERCEPTUAL audio codecs
 deployment replaces with an ffmpeg call of the same signature.
 
 Scale notes: payloads never pass through a groupBy — dedup is digest-first
-(hash the bytes, shuffle 32-byte digests). Feature extraction is a
-``mapInPandas`` scan: zero shuffle, Arrow-batched, and the batch size is
+(hash the bytes, shuffle 32-byte digests). Every decoder runs through ONE
+Arrow scan, :func:`_decode_scan` (``mapInArrow``: zero shuffle, output
+columns built from the feature schema's own field types), and every
+fixture planter through ONE more, :func:`_plant_scan`. The batch size is
 bounded by ``spark.sql.execution.arrow.maxRecordsPerBatch`` so a partition
 of large blobs cannot OOM an executor.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -67,7 +69,7 @@ def pin_for_sort(df: DataFrame) -> DataFrame:
 
     A global ``orderBy`` needs range-partition bounds, and Spark computes
     them with a SAMPLING pass that executes the sort's whole child — for
-    the media queries that child is the plant+decode ``mapInPandas``
+    the media queries that child is the plant+decode Arrow-scan
     chain, so every query paid its Python decode TWICE (measured on
     q319 at sf0.1: 2.81 s with the double execution, 1.29 s for the bare
     chain, 1.48 s with this checkpoint — 1.9x). The lazy localCheckpoint
@@ -111,6 +113,65 @@ def dedup_media(df: DataFrame) -> DataFrame:
     return df.join(keep, "media_id", "left_semi")
 
 
+#: Output of :func:`_plant_scan`: one planted payload per id.
+_PLANT_SCHEMA = StructType([
+    StructField("media_id", LongType(), False),
+    StructField("payload", BinaryType(), False),
+])
+
+
+def _decode_scan(
+    df: DataFrame, decode: Callable[[bytes | None], dict], schema: StructType
+) -> DataFrame:
+    """The one Arrow scan every feature extractor runs: ``decode(payload)``
+    per row of ``df``'s ``media_id``/``payload`` columns, through
+    ``mapInArrow`` — zero shuffle, one Arrow batch in memory per task
+    regardless of payload sizes (100 MB video blobs at 100 TB total).
+
+    ``schema`` is ``media_id`` followed by the decoder's output keys; each
+    feature column is built straight from its field's Arrow type, so a
+    ``None`` from the decoder is a null. A boolean ``ok`` renders as the
+    string ``"true"``/``"false"``."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    arrow_schema = to_arrow_schema(schema)
+    id_type, features = arrow_schema.field(0).type, list(arrow_schema)[1:]
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            decoded = [decode(p) for p in batch.column("payload").to_pylist()]
+            cols = [batch.column("media_id").cast(id_type)]
+            for field in features:
+                vals = [d[field.name] for d in decoded]
+                if field.name == "ok":
+                    vals = ["true" if v else "false" for v in vals]
+                cols.append(pa.array(vals, type=field.type))
+            yield pa.RecordBatch.from_arrays(cols, schema=arrow_schema)
+
+    return df.select("media_id", "payload").mapInArrow(run, schema)
+
+
+def _plant_scan(df: DataFrame, id_col: str, plant: Callable[[int], bytes]) -> DataFrame:
+    """The one Arrow scan every fixture planter runs: ``(media_id,
+    plant(media_id))`` per row, ``media_id`` being ``id_col`` cast to long.
+    The id scan is widened to one partition per core first, so the
+    per-row Python encoder never runs on a single core."""
+
+    def run(batches):
+        import pyarrow as pa
+
+        for batch in batches:
+            ids = batch.column("media_id")
+            payload = pa.array([plant(i) for i in ids.to_pylist()], type=pa.binary())
+            yield pa.RecordBatch.from_arrays([ids, payload], names=_PLANT_SCHEMA.names)
+
+    return widen_small_scan(
+        df.select(F.col(id_col).cast("long").alias("media_id"))
+    ).mapInArrow(run, _PLANT_SCHEMA)
+
+
 def decode_stub(payload: bytes) -> dict:
     """STUB decoder. Replace with a real decoder (PIL / torchaudio / ffmpeg)
     in deployment — same signature, same output keys.
@@ -119,13 +180,15 @@ def decode_stub(payload: bytes) -> dict:
     so tests exercise real values end-to-end.
     """
     if payload is None:
-        return {"ok": False, "width": None, "height": None, "n_frames": None}
+        return {"ok": False, "width": None, "height": None, "n_frames": None,
+                "n_bytes": 0}
     n = len(payload)
     return {
         "ok": True,
         "width": 16 + (n % 64),
         "height": 16 + ((n // 64) % 64),
         "n_frames": 1 + (n % 8),
+        "n_bytes": n,
     }
 
 
@@ -174,25 +237,9 @@ TEXT_FEATURE_SCHEMA = StructType([
 
 
 def extract_text_features(df: DataFrame) -> DataFrame:
-    """Decode text payloads + feature-extract via the same ``mapInPandas``
-    Arrow-batched scan as :func:`extract_features`, but with the REAL
-    :func:`decode_text` decoder — zero shuffle, one Arrow batch in memory
-    per task."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            decoded = [decode_text(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "charset": [d["charset"] for d in decoded],
-                "n_bytes": pd.array([d["n_bytes"] for d in decoded], dtype="Int64"),
-                "n_chars": pd.array([d["n_chars"] for d in decoded], dtype="Int64"),
-                "n_lines": pd.array([d["n_lines"] for d in decoded], dtype="Int64"),
-                "ascii_ratio": pd.array([d["ascii_ratio"] for d in decoded], dtype="Float64"),
-            })
-
-    return df.select("media_id", "payload").mapInPandas(run, schema=TEXT_FEATURE_SCHEMA)
+    """Decode text payloads + feature-extract through the one Arrow scan
+    (:func:`_decode_scan`) with the REAL :func:`decode_text` decoder."""
+    return _decode_scan(df, decode_text, TEXT_FEATURE_SCHEMA)
 
 
 FEATURE_SCHEMA = StructType([
@@ -206,27 +253,9 @@ FEATURE_SCHEMA = StructType([
 
 
 def extract_features(df: DataFrame) -> DataFrame:
-    """Decode + feature-extract via ``mapInPandas`` (Arrow-batched scan).
-
-    The iterator-of-batches signature keeps memory at one Arrow batch per
-    task regardless of partition size — the correct shape for 100 MB video
-    payloads at 100 TB total.
-    """
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            decoded = [decode_stub(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "ok": [str(d["ok"]).lower() for d in decoded],
-                "width": pd.array([d["width"] for d in decoded], dtype="Int32"),
-                "height": pd.array([d["height"] for d in decoded], dtype="Int32"),
-                "n_frames": pd.array([d["n_frames"] for d in decoded], dtype="Int32"),
-                "n_bytes": [len(p) if p is not None else 0 for p in pdf["payload"]],
-            })
-
-    return df.select("media_id", "payload").mapInPandas(run, schema=FEATURE_SCHEMA)
+    """Decode + feature-extract with the :func:`decode_stub` decoder
+    through the one Arrow scan (:func:`_decode_scan`)."""
+    return _decode_scan(df, decode_stub, FEATURE_SCHEMA)
 
 
 def frame_sample_stub(df: DataFrame, every_n: int = 2) -> DataFrame:
@@ -308,26 +337,9 @@ IMAGE_FEATURE_SCHEMA = StructType([
 
 
 def extract_image_features(df: DataFrame) -> DataFrame:
-    """Decode PPM payloads + feature-extract through the same Arrow-batched
-    ``mapInPandas`` scan as the other decoders — zero shuffle, one Arrow
-    batch in memory per task regardless of image sizes."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            decoded = [decode_ppm(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "ok": [str(d["ok"]).lower() for d in decoded],
-                "width": pd.array([d["width"] for d in decoded], dtype="Int32"),
-                "height": pd.array([d["height"] for d in decoded], dtype="Int32"),
-                "maxval": pd.array([d["maxval"] for d in decoded], dtype="Int32"),
-                "mean_r": pd.array([d["mean_r"] for d in decoded], dtype="Float64"),
-                "mean_g": pd.array([d["mean_g"] for d in decoded], dtype="Float64"),
-                "mean_b": pd.array([d["mean_b"] for d in decoded], dtype="Float64"),
-            })
-
-    return df.select("media_id", "payload").mapInPandas(run, schema=IMAGE_FEATURE_SCHEMA)
+    """Decode PPM payloads + feature-extract through the one Arrow scan
+    (:func:`_decode_scan`)."""
+    return _decode_scan(df, decode_ppm, IMAGE_FEATURE_SCHEMA)
 
 
 #: IMA ADPCM step-size table (89 entries) and index-adjust table — the
@@ -490,26 +502,9 @@ AUDIO_FEATURE_SCHEMA = StructType([
 
 
 def extract_audio_features(df: DataFrame) -> DataFrame:
-    """Decode WAV payloads + feature-extract through the same Arrow-batched
-    ``mapInPandas`` scan as the image/text decoders — zero shuffle."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            decoded = [decode_wav(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "ok": [str(d["ok"]).lower() for d in decoded],
-                "channels": pd.array([d["channels"] for d in decoded], dtype="Int32"),
-                "sample_rate": pd.array([d["sample_rate"] for d in decoded], dtype="Int32"),
-                "bits": pd.array([d["bits"] for d in decoded], dtype="Int32"),
-                "n_samples": pd.array([d["n_samples"] for d in decoded], dtype="Int32"),
-                "duration_s": pd.array([d["duration_s"] for d in decoded], dtype="Float64"),
-                "peak": pd.array([d["peak"] for d in decoded], dtype="Float64"),
-                "rms": pd.array([d["rms"] for d in decoded], dtype="Float64"),
-            })
-
-    return df.select("media_id", "payload").mapInPandas(run, schema=AUDIO_FEATURE_SCHEMA)
+    """Decode WAV payloads + feature-extract through the one Arrow scan
+    (:func:`_decode_scan`)."""
+    return _decode_scan(df, decode_wav, AUDIO_FEATURE_SCHEMA)
 
 
 def encode_adpcm_wav(samples: list[int], rate: int, block_align: int = 256) -> bytes:
@@ -606,25 +601,10 @@ def _plant_adpcm(media_id: int) -> bytes:
 
 
 def plant_adpcm_media(df: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic planted-ADPCM generator (Arrow-batched, zero shuffle)
+    """Deterministic planted-ADPCM generator (:func:`_plant_scan`)
     — fixture-side counterpart of :func:`extract_audio_features`'s
     compressed tier."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": [_plant_adpcm(int(i)) for i in pdf["media_id"]],
-            })
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-    return widen_small_scan(
-        df.select(F.col(id_col).cast("long").alias("media_id"))
-    ).mapInPandas(run, schema=schema)
+    return _plant_scan(df, id_col, _plant_adpcm)
 
 
 # ---------------------------------------------------------------------------
@@ -733,25 +713,10 @@ def _plant_g711(media_id: int, law: str) -> bytes:
 
 
 def plant_g711_media(df: DataFrame, id_col: str, law: str = "ulaw") -> DataFrame:
-    """Deterministic planted-G.711 generator (Arrow-batched, zero shuffle)
+    """Deterministic planted-G.711 generator (:func:`_plant_scan`)
     — fixture-side counterpart of :func:`extract_audio_features`'s
     companded tiers."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": [_plant_g711(int(i), law) for i in pdf["media_id"]],
-            })
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-    return widen_small_scan(
-        df.select(F.col(id_col).cast("long").alias("media_id"))
-    ).mapInPandas(run, schema=schema)
+    return _plant_scan(df, id_col, lambda i: _plant_g711(i, law))
 
 
 # ---------------------------------------------------------------------------
@@ -974,30 +939,9 @@ PNG_FEATURE_SCHEMA = StructType([
 
 
 def extract_png_features(df: DataFrame) -> DataFrame:
-    """Decode PNG payloads + feature-extract through the same Arrow-batched
-    ``mapInPandas`` scan as every other decoder — zero shuffle, one Arrow
-    batch in memory per task regardless of image sizes."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            decoded = [decode_png(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "ok": [str(d["ok"]).lower() for d in decoded],
-                "width": pd.array([d["width"] for d in decoded], dtype="Int32"),
-                "height": pd.array([d["height"] for d in decoded], dtype="Int32"),
-                "color_type": pd.array([d["color_type"] for d in decoded], dtype="Int32"),
-                "sum_r": pd.array([d["sum_r"] for d in decoded], dtype="Int64"),
-                "sum_g": pd.array([d["sum_g"] for d in decoded], dtype="Int64"),
-                "sum_b": pd.array([d["sum_b"] for d in decoded], dtype="Int64"),
-                "mean_r": pd.array([d["mean_r"] for d in decoded], dtype="Float64"),
-                "mean_g": pd.array([d["mean_g"] for d in decoded], dtype="Float64"),
-                "mean_b": pd.array([d["mean_b"] for d in decoded], dtype="Float64"),
-                "mean_a": pd.array([d["mean_a"] for d in decoded], dtype="Float64"),
-            })
-
-    return df.select("media_id", "payload").mapInPandas(run, schema=PNG_FEATURE_SCHEMA)
+    """Decode PNG payloads + feature-extract through the one Arrow scan
+    (:func:`_decode_scan`)."""
+    return _decode_scan(df, decode_png, PNG_FEATURE_SCHEMA)
 
 
 #: Planted-PNG fixture geometry shared by the Spark leg and the SQL oracle:
@@ -1021,27 +965,12 @@ def _plant_png(media_id: int) -> bytes:
 
 
 def plant_png_media(df: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic planted-PNG generator (Arrow-batched, zero shuffle):
+    """Deterministic planted-PNG generator (:func:`_plant_scan`):
     one synthetic RGB PNG per input id, built by the REAL encoder with the
     full five-filter cycle. Fixture-side counterpart of
     :func:`extract_png_features` — its planted statistics are what the
     q-entry's SQL oracle replays."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": [_plant_png(int(i)) for i in pdf["media_id"]],
-            })
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-    return widen_small_scan(
-        df.select(F.col(id_col).cast("long").alias("media_id"))
-    ).mapInPandas(run, schema=schema)
+    return _plant_scan(df, id_col, _plant_png)
 
 
 # ---------------------------------------------------------------------------
@@ -1066,31 +995,11 @@ JPEG_FEATURE_SCHEMA = StructType([
 
 
 def extract_jpeg_features(df: DataFrame) -> DataFrame:
-    """Decode baseline JPEG payloads + feature-extract through the same
-    Arrow-batched ``mapInPandas`` scan as every other decoder — zero
-    shuffle, one Arrow batch in memory per task."""
-    import pandas as pd
-
+    """Decode baseline JPEG payloads + feature-extract through the one
+    Arrow scan (:func:`_decode_scan`)."""
     from spark_s3_shuffle_spark.operators.jpeg import decode_jpeg
 
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            decoded = [decode_jpeg(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "ok": [str(d["ok"]).lower() for d in decoded],
-                "width": pd.array([d["width"] for d in decoded], dtype="Int32"),
-                "height": pd.array([d["height"] for d in decoded], dtype="Int32"),
-                "channels": pd.array([d["channels"] for d in decoded], dtype="Int32"),
-                "sum_r": pd.array([d["sum_r"] for d in decoded], dtype="Int64"),
-                "sum_g": pd.array([d["sum_g"] for d in decoded], dtype="Int64"),
-                "sum_b": pd.array([d["sum_b"] for d in decoded], dtype="Int64"),
-                "mean_r": pd.array([d["mean_r"] for d in decoded], dtype="Float64"),
-                "mean_g": pd.array([d["mean_g"] for d in decoded], dtype="Float64"),
-                "mean_b": pd.array([d["mean_b"] for d in decoded], dtype="Float64"),
-            })
-
-    return df.select("media_id", "payload").mapInPandas(run, schema=JPEG_FEATURE_SCHEMA)
+    return _decode_scan(df, decode_jpeg, JPEG_FEATURE_SCHEMA)
 
 
 #: Planted-JPEG geometry shared by the Spark leg and the SQL oracle: a
@@ -1117,26 +1026,11 @@ def _plant_jpeg(media_id: int) -> bytes:
 
 
 def plant_jpeg_media(df: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic planted-JPEG generator (Arrow-batched, zero shuffle):
+    """Deterministic planted-JPEG generator (:func:`_plant_scan`):
     one block-constant grayscale JPEG per input id, built by the REAL
     encoder (full DCT/quantize/Huffman path). Fixture-side counterpart of
     :func:`extract_jpeg_features`."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": [_plant_jpeg(int(i)) for i in pdf["media_id"]],
-            })
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-    return widen_small_scan(
-        df.select(F.col(id_col).cast("long").alias("media_id"))
-    ).mapInPandas(run, schema=schema)
+    return _plant_scan(df, id_col, _plant_jpeg)
 
 
 # ---------------------------------------------------------------------------
@@ -1449,29 +1343,9 @@ VIDEO_FEATURE_SCHEMA = StructType([
 
 
 def extract_video_features(df: DataFrame) -> DataFrame:
-    """Decode uncompressed-AVI payloads through the same Arrow-batched
-    ``mapInPandas`` scan as every other decoder — zero shuffle."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            decoded = [decode_avi(p) for p in pdf["payload"]]
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "ok": [str(d["ok"]).lower() for d in decoded],
-                "width": pd.array([d["width"] for d in decoded], dtype="Int32"),
-                "height": pd.array([d["height"] for d in decoded], dtype="Int32"),
-                "n_frames": pd.array([d["n_frames"] for d in decoded], dtype="Int32"),
-                "fps": pd.array([d["fps"] for d in decoded], dtype="Float64"),
-                "sum_r": pd.array([d["sum_r"] for d in decoded], dtype="Int64"),
-                "sum_g": pd.array([d["sum_g"] for d in decoded], dtype="Int64"),
-                "sum_b": pd.array([d["sum_b"] for d in decoded], dtype="Int64"),
-                "mean_r": pd.array([d["mean_r"] for d in decoded], dtype="Float64"),
-                "mean_g": pd.array([d["mean_g"] for d in decoded], dtype="Float64"),
-                "mean_b": pd.array([d["mean_b"] for d in decoded], dtype="Float64"),
-            })
-
-    return df.select("media_id", "payload").mapInPandas(run, schema=VIDEO_FEATURE_SCHEMA)
+    """Decode AVI payloads (raw DIB, MJPEG and RLE8 frames) through the one
+    Arrow scan (:func:`_decode_scan`)."""
+    return _decode_scan(df, decode_avi, VIDEO_FEATURE_SCHEMA)
 
 
 #: Planted-AVI geometry (q320 oracle contract): 4 frames of 16x8, frame f
@@ -1491,24 +1365,9 @@ def _plant_avi(media_id: int) -> bytes:
 
 
 def plant_avi_media(df: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic planted-AVI generator (Arrow-batched, zero shuffle) —
+    """Deterministic planted-AVI generator (:func:`_plant_scan`) —
     fixture-side counterpart of :func:`extract_video_features`."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": [_plant_avi(int(i)) for i in pdf["media_id"]],
-            })
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-    return widen_small_scan(
-        df.select(F.col(id_col).cast("long").alias("media_id"))
-    ).mapInPandas(run, schema=schema)
+    return _plant_scan(df, id_col, _plant_avi)
 
 
 #: Planted-MJPEG geometry (q321 oracle contract): 4 frames, each a 32x16
@@ -1537,26 +1396,11 @@ def _plant_avi_mjpeg(media_id: int) -> bytes:
 
 
 def plant_avi_mjpeg_media(df: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic planted-MJPEG generator (Arrow-batched, zero shuffle):
+    """Deterministic planted-MJPEG generator (:func:`_plant_scan`):
     each id becomes a 4-frame MJPEG AVI whose '00dc' frames are REAL
     encoder output (full DCT/quantize/Huffman path per frame). Fixture-
     side counterpart of :func:`extract_video_features`'s MJPG tier."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": [_plant_avi_mjpeg(int(i)) for i in pdf["media_id"]],
-            })
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-    return widen_small_scan(
-        df.select(F.col(id_col).cast("long").alias("media_id"))
-    ).mapInPandas(run, schema=schema)
+    return _plant_scan(df, id_col, _plant_avi_mjpeg)
 
 
 def encode_avi_rle8(
@@ -1667,22 +1511,7 @@ def _plant_avi_rle8(media_id: int) -> bytes:
 
 
 def plant_avi_rle8_media(df: DataFrame, id_col: str) -> DataFrame:
-    """Deterministic planted-RLE8 generator (Arrow-batched, zero shuffle)
+    """Deterministic planted-RLE8 generator (:func:`_plant_scan`)
     — fixture-side counterpart of :func:`extract_video_features`'s
     palette tier."""
-    import pandas as pd
-
-    def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame({
-                "media_id": pdf["media_id"],
-                "payload": [_plant_avi_rle8(int(i)) for i in pdf["media_id"]],
-            })
-
-    schema = StructType([
-        StructField("media_id", LongType(), False),
-        StructField("payload", BinaryType(), False),
-    ])
-    return widen_small_scan(
-        df.select(F.col(id_col).cast("long").alias("media_id"))
-    ).mapInPandas(run, schema=schema)
+    return _plant_scan(df, id_col, _plant_avi_rle8)

@@ -177,15 +177,6 @@ def cube_agg(df: DataFrame, keys: Sequence[str], aggs: Sequence[Column]) -> Data
 # Sort / limit / top-k (B25–B27)
 # ---------------------------------------------------------------------------
 
-def total_sort(df: DataFrame, *order: Column | str) -> DataFrame:
-    """Total-order sort = RangePartitioner sample job + range exchange +
-    per-partition sort — exactly the reference's TeraSort path
-    (S3ShuffleManagerTest.scala:146-174, dep.keyOrdering →
-    ExternalSorter at S3ShuffleReader.scala:141-149), with spill handled by
-    Spark's external sorter."""
-    return df.orderBy(*order)
-
-
 def sort_within_partitions(df: DataFrame, num_partitions: int, partition_cols: Sequence[str | Column], *order: Column | str) -> DataFrame:
     """repartitionByRange + sortWithinPartitions: the explicit-partition-count
     sortByKey analogue (S3ShuffleManagerTest.scala:162). Produces globally
@@ -298,10 +289,6 @@ def union_all(*dfs: DataFrame) -> DataFrame:
     for d in dfs[1:]:
         out = out.unionByName(d)
     return out
-
-
-def union_distinct(*dfs: DataFrame) -> DataFrame:
-    return union_all(*dfs).distinct()
 
 
 def intersect(a: DataFrame, b: DataFrame) -> DataFrame:

@@ -1367,7 +1367,8 @@ def q46(spark, sf_dir):
                          ELSE length(regexp_replace(text, '[^\x00-\x7f]', '', 'g')) * 1.0 / length(text) END, 4) AS ascii_ratio
        FROM documents ORDER BY media_id""",
     "B51 multimodal decode + feature extraction with a REAL text/plain"
-    " decoder through the mapInPandas Arrow path: strict-decode charset"
+    " decoder through the one media Arrow scan (multimodal._decode_scan,"
+    " mapInArrow): strict-decode charset"
     " detection (ascii/utf-8/binary) + byte/char/line stats per payload —"
     " zero shuffle, batch-bounded memory. Round 10: the sibling decoders"
     " are real too — PPM/WAV (round 8), PNG/JPEG/uncompressed-AVI"
@@ -7830,8 +7831,8 @@ GROUP BY doc_id ORDER BY media_id"""
     "B51 round-10: REAL PNG decode — stdlib-zlib inflate, CRC-validated"
     " chunk walk, full five-filter reconstruction (every planted image"
     " cycles None/Sub/Up/Average/Paeth across its rows), per-channel"
-    " sums/means — through the same Arrow-batched mapInPandas scan as the"
-    " PPM/WAV/text decoders (multimodal.decode_png). FULL oracle: each"
+    " sums/means — through the one Arrow scan every media decoder runs"
+    " (multimodal._decode_scan over decode_png). FULL oracle: each"
     " doc_id becomes a 16x8 RGB PNG whose pixel channels are affine"
     " functions of (id, x, y) mod 256, so DuckDB replays the exact"
     " per-channel sums over a 16x8 integer grid — the decoder's output is"
@@ -7862,8 +7863,8 @@ GROUP BY doc_id ORDER BY media_id"""
     _Q319_SQL,
     "B51 round-10 (second seam): REAL baseline JPEG decode — numpy"
     " DCT/Huffman/zigzag/dequant per ITU-T T.81 with the Annex K table"
-    " set (operators/jpeg.py) — through the same Arrow-batched"
-    " mapInPandas scan as the PNG/PPM/WAV/text decoders. FULL oracle via"
+    " set (operators/jpeg.py) — through the one Arrow scan every media"
+    " decoder runs (multimodal._decode_scan). FULL oracle via"
     " the lossless tier: each doc_id becomes a 32x16 grayscale JPEG of"
     " 4x2 CONSTANT 8x8 blocks under a flat step-8 quant table, where the"
     " only nonzero coefficient per block is DC = 8*(v-128) and its"
@@ -7906,8 +7907,10 @@ GROUP BY doc_id ORDER BY media_id"""
     " per-channel sums over all frames; compressed '00dc' streams fail"
     " closed — the one remaining deployment stub). FULL oracle: each"
     " doc_id becomes a 4-frame 16x8 clip whose frame colors are affine"
-    " functions of (id, frame), replayed in SQL over range(4). Zero"
-    " shuffle; scales as a pure scan.",
+    " functions of (id, frame), replayed in SQL over range(4). Planted"
+    " and decoded through the one media Arrow scan each"
+    " (multimodal._plant_scan / _decode_scan). Zero shuffle; scales as a"
+    " pure scan.",
 )
 def q320(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -7934,9 +7937,9 @@ GROUP BY doc_id ORDER BY media_id"""
     "B51/B75 round-11 (VERDICT r10 item 5): COMPRESSED-video decode, the"
     " MJPEG tier — an 'MJPG' AVI stream's '00dc' frames are each a"
     " complete baseline JPEG, decoded per-frame through the round-10"
-    " operators/jpeg.py codec inside the same Arrow-batched mapInPandas"
-    " scan (multimodal.decode_avi MJPG branch; writer counterpart"
-    " encode_avi_mjpeg). FULL oracle via the lossless tier: each doc_id"
+    " operators/jpeg.py codec inside the one media Arrow scan"
+    " (multimodal._decode_scan over decode_avi's MJPG branch; writer"
+    " counterpart encode_avi_mjpeg). FULL oracle via the lossless tier: each doc_id"
     " becomes a 4-frame clip of 32x16 grayscale block-constant JPEGs"
     " under the flat step-8 quant table (the q319 determinism recipe"
     " extended over a frame axis), so DuckDB replays all-frame channel"
@@ -7967,8 +7970,9 @@ FROM documents ORDER BY media_id"""
     " per-block through the public IMA step/index tables"
     " (multimodal.decode_wav ADPCM branch, shared _ima_step recurrence;"
     " writer counterpart encode_adpcm_wav), honouring the fact chunk,"
-    " inside the same Arrow-batched mapInPandas scan as every other"
-    " decoder. FULL oracle via the lossless tier: each doc_id becomes a"
+    " inside the one Arrow scan every media decoder runs"
+    " (multimodal._decode_scan). FULL oracle via the lossless tier: each"
+    " doc_id becomes a"
     " 4-block mono clip whose block headers seed predictor +/-M (M ="
     " 512*((id%63)+1)) at step index 0, where every 0x08 data byte runs"
     " one subtract and one add step of delta 7>>3 == 0 — the full"
@@ -8050,8 +8054,9 @@ FROM documents ORDER BY media_id"""
     " format tag 0x0007, one companded byte per sample expanded through"
     " the public segment/mantissa construction (Sun g711.c convention,"
     " BIAS 132; multimodal._ulaw_to_linear / the 256-entry import-time"
-    " table), inside the same Arrow-batched mapInPandas scan as every"
-    " other decoder. FULL oracle: each doc_id becomes a mono 8 kHz 20 ms"
+    " table), inside the one Arrow scan every media decoder runs"
+    " (multimodal._decode_scan). FULL oracle: each doc_id becomes a mono"
+    " 8 kHz 20 ms"
     " clip alternating +/- the segment-7 level for mantissa id%16 —"
     " linear 1024*(id%16)+16764, whose /32768 provably never lands on a"
     " 6-decimal rounding tie (exhaustively asserted in tests), so"
@@ -8089,7 +8094,8 @@ FROM documents ORDER BY media_id"""
     " digits, replayed by DuckDB from integer arithmetic. Covers the"
     " A-law expansion, stereo frame accounting, and (with q324) both"
     " G.711 laws; perceptual codecs (mp3/aac/opus) remain the only"
-    " audio deployment stub. Zero shuffle; scales as a pure scan.",
+    " audio deployment stub. Decoded in the one media Arrow scan"
+    " (multimodal._decode_scan). Zero shuffle; scales as a pure scan.",
 )
 def q325(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
@@ -8117,8 +8123,8 @@ GROUP BY doc_id ORDER BY media_id"""
     " tier — Microsoft 8-bit run-length frames ('MRLE'/biCompression 1,"
     " the Windows Metafile spec) decoded opcode-by-opcode (encoded runs,"
     " absolute mode, EOL/EOB, delta skips defaulting to palette 0)"
-    " against the strf RGBQUAD palette, inside the same Arrow-batched"
-    " mapInPandas scan (multimodal._decode_rle8_frame; writer"
+    " against the strf RGBQUAD palette, inside the one media Arrow scan"
+    " (multimodal._decode_scan over _decode_rle8_frame; writer"
     " counterpart encode_avi_rle8). Channel sums are palette-weighted"
     " index HISTOGRAMS — O(palette) memory per frame regardless of"
     " resolution. FULL oracle: each doc_id becomes a 4-frame 16x8 clip"

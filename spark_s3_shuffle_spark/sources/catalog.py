@@ -100,7 +100,7 @@ def widen_small_scan(df: DataFrame) -> DataFrame:
     cluster has cores.
 
     A small Parquet file is one scan split, so every downstream
-    ``mapInPandas`` stage — where the cost is per-row Python CPU, not I/O —
+    Python map stage — where the cost is per-row Python CPU, not I/O —
     runs on a single core (the r11 profile measured q321's whole
     plant+decode chain serialized on 1 of 32 cores). Round-robin
     repartition of the *pre-explode/pre-decode* rows — the narrow side of

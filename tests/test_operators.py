@@ -668,6 +668,42 @@ def test_frame_sampling_shape(spark):
     assert len(frames) == len(range(0, n_frames, 2))
 
 
+_JUNK = b"\x00junk\xff" * 4
+
+
+@pytest.mark.parametrize("extract, schema, junk_is_media", [
+    ("extract_features", "FEATURE_SCHEMA", True),  # the stub fakes any bytes
+    ("extract_text_features", "TEXT_FEATURE_SCHEMA", True),  # latin-1 'binary'
+    ("extract_image_features", "IMAGE_FEATURE_SCHEMA", False),
+    ("extract_audio_features", "AUDIO_FEATURE_SCHEMA", False),
+    ("extract_png_features", "PNG_FEATURE_SCHEMA", False),
+    ("extract_jpeg_features", "JPEG_FEATURE_SCHEMA", False),
+    ("extract_video_features", "VIDEO_FEATURE_SCHEMA", False),
+])
+def test_extractors_survive_null_and_junk_payloads(spark, extract, schema, junk_is_media):
+    """A NULL payload and a junk one ride every extractor's Arrow scan as
+    rows, never as a task failure, under the declared schema. A rejected
+    payload has ok='false' and a null in every nullable feature, except
+    n_bytes, the payload's byte count (0 for NULL)."""
+    # an int id: the scan casts any integer id to the schema's long
+    df = spark.createDataFrame([(1, None), (2, _JUNK)], "media_id int, payload binary")
+    feats = getattr(MM, extract)(df)
+    assert feats.schema == getattr(MM, schema)
+    got = {r["media_id"]: r.asDict() for r in feats.collect()}
+    rejected = [(1, 0)] if junk_is_media else [(1, 0), (2, len(_JUNK))]
+    for mid, n_bytes in rejected:
+        row = got[mid]
+        assert row.get("ok", "false") == "false", row
+        assert row.get("n_bytes", n_bytes) == n_bytes, row
+        assert all(
+            row[f.name] is None
+            for f in feats.schema.fields if f.nullable and f.name != "n_bytes"
+        ), row
+    if junk_is_media:
+        assert got[2]["n_bytes"] == len(_JUNK)
+        assert got[2].get("ok", "true") == "true" and got[2].get("charset", "binary") == "binary"
+
+
 def test_connected_components_string_ids_long_chain(spark):
     """ADVICE r2: convergence must be id-type-agnostic. A 5-node string-id
     chain needs 2+ propagation rounds; a numeric-sum fingerprint would
@@ -2144,8 +2180,8 @@ def test_png_codec_roundtrip_all_color_types():
 
 
 def test_png_decode_spark_path(spark):
-    """The planted-PNG generator + extractor compose through the Arrow
-    mapInPandas path with exact planted statistics, and corrupt payloads
+    """The planted-PNG generator + extractor compose through the one
+    Arrow scan with exact planted statistics, and corrupt payloads
     ride the same scan as ok=False rows (no task failure)."""
     df = spark.createDataFrame([(5,), (1234,)], "doc_id long")
     feats = {
@@ -2210,8 +2246,8 @@ def test_jpeg_codec_tiers():
 
 
 def test_jpeg_decode_spark_path(spark):
-    """Planted-JPEG generator + extractor through the Arrow mapInPandas
-    path: exact planted sums, and corrupt payloads ride the same scan as
+    """Planted-JPEG generator + extractor through the one Arrow scan:
+    exact planted sums, and corrupt payloads ride the same scan as
     ok=False rows."""
     df = spark.createDataFrame([(3,), (7331,)], "doc_id long")
     feats = {
@@ -2279,8 +2315,8 @@ def test_avi_codec_roundtrip_and_failure_modes():
 
 
 def test_avi_decode_spark_path(spark):
-    """Planted-AVI generator + extractor through the Arrow mapInPandas
-    path with exact planted statistics."""
+    """Planted-AVI generator + extractor through the one Arrow scan,
+    with exact planted statistics."""
     df = spark.createDataFrame([(11,), (4242,)], "doc_id long")
     feats = {
         r["media_id"]: r
@@ -2352,8 +2388,8 @@ def test_mjpeg_avi_lossy_frames_decode_with_tolerance():
 
 
 def test_mjpeg_decode_spark_path(spark):
-    """Planted-MJPEG generator + extractor through the Arrow mapInPandas
-    path with exact planted statistics (the q321 contract)."""
+    """Planted-MJPEG generator + extractor through the one Arrow scan,
+    with exact planted statistics (the q321 contract)."""
     df = spark.createDataFrame([(13,), (999,)], "doc_id long")
     feats = {
         r["media_id"]: r

@@ -1,13 +1,20 @@
 """t1 smoke: every registry query runs at sf0.001 with a stable schema.
-(The value-level oracle check is tools/check_correctness.py / the driver's
-t2 gate.) Also covers B2: parquet sink write + re-read unchanged."""
+(The full value-level oracle sweep is tools/check_correctness.py / the
+driver's t2 gate; the media family and q161 are value-checked here, through
+the same comparator.) Also covers B2: parquet sink write + re-read
+unchanged."""
 
+import os
+import sys
 import tempfile
 
 import pytest
 
 from spark_s3_shuffle_spark.queries.registry import QUERIES
 from spark_s3_shuffle_spark.sources.catalog import write_parquet
+
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "tools"))
+from check_correctness import duck_connection, rows_canon  # noqa: E402
 
 
 @pytest.mark.parametrize("name", sorted(QUERIES))
@@ -23,12 +30,6 @@ def test_q161_grouped_pairs_equivalent_to_self_join(spark, sf_dir):
     same query as the lineitem self-join. Both must emit the same rows
     (same pairs, same multiplicity — duplicate partkeys within one order
     included), in the same order."""
-    import os
-    import sys
-
-    sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
-    from check_correctness import duck_connection, rows_canon
-
     spec = QUERIES["q161_basket_cooccurrence"]
     sdf = spec.builder(spark, sf_dir)
     grouped = [tuple(r) for r in sdf.collect()]
@@ -38,6 +39,34 @@ def test_q161_grouped_pairs_equivalent_to_self_join(spark, sf_dir):
     assert rows_canon(sdf.columns, grouped) == rows_canon(sdf.columns, joined) and grouped
     # ORDER BY n DESC, p1, p2 is a total order: the row order must match too
     assert grouped == joined
+
+
+#: The media tier: every query plants (or reads) payloads and decodes them
+#: through multimodal's one Arrow scan.
+MEDIA_QUERIES = [
+    "q47_multimodal_features",
+    "q318_png_decode",
+    "q319_jpeg_decode",
+    "q320_video_decode",
+    "q321_mjpeg_video_decode",
+    "q322_adpcm_audio_decode",
+    "q324_ulaw_audio_decode",
+    "q325_alaw_audio_decode",
+    "q326_rle8_video_decode",
+]
+
+
+@pytest.mark.parametrize("name", MEDIA_QUERIES)
+def test_media_query_matches_duckdb_oracle(spark, sf_dir, name):
+    """Each media query's decoded features equal its DuckDB oracle's
+    replay of the planted statistics — values, not only a row count."""
+    spec = QUERIES[name]
+    sdf = spec.builder(spark, sf_dir)
+    rows = [tuple(r) for r in sdf.collect()]
+    res = duck_connection(sf_dir).execute(spec.oracle)
+    cols = [d[0] for d in res.description]
+    assert sorted(sdf.columns) == sorted(cols)
+    assert rows and rows_canon(sdf.columns, rows) == rows_canon(cols, res.fetchall())
 
 
 def test_parquet_sink_roundtrip(spark, sf_dir):
