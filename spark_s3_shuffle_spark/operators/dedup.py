@@ -28,14 +28,13 @@ here bounds candidate pairs by bucketing before any pairwise work.
 
 from __future__ import annotations
 
-import hashlib
-
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from spark_s3_shuffle_spark.operators import similarity as SIM
 from spark_s3_shuffle_spark.operators.text import shingles
 from spark_s3_shuffle_spark.sources.catalog import widen_small_scan
 
@@ -710,15 +709,25 @@ def simhash_dedup(
 # Embedding-cosine near-dup (B48 embedding variant)
 # ---------------------------------------------------------------------------
 
-def _plane_signs(dim: int, plane: int, seed: int) -> list[float]:
-    """Deterministic ±1 plane components — derived from sha256 of
-    (plane, dim-index, seed) so every executor/ session agrees without any
-    RNG state; embedded as literals so per-row work is just a dot product."""
-    out = []
-    for i in range(dim):
-        digest = hashlib.sha256(f"{plane}:{i}:{seed}".encode()).digest()
-        out.append(1.0 if digest[0] % 2 == 0 else -1.0)
-    return out
+def _cos_pairs(L: np.ndarray, R: np.ndarray, threshold: float):
+    """Blocked exact-cosine scoring of every row of ``L`` against every row
+    of ``R``: returns ``(rows, cols, cos)`` arrays for the pairs whose
+    4-decimal cosine is ≥ ``threshold`` (``rows`` index ``L``, ``cols``
+    index ``R``). A zero-norm vector scores NaN and never passes. L is cut
+    into row blocks so each similarity block stays ≤ 64 MB of float64."""
+    lnorm = np.linalg.norm(L, axis=1)
+    rnorm = np.linalg.norm(R, axis=1)
+    bs = max(1, min(len(L), 8_388_608 // max(1, len(R))))
+    found = []
+    for i0 in range(0, len(L), bs):
+        i1 = min(len(L), i0 + bs)
+        sims = L[i0:i1] @ R.T
+        den = lnorm[i0:i1, None] * rnorm[None, :]
+        with np.errstate(divide="ignore", invalid="ignore"):
+            cos = np.where(den == 0, np.nan, sims / den)
+        rows, cols = np.nonzero(np.round(cos, 4) >= threshold)
+        found.append((rows + i0, cols, cos[rows, cols]))
+    return tuple(np.concatenate(parts) for parts in zip(*found))
 
 
 def _verify_pairs_within_groups(
@@ -750,9 +759,8 @@ def _verify_pairs_within_groups(
     groupBy's own hash exchange spreads a hot cell's s² block pairs
     across the cluster (no explicit repartition is added; the aggregation
     exchange that must exist anyway is the spreading mechanism). Groups
-    at or under
-    the limit have s=1 and take the exact single-group path, so results
-    (and oracle hashes) at small scale are bit-identical.
+    at or under the limit have s=1 and take the exact single-group path,
+    so results (and oracle hashes) at small scale are bit-identical.
 
     A pair that co-occurs in several groups (soft assignment, multiple
     bands) emits once per group, possibly ulp-apart under different dgemm
@@ -768,60 +776,27 @@ def _verify_pairs_within_groups(
          "_c": pd.Series(dtype="float64")}
     )
 
+    def _vectors(pdf: pd.DataFrame) -> np.ndarray:
+        return np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
+
     def _within(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("_id")
         ids = pdf["_id"].to_numpy()
-        n = len(ids)
-        if n < 2:
+        if len(ids) < 2:
             return empty
-        X = np.vstack(pdf["_v"].to_numpy()).astype(np.float64)
-        norms = np.linalg.norm(X, axis=1)
-        out = []
-        bs = max(1, min(n, 8_388_608 // n))  # sim block <= 64 MB of float64
-        for i0 in range(0, n, bs):
-            i1 = min(n, i0 + bs)
-            sims = X[i0:i1] @ X.T
-            den = norms[i0:i1, None] * norms[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, np.nan, sims / den)
-            rows, cols = np.nonzero(np.round(cos, 4) >= thr)
-            keep = cols > rows + i0  # strict upper triangle: a < b
-            rows, cols = rows[keep], cols[keep]
-            if len(rows):
-                out.append(
-                    pd.DataFrame(
-                        {"a": ids[rows + i0], "b": ids[cols], "_c": cos[rows, cols]}
-                    )
-                )
-        return pd.concat(out, ignore_index=True) if out else empty
+        X = _vectors(pdf)
+        rows, cols, cos = _cos_pairs(X, X, thr)
+        keep = cols > rows  # strict upper triangle: a < b
+        return pd.DataFrame({"a": ids[rows[keep]], "b": ids[cols[keep]], "_c": cos[keep]})
 
     def _cross(lpdf: pd.DataFrame, rpdf: pd.DataFrame) -> pd.DataFrame:
         lids = lpdf["_id"].to_numpy()
         rids = rpdf["_id"].to_numpy()
         if not len(lids) or not len(rids):
             return empty
-        L = np.vstack(lpdf["_v"].to_numpy()).astype(np.float64)
-        R = np.vstack(rpdf["_v"].to_numpy()).astype(np.float64)
-        lnorm = np.linalg.norm(L, axis=1)
-        rnorm = np.linalg.norm(R, axis=1)
-        out = []
-        bs = max(1, min(len(lids), 8_388_608 // max(1, len(rids))))
-        for i0 in range(0, len(lids), bs):
-            i1 = min(len(lids), i0 + bs)
-            sims = L[i0:i1] @ R.T
-            den = lnorm[i0:i1, None] * rnorm[None, :]
-            with np.errstate(divide="ignore", invalid="ignore"):
-                cos = np.where(den == 0, np.nan, sims / den)
-            rows, cols = np.nonzero(np.round(cos, 4) >= thr)
-            if len(rows):
-                la, rb = lids[rows + i0], rids[cols]
-                out.append(
-                    pd.DataFrame(
-                        {"a": np.minimum(la, rb), "b": np.maximum(la, rb),
-                         "_c": cos[rows, cols]}
-                    )
-                )
-        return pd.concat(out, ignore_index=True) if out else empty
+        rows, cols, cos = _cos_pairs(_vectors(lpdf), _vectors(rpdf), thr)
+        la, rb = lids[rows], rids[cols]
+        return pd.DataFrame({"a": np.minimum(la, rb), "b": np.maximum(la, rb), "_c": cos})
 
     def _group_pairs(pdf: pd.DataFrame) -> pd.DataFrame:
         gi, gj = int(pdf["_gi"].iloc[0]), int(pdf["_gj"].iloc[0])
@@ -903,39 +878,17 @@ def embedding_near_dup_pairs(
 
     ``dim`` is the embedding dimensionality and must be supplied (array
     columns carry no length in the schema; peeking a row would put a
-    driver-side action inside plan construction).
+    driver-side action inside plan construction). ``num_planes`` must be a
+    multiple of ``bands`` (``ValueError`` otherwise), as for every sign-LSH
+    key builder (similarity.with_lsh_keys, lsh_topk).
     """
     if dim is None:
         raise ValueError(
             "embedding_near_dup_pairs requires dim= (array<float> columns "
             "carry no length in the schema)"
         )
-    if num_planes % bands:
-        raise ValueError("num_planes must be divisible by bands")
-    ppb = num_planes // bands
-
+    band_keys = SIM._band_keys_udf(dim, num_planes, bands, seed)
     base = df.select(F.col(id_col).alias("_id"), F.col(vec_col).alias("_v"))
-
-    # One numpy matmul per Arrow batch computes ALL plane dots at once —
-    # the Column formulation (num_planes × zip_with+aggregate higher-order
-    # fns per row) measured ~10× slower at 32 planes. The plane matrix is a
-    # deterministic closure constant shipped to workers once.
-    from pyspark.sql.functions import pandas_udf
-
-    planes = np.array(
-        [_plane_signs(dim, p, seed) for p in range(num_planes)], dtype=np.float64
-    ).T  # (dim, num_planes)
-    weights = 1 << np.arange(ppb, dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def band_keys(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)  # (batch, dim)
-        bits = (X @ planes) >= 0                         # (batch, num_planes)
-        out = np.empty((X.shape[0], bands), dtype=np.int64)
-        for b in range(bands):
-            out[:, b] = bits[:, b * ppb : (b + 1) * ppb] @ weights
-        return pd.Series(list(out))
-
     banded = base.select("_id", F.posexplode(band_keys(F.col("_v"))).alias("band", "bkey"))
     if max_bucket_size:
         # window cap, not groupBy+semi-join — the semi-join's build side
@@ -1010,35 +963,13 @@ def semantic_dedup_pairs(
     Returns (a, b, cos) with a < b and cos ≥ threshold, cosines rounded
     to 4 decimals.
     """
-    from pyspark.sql.functions import pandas_udf
-
     if centroids is None:
-        from spark_s3_shuffle_spark.operators.similarity import (
-            auto_dedup_cells,
-            kmeans_like_centroids,
-        )
-
-        if num_cells is None:
-            num_cells = auto_dedup_cells(df.count())
-        cents = kmeans_like_centroids(
-            df, num_cells=num_cells, id_col=id_col, vec_col=vec_col, iterations=iterations
-        )
         # O(num_cells) — offline build step; pass ``centroids`` to amortize
-        # it per corpus version (fit_semantic_centroids), as an ANN service
-        # amortizes its index build.
-        centroids = [(r["cell"], r["centroid"]) for r in cents.collect()]
-    M = np.asarray([c for _, c in centroids], dtype=np.float64)
-    Mn = M / (np.linalg.norm(M, axis=1, keepdims=True) + 1e-12)
-    cell_ids = np.asarray([cid for cid, _ in centroids], dtype=np.int64)
-    p = min(max(1, probes), len(cell_ids))
-
-    @pandas_udf("array<long>")
-    def topp_cells(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)
-        Xn = X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-12)
-        sims = Xn @ Mn.T
-        top = np.argpartition(-sims, p - 1, axis=1)[:, :p]
-        return pd.Series(list(cell_ids[top]))
+        # it per corpus version, as an ANN service amortizes its index build.
+        centroids = fit_semantic_centroids(df, id_col, vec_col, num_cells, iterations)
+    topp_cells = SIM._nearest_cell_udf(
+        [c for _, c in centroids], [cid for cid, _ in centroids], top=probes
+    )
 
     base = df.select(
         F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
@@ -1064,15 +995,8 @@ def semantic_dedup_pairs(
             .select("cell")
         )
         assigned = assigned.join(ok, "cell", "left_semi")
-    # Verification happens WHERE the vectors already are: one join keys the
-    # vectors by cell (shuffle = |assigned| vector rows, linear in N), then
-    # each cell verifies all its pairs in a single Arrow batch via a blocked
-    # BLAS matmul — no candidate-pair rows ever shuffle. The round-7 sf10
-    # tail bench measured the previous shape (materialize (a,b) pairs,
-    # distinct, join the 64-dim vectors onto BOTH sides) at 410M shuffled
-    # pair records / 190 GB spilled for a 200k corpus — the pair SHUFFLE was
-    # 26x superlinear while the pair FLOPs (linear, ~6.5 GFLOP of dgemm)
-    # were never the problem.
+    # one join keys the vectors by cell (shuffle = |assigned| vector rows,
+    # linear in N); each cell then verifies its pairs in place
     withv = assigned.join(base, "_id")
     return _verify_pairs_within_groups(withv, ["cell"], threshold, max_group_rows)
 
@@ -1089,14 +1013,9 @@ def fit_semantic_centroids(
     ``semantic_dedup_pairs(..., centroids=...)`` — identical amortization
     contract as the IVF index build (similarity.build_ivf_index).
     ``num_cells=None`` auto-sizes to the corpus (auto_dedup_cells)."""
-    from spark_s3_shuffle_spark.operators.similarity import (
-        auto_dedup_cells,
-        kmeans_like_centroids,
-    )
-
     if num_cells is None:
-        num_cells = auto_dedup_cells(df.count())
-    cents = kmeans_like_centroids(
+        num_cells = SIM.auto_dedup_cells(df.count())
+    cents = SIM.kmeans_like_centroids(
         df, num_cells=num_cells, id_col=id_col, vec_col=vec_col, iterations=iterations
     )
     return [(r["cell"], r["centroid"]) for r in cents.collect()]

@@ -1,35 +1,50 @@
 """Similarity search over embedding columns (SURVEY §2.2 B49; north-star).
 
-Two tiers:
+Three top-k tiers:
 
 - ``cosine_topk``      — brute-force exact top-k: one scan, per-partition
                          k-heaps via TakeOrderedAndProject. The correctness
                          baseline; O(n·d) work, O(k) result movement.
-- ``ivf_topk``         — IVF-style approximate top-k: assign every vector to
-                         its nearest of C centroids (broadcast), prune to
-                         the probe's ``nprobe`` nearest cells, then
-                         brute-force only within those cells. The scan is
-                         cut by ~nprobe/C; this is the 100 TB path.
+- IVF                  — ``build_ivf_index`` assigns every vector to its
+                         nearest of C centroids once per corpus version;
+                         ``ivf_probe_vector`` (one probe) and
+                         ``ivf_batch_topk_join`` (a probe table) then
+                         brute-force only the ``nprobe`` cells nearest each
+                         probe. The scan is cut by ~nprobe/C; this is the
+                         100 TB path.
 - ``lsh_topk``         — sign-LSH banded variant sharing the plane family
-                         used by embedding near-dup: precomputed band keys,
-                         any-band-match candidate filter, exact rescoring.
+                         used by embedding near-dup: precomputed band keys
+                         (``with_lsh_keys``), any-band-match candidate
+                         filter, exact rescoring.
 
-The probe vector is carried as a broadcast 1-row frame — never collected to
-a Python literal — so the same code runs when "probe" is a million-row query
-table (it becomes a broadcast or shuffled join on the cell key).
+The int8 tier (``quantize_vectors``, ``quantized_topk``,
+``quantized_batch_topk_join``) scans quantized vectors and rescores an
+over-retrieved candidate set exactly, so its output is brute force's.
+
+This module also owns the numpy kernels the embedding dedup operators
+(dedup.py) share: the sign-LSH planes and band keys, nearest-cell
+assignment, and the coarse-quantizer centroid fit.
+
+``cosine_topk`` and ``quantized_topk`` carry the probe as a broadcast 1-row
+frame — never collected to a Python literal; ``ivf_batch_topk_join`` joins
+a whole probe table the same way.
 
 One declared exception: :func:`quantized_batch_topk_join` EAGERLY collects
 the probe table at call time (it is the broadcast side of the join by
 contract — the same size class the SQL plan would ship to every task) so it
 can broadcast one contiguous normalized numpy matrix to the blocked-BLAS
-scorer. Callers that need a fully-lazy plan (plan audit, explain-only
-tooling) should use ``batch_topk_join``, whose plan is pure Catalyst.
+scorer. Callers that need a fully-lazy batch plan (plan audit, explain-only
+tooling) should use ``ivf_batch_topk_join``, whose plan over a built index
+is pure Catalyst.
 """
 
 from __future__ import annotations
 
+import hashlib
+import math
 from dataclasses import dataclass
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -44,6 +59,35 @@ from spark_s3_shuffle_spark.sources.catalog import (
 def _as_double(col: Column) -> Column:
     """float32 → float64 so Spark and oracle accumulate at the same width."""
     return F.transform(col, lambda x: x.cast("double"))
+
+
+def _exact_topk(df: DataFrame, id_col: str, vec: Column, probe: Column, k: int) -> DataFrame:
+    """The exact rescore of every single-probe top-k: (id, cos) with cos =
+    round(cosine(vec, probe), 4) (FIXTURES §4 rule 2), ordered cos DESC
+    then id, cut to ``k`` by one TakeOrderedAndProject."""
+    return (
+        df.select(id_col, F.round(cosine(vec, probe), 4).alias("cos"))
+        .orderBy(F.col("cos").desc(), F.col(id_col))
+        .limit(k)
+    )
+
+
+def _rank_per_probe(pairs: DataFrame, id_col: str, k: int, probe_id_col: str) -> DataFrame:
+    """The exact rescore of every batch join: candidate (_pid, id_col, _v,
+    _probe) rows get round(cosine(_v, _probe), 4), and each probe keeps its
+    top ``k`` by (cos DESC, id) via WindowGroupLimit. Returns
+    (probe_id_col, id_col, cos, rank)."""
+    w_k = Window.partitionBy("_pid").orderBy(F.col("cos").desc(), F.col(id_col))
+    return (
+        pairs.select(
+            "_pid",
+            F.col(id_col),
+            F.round(cosine(F.col("_v"), F.col("_probe")), 4).alias("cos"),
+        )
+        .withColumn("rank", F.row_number().over(w_k))
+        .filter(F.col("rank") <= k)
+        .select(F.col("_pid").alias(probe_id_col), id_col, "cos", "rank")
+    )
 
 
 def cosine_topk(
@@ -62,35 +106,44 @@ def cosine_topk(
     TakeOrderedAndProject keeps only k rows per partition.
     """
     p = F.broadcast(probe.select(_as_double(F.col(probe_vec_col)).alias("_probe")))
-    return (
-        vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"))
-        .crossJoin(p)
-        .select(id_col, F.round(cosine(F.col("_v"), F.col("_probe")), 4).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col))
-        .limit(k)
-    )
+    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"))
+    return _exact_topk(v.crossJoin(p), id_col, F.col("_v"), F.col("_probe"), k)
 
 
-def _nearest_cell_udf(matrix, cells):
-    """pandas_udf assigning each vector to its max-cosine cell: one numpy
+def _unit_rows(X) -> np.ndarray:
+    """Rows scaled to unit L2 norm; the +1e-12 keeps a zero row finite."""
+    X = np.asarray(X, dtype=np.float64)
+    return X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-12)
+
+
+def _nearest_cell_udf(matrix, cells, top: int | None = None):
+    """pandas_udf assigning each vector to its max-cosine cell(s): one numpy
     matmul per Arrow batch against the (num_cells, dim) centroid matrix (a
-    closure constant shipped once per executor). The per-pair higher-order-
-    function cosine measured ~10× slower — same lesson as the near-dup band
-    keys (dedup.py)."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    M = np.asarray(matrix, dtype=np.float64)
-    Mn = M / (np.linalg.norm(M, axis=1, keepdims=True) + 1e-12)
+    closure constant shipped once per executor; a per-pair higher-order-
+    function cosine measured ~10× slower). ``top=None`` gives the nearest
+    cell as ``int``, the first on a tie (IVF); ``top=p`` the ``p`` nearest
+    as ``array<long>`` (SemDeDup's soft assignment)."""
+    Mn = _unit_rows(matrix)
     cell_ids = np.asarray(list(cells), dtype=np.int64)
 
-    @pandas_udf("int")
-    def nearest(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)
-        Xn = X / (np.linalg.norm(X, axis=1, keepdims=True) + 1e-12)
-        return pd.Series(cell_ids[(Xn @ Mn.T).argmax(axis=1)])
+    def sims(v: pd.Series) -> np.ndarray:
+        return _unit_rows(np.vstack(v.to_numpy())) @ Mn.T
 
-    return nearest
+    if top is None:
+
+        @F.pandas_udf("int")
+        def nearest(v: pd.Series) -> pd.Series:
+            return pd.Series(cell_ids[sims(v).argmax(axis=1)])
+
+        return nearest
+
+    p = min(max(1, top), len(cell_ids))
+
+    @F.pandas_udf("array<long>")
+    def nearest_p(v: pd.Series) -> pd.Series:
+        return pd.Series(list(cell_ids[np.argpartition(-sims(v), p - 1, axis=1)[:, :p]]))
+
+    return nearest_p
 
 
 def _cell_means(assigned: DataFrame) -> DataFrame:
@@ -115,8 +168,6 @@ def auto_ivf_cells(n_vectors: int, floor: int = 8) -> int:
     cells). With cells ~ sqrt(N), membership and the centroid table both
     grow O(sqrt(N)); the driver-side quantizer stays tiny (1M cells x 64
     dims = 512 MB at 1e12 vectors — shard the quantizer before that)."""
-    import math
-
     return max(floor, math.isqrt(max(0, int(n_vectors))))
 
 
@@ -193,13 +244,19 @@ class IVFIndex:
         self.centroids.unpersist()
 
 
+def _assign_cells(vectors: DataFrame, id_col: str, vec_col: str, matrix, cells) -> DataFrame:
+    """(id_col, cell, _v): every vector with its nearest centroid's cell."""
+    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"))
+    nearest = _nearest_cell_udf(matrix, cells)
+    return v.withColumn("cell", nearest(F.col("_v"))).select(id_col, "cell", "_v")
+
+
 def build_ivf_index(
     vectors: DataFrame,
     num_cells: int | None = 16,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iterations: int = 1,
-    materialize: bool = True,
 ) -> IVFIndex:
     """Offline index build: fit centroids, assign every vector to its
     nearest cell, repartition by cell, and pin the result. This is the
@@ -209,24 +266,18 @@ def build_ivf_index(
     ``num_cells=None`` sizes the quantizer to the corpus via
     ``auto_ivf_cells`` (~sqrt(N)) — the scale-safe default; a fixed count
     is only appropriate when the corpus size is known and bounded."""
-    import numpy as np
-
     if num_cells is None:
         num_cells = auto_ivf_cells(vectors.count())
     centroids = kmeans_like_centroids(vectors, num_cells, id_col, vec_col, iterations)
     crows = centroids.collect()  # O(num_cells) — offline build step
     cells = [r["cell"] for r in crows]
     matrix = np.array([r["centroid"] for r in crows], dtype=np.float64)
-    v = vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"))
     # final assignment: same vectorized numpy-matmul path as the Lloyd
     # rounds — one scan, no join, no per-pair HOF cosine
-    assignments = v.withColumn("cell", _nearest_cell_udf(matrix, cells)(F.col("_v"))).select(
-        id_col, "cell", "_v"
-    )
-    if materialize:
-        assignments = assignments.repartition("cell").persist()
-        assignments.count()
-        centroids = centroids.persist()
+    assignments = _assign_cells(vectors, id_col, vec_col, matrix, cells)
+    assignments = assignments.repartition("cell").persist()
+    assignments.count()
+    centroids = centroids.persist()
     return IVFIndex(assignments, centroids, id_col, num_cells, cells, matrix)
 
 
@@ -239,21 +290,20 @@ def ivf_probe_vector(
     """Serving-shape probe: the query vector arrives as plain Python floats
     (parameter binding — how an ANN endpoint receives it), so the whole
     query is exactly ONE Spark job: cell ranking against the driver-side
-    coarse quantizer, an IN-list pruned scan, codegen cosine, top-k heap."""
-    import numpy as np
+    coarse quantizer, an IN-list pruned scan, codegen cosine, top-k heap.
 
+    Measured on a 200k-vector dim-32 corpus, local[32], num_cells=32,
+    nprobe=4: probe 0.37 s vs exact 1.32 s (3.6×) at 8/10 top-10 overlap —
+    the fixture corpus (2k vectors) is job-overhead-bound and shows parity
+    instead."""
     q = np.asarray(list(vector), dtype=np.float64)
     M = index.centroid_matrix
     sims = (M @ q) / (np.linalg.norm(M, axis=1) * np.linalg.norm(q) + 1e-12)
     order = sorted(range(len(sims)), key=lambda i: (-sims[i], index.cells[i]))
     chosen = [index.cells[i] for i in order[:nprobe]]
     probe_lit = F.array(*[F.lit(float(x)) for x in q])
-    return (
-        index.assignments.filter(F.col("cell").isin(chosen))
-        .select(index.id_col, F.round(cosine(F.col("_v"), probe_lit), 4).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(index.id_col))
-        .limit(k)
-    )
+    pruned = index.assignments.filter(F.col("cell").isin(chosen))
+    return _exact_topk(pruned, index.id_col, F.col("_v"), probe_lit, k)
 
 
 def ivf_batch_topk_join(
@@ -303,55 +353,52 @@ def ivf_batch_topk_join(
         .filter(F.col("_r") <= nprobe)
         .select("_pid", "_probe", "cell")
     )
-    w_k = Window.partitionBy("_pid").orderBy(F.col("cos").desc(), F.col(index.id_col))
-    return (
-        index.assignments.join(F.broadcast(probe_cells), "cell")
-        .select(
-            "_pid",
-            F.col(index.id_col),
-            F.round(cosine(F.col("_v"), F.col("_probe")), 4).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_pid").alias(probe_id_col), index.id_col, "cos", "rank")
-    )
+    pairs = index.assignments.join(F.broadcast(probe_cells), "cell")
+    return _rank_per_probe(pairs, index.id_col, k, probe_id_col)
 
 
-def ivf_probe(
-    index: IVFIndex,
-    probe: DataFrame,
-    k: int = 10,
-    nprobe: int = 4,
-    probe_vec_col: str = "embedding",
-    probe_id_col: str | None = None,
-) -> DataFrame:
-    """Probe a built index: rank cells by centroid similarity, then
-    brute-force only the ``nprobe`` nearest cells — a scan cut of
-    ~nprobe/num_cells versus exact search.
+def _plane_signs(dim: int, plane: int, seed: int) -> list[float]:
+    """Deterministic ±1 plane components — derived from sha256 of
+    (plane, dim-index, seed) so every executor/ session agrees without any
+    RNG state; embedded as literals so per-row work is just a dot product."""
+    out = []
+    for i in range(dim):
+        digest = hashlib.sha256(f"{plane}:{i}:{seed}".encode()).digest()
+        out.append(1.0 if digest[0] % 2 == 0 else -1.0)
+    return out
 
-    Dispatch: a 1-row probe delegates to the parameter-bound serving path
-    (``ivf_probe_vector`` — one job, IN-list pruned scan); anything larger
-    delegates to :func:`ivf_batch_topk_join`, so serving and batch share
-    one implementation (the ``take(2)`` here is the serving dispatch read,
-    not a per-probe loop). Batch output adds (probe_id, rank) columns; a
-    probe table without ``probe_id_col`` gets one synthesized from its
-    vector hash.
 
-    Measured on a 200k-vector dim-32 corpus, local[32], num_cells=32,
-    nprobe=4: probe 0.37 s vs exact 1.32 s (3.6×) at 8/10 top-10 overlap —
-    the fixture corpus (2k vectors) is job-overhead-bound and shows parity
-    instead.
-    """
-    p = probe.select(_as_double(F.col(probe_vec_col)).alias("_probe"))
-    head = p.take(2)
-    if len(head) == 1:
-        return ivf_probe_vector(index, head[0]["_probe"], k, nprobe)
-    if probe_id_col is None:
-        probes = probe.withColumn("probe_id", F.xxhash64(F.col(probe_vec_col)))
-        probe_id_col = "probe_id"
-    else:
-        probes = probe
-    return ivf_batch_topk_join(index, probes, k, nprobe, probe_id_col, probe_vec_col)
+def _sign_band_keys(dim: int, num_planes: int, bands: int, seed: int):
+    """The banded sign-LSH key kernel: ``keys(X)`` maps an (n, dim) matrix
+    to (n, bands) int64 keys, key b packing the sign bits of its
+    num_planes/bands planes. Uneven bands raise: the remainder planes would
+    be dropped, and bands > num_planes would give every vector key 0."""
+    if num_planes % bands:
+        raise ValueError("num_planes must be divisible by bands")
+    ppb = num_planes // bands
+    planes = np.array(
+        [_plane_signs(dim, p, seed) for p in range(num_planes)], dtype=np.float64
+    ).T  # (dim, num_planes)
+    weights = 1 << np.arange(ppb, dtype=np.int64)
+
+    def keys(X: np.ndarray) -> np.ndarray:
+        bits = (X @ planes) >= 0  # (n, num_planes)
+        return bits.reshape(len(bits), bands, ppb) @ weights
+
+    return keys
+
+
+def _band_keys_udf(dim: int, num_planes: int, bands: int, seed: int):
+    """pandas_udf of :func:`_sign_band_keys`: one numpy matmul per Arrow
+    batch for all plane dots (the Column form, num_planes zip_with +
+    aggregate per row, measured ~10× slower at 32 planes)."""
+    keys = _sign_band_keys(dim, num_planes, bands, seed)
+
+    @F.pandas_udf("array<long>")
+    def band_keys(v: pd.Series) -> pd.Series:
+        return pd.Series(list(keys(np.vstack(v.to_numpy()).astype(np.float64))))
+
+    return band_keys
 
 
 def with_lsh_keys(
@@ -367,27 +414,9 @@ def with_lsh_keys(
     """Attach the banded sign-LSH key array (same plane family as
     embedding_near_dup_pairs): ``out[b]`` is the b-th band's packed sign
     bits. Precompute + persist/write this once per corpus version; probes
-    then pay only the key *comparison*, not the key computation."""
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
-    from spark_s3_shuffle_spark.operators.dedup import _plane_signs
-
-    ppb = num_planes // bands
-    planes = np.array(
-        [_plane_signs(dim, p, seed) for p in range(num_planes)], dtype=np.float64
-    ).T
-    weights = 1 << np.arange(ppb, dtype=np.int64)
-
-    @pandas_udf("array<long>")
-    def band_keys(v: pd.Series) -> pd.Series:
-        X = np.vstack(v.to_numpy()).astype(np.float64)
-        bits = (X @ planes) >= 0
-        keys = np.empty((X.shape[0], bands), dtype=np.int64)
-        for b in range(bands):
-            keys[:, b] = bits[:, b * ppb : (b + 1) * ppb] @ weights
-        return pd.Series(list(keys))
-
+    then pay only the key *comparison*, not the key computation. Raises
+    ``ValueError`` unless ``num_planes`` is a multiple of ``bands``."""
+    band_keys = _band_keys_udf(dim, num_planes, bands, seed)
     return vectors.select(F.col(id_col), F.col(vec_col), band_keys(F.col(vec_col)).alias(out))
 
 
@@ -412,61 +441,32 @@ def lsh_topk(
     to the candidate fraction (~bands/2^(planes/bands) of the corpus for
     random data, everything similar to the probe for clustered data).
 
-    ``keyed`` should come from :func:`with_lsh_keys` (the keys column is
-    computed on the fly if absent — correct, but then each probe pays the
-    key computation scan)."""
-    import numpy as np
-
-    from spark_s3_shuffle_spark.operators.dedup import _plane_signs
-
-    if keys_col not in keyed.columns:
-        keyed = with_lsh_keys(keyed, dim, num_planes, bands, id_col, vec_col, seed, keys_col)
+    ``keyed`` must carry ``keys_col`` from :func:`with_lsh_keys`, built with
+    the same ``dim``, ``num_planes``, ``bands`` and ``seed``."""
+    keys = _sign_band_keys(dim, num_planes, bands, seed)
     head = probe.select(_as_double(F.col(probe_vec_col)).alias("_probe")).take(1)
     if not head:
         raise ValueError("empty probe")
     q = np.asarray(head[0]["_probe"], dtype=np.float64)
-    ppb = num_planes // bands
-    planes = np.array(
-        [_plane_signs(dim, p, seed) for p in range(num_planes)], dtype=np.float64
-    ).T
-    bits = (q @ planes) >= 0
-    weights = 1 << np.arange(ppb, dtype=np.int64)
-    probe_keys = [int(bits[b * ppb : (b + 1) * ppb] @ weights) for b in range(bands)]
     match_any = None
-    for b, pk in enumerate(probe_keys):
-        cond = F.element_at(F.col(keys_col), b + 1) == F.lit(pk)
+    for b, pk in enumerate(keys(q[None, :])[0]):
+        cond = F.element_at(F.col(keys_col), b + 1) == F.lit(int(pk))
         match_any = cond if match_any is None else (match_any | cond)
     probe_lit = F.array(*[F.lit(float(x)) for x in q])
-    return (
-        keyed.filter(match_any)
-        .select(id_col, F.round(cosine(_as_double(F.col(vec_col)), probe_lit), 4).alias("cos"))
-        .orderBy(F.col("cos").desc(), F.col(id_col))
-        .limit(k)
-    )
-
-
-def ivf_topk(
-    vectors: DataFrame,
-    probe: DataFrame,
-    k: int = 10,
-    num_cells: int = 16,
-    nprobe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    index: IVFIndex | None = None,
-) -> DataFrame:
-    """IVF approximate top-k. Pass a prebuilt ``index`` for the amortized
-    path; without one this builds (unmaterialized) and probes in a single
-    plan — correct, but the build scans then run per query, which is the
-    anti-pattern the build/probe split exists to avoid."""
-    if index is None:
-        index = build_ivf_index(vectors, num_cells, id_col, vec_col, iterations=1, materialize=False)
-    return ivf_probe(index, probe, k, nprobe, probe_vec_col=vec_col)
+    return _exact_topk(keyed.filter(match_any), id_col, _as_double(F.col(vec_col)), probe_lit, k)
 
 
 # ---------------------------------------------------------------------------
 # Int8 scalar quantization tier (round 4): 4x smaller vectors + exact rescore
 # ---------------------------------------------------------------------------
+
+def _int8_codes(X: np.ndarray) -> np.ndarray:
+    """Per-row symmetric int8 codes of a finite (n, d) matrix, as float64:
+    ``rint(x / (max|x| / 127))``; a zero row stays zero."""
+    amax = np.abs(X).max(axis=1, initial=0.0)
+    scale = np.where(amax > 0, amax / 127.0, 1.0)
+    return np.rint(X / scale[:, None])
+
 
 def quantize_vectors(
     df: DataFrame,
@@ -487,7 +487,6 @@ def quantize_vectors(
     ``rint`` form re-encodes the same batch in milliseconds. Half-even vs
     half-up ties move a code point by one lsb at exact .5 boundaries,
     inside the ±1-lsb error the rescore contract already absorbs.)"""
-    import numpy as np
 
     @F.pandas_udf("array<tinyint>")
     def _q8(col: pd.Series) -> pd.Series:
@@ -503,9 +502,7 @@ def quantize_vectors(
         for idxs in by_len.values():
             x = np.array([vals[i] for i in idxs], dtype=np.float64)
             ok = np.isfinite(x).all(axis=1)
-            amax = np.abs(x).max(axis=1, initial=0.0, where=ok[:, None])
-            scale = np.where(amax > 0, amax / 127.0, 1.0)
-            qm = np.rint(np.where(ok[:, None], x, 0.0) / scale[:, None]).astype(np.int8)
+            qm = _int8_codes(np.where(ok[:, None], x, 0.0)).astype(np.int8)
             for j, i in enumerate(idxs):
                 if ok[j]:
                     out[i] = qm[j]
@@ -522,21 +519,20 @@ def quantized_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     probe_vec_col: str = "embedding",
-    quantized: DataFrame | None = None,
 ) -> DataFrame:
-    """Quantized-scan + exact-rescore top-k: score the int8 corpus against
-    the float probe (asymmetric cosine — the scan reads 1/4 the bytes),
-    keep ``k * rescore_factor`` candidates via TakeOrderedAndProject, then
+    """Quantized-scan + exact-rescore top-k: score the int8 codes of the
+    corpus against the float probe (asymmetric cosine), keep
+    ``k * rescore_factor`` candidates via TakeOrderedAndProject, then
     rescore ONLY those with the exact float vectors and return the true
     top-k ordering. With 8-bit quantization the per-pair cosine error is
     ~1e-2 worst-case, so a 4x over-retrieve recovers the exact top-k in
     practice — the output contract (and the oracle) is therefore the SAME
-    as brute-force ``cosine_topk``, at a quarter of the scan bytes.
+    as brute-force ``cosine_topk``.
 
-    Pass ``quantized`` (from :func:`quantize_vectors`, materialized) for
-    the amortized path; otherwise the quantization projection fuses into
-    the scan — still one pass, just no byte savings at rest."""
-    q = quantized if quantized is not None else quantize_vectors(vectors, id_col, vec_col)
+    The quantization projection (:func:`quantize_vectors`) fuses into the
+    scan, so the float corpus is read in one pass; the 1/4-byte scan is
+    what an int8 copy of the corpus at rest would give."""
+    q = quantize_vectors(vectors, id_col, vec_col)
     p = F.broadcast(probe.select(_as_double(F.col(probe_vec_col)).alias("_probe")))
     cand = (
         q.crossJoin(p)
@@ -561,18 +557,18 @@ def quantized_batch_topk_join(
     vec_col: str = "embedding",
     probe_id_col: str = "probe_id",
     probe_vec_col: str = "embedding",
-    quantized: DataFrame | None = None,
 ) -> DataFrame:
     """Batch ANN join with the EXACT output contract (q97's mechanism,
     table-shaped): every probe row gets its true per-probe top-k, but the
-    full corpus is scanned only as int8 vectors (1/4 the bytes), and the
-    exact float vectors are read for just ``k * rescore_factor`` candidates
-    per probe.
+    full corpus is scored only as int8 codes, and exact float cosines are
+    computed for just ``k * rescore_factor`` candidates per probe.
 
     Stages — all distributed, no per-probe driver action:
 
-    1. quantized scoring — blocked-BLAS ``mapInPandas`` over the int8
-       corpus: each Arrow batch scores against the probe matrix (collected
+    1. quantized scoring — blocked-BLAS ``mapInPandas`` over the corpus,
+       quantized inside each Arrow batch (the :func:`quantize_vectors`
+       codes, so the corpus is read once with no Catalyst array
+       expressions): each batch scores against the probe matrix (collected
        once — the probe table is the BROADCAST side of this join by
        contract, the same size class the SQL plan shipped to every task
        anyway) with one normalized matmul, and emits only each probe's
@@ -597,21 +593,9 @@ def quantized_batch_topk_join(
 
     With 8-bit quantization the per-pair cosine error is ~1e-2 worst-case,
     so a 4x over-retrieve recovers the exact top-k — the contract (and the
-    oracle) is the same as per-probe brute force at a quarter of the scan
-    bytes. Returns (probe_id, id_col, cos, rank), cos rounded to 4, ties
+    oracle) is the same as per-probe brute force. Returns (probe_id, id_col, cos, rank), cos rounded to 4, ties
     by ascending id — ``cosine_topk``'s canonicalization per probe."""
-    import numpy as np
-
-    # Fused path (quantized=None): the scorer quantizes inside the Arrow
-    # batch (same rint formula as quantize_vectors) — the corpus is read
-    # ONCE with zero Catalyst array expressions. Materialized path: scan
-    # the int8 frame as-is (1/4 the bytes at rest).
-    if quantized is not None:
-        src = quantized.select(F.col(id_col), F.col("qvec").alias("_x"))
-        fuse_quant = False
-    else:
-        src = vectors.select(F.col(id_col), F.col(vec_col).alias("_x"))
-        fuse_quant = True
+    src = vectors.select(F.col(id_col), F.col(vec_col).alias("_x"))
     p = probes.select(
         F.col(probe_id_col).alias("_pid"),
         _as_double(F.col(probe_vec_col)).alias("_probe"),
@@ -664,10 +648,7 @@ def quantized_batch_topk_join(
                 ids, Q = ids[finite], Q[finite]
                 if Q.shape[0] == 0:
                     continue
-            if fuse_quant:
-                amax = np.abs(Q).max(axis=1)
-                scale = np.where(amax > 0, amax / 127.0, 1.0)
-                Q = np.rint(Q / scale[:, None])
+            Q = _int8_codes(Q)
             qn = np.linalg.norm(Q, axis=1)
             qn[qn == 0] = 1.0
             Q /= qn[:, None]
@@ -694,7 +675,7 @@ def quantized_batch_topk_join(
     # lands in one of the byte-range scan partitions (measured at sf10:
     # 200k rows in 1 of 13) and the scoring stage serializes. Scoring
     # does O(m·d) flops per row against an O(d)-BYTE shuffle row, so
-    # spreading the int8 corpus always pays when the scan fans out to
+    # spreading the corpus always pays when the scan fans out to
     # fewer tasks than cores; on a healthy many-row-group corpus the
     # branch is false and no shuffle is added. The probe is memoized per
     # analyzed plan (r12-opt) — the RDD conversion forced full physical
@@ -710,20 +691,12 @@ def quantized_batch_topk_join(
         .filter(F.col("_r") <= kf)
         .select("_pid", id_col)
     )
-    w_k = Window.partitionBy("_pid").orderBy(F.col("cos").desc(), F.col(id_col))
-    return (
+    pairs = (
         vectors.select(F.col(id_col), _as_double(F.col(vec_col)).alias("_v"))
         .join(F.broadcast(cand), id_col)
         .join(F.broadcast(p), "_pid")
-        .select(
-            "_pid",
-            F.col(id_col),
-            F.round(cosine(F.col("_v"), F.col("_probe")), 4).alias("cos"),
-        )
-        .withColumn("rank", F.row_number().over(w_k))
-        .filter(F.col("rank") <= k)
-        .select(F.col("_pid").alias(probe_id_col), id_col, "cos", "rank")
     )
+    return _rank_per_probe(pairs, id_col, k, probe_id_col)
 
 
 def extend_ivf_index(
@@ -742,12 +715,9 @@ def extend_ivf_index(
     corpus maintainable under daily appends. Centroids are deliberately
     NOT refit here; recluster offline when drift accumulates (the
     standard FAISS operating procedure)."""
-    v = new_vectors.select(
-        F.col(index.id_col), _as_double(F.col(vec_col)).alias("_v")
+    delta = _assign_cells(
+        new_vectors, index.id_col, vec_col, index.centroid_matrix, index.cells
     )
-    delta = v.withColumn(
-        "cell", _nearest_cell_udf(index.centroid_matrix, index.cells)(F.col("_v"))
-    ).select(index.id_col, "cell", "_v")
     merged = index.assignments.unionByName(delta).repartition("cell").persist()
     merged.count()
     # The old assignment frame is folded into (and fully materialized by)
@@ -795,13 +765,10 @@ def _nearest_centroid_udf(centroids: list[list[int]]):
     argmin ties: np.argmin returns the FIRST minimal index — identical to
     the old array_min struct-ordering rule (smaller cluster index wins).
     """
-    import numpy as np
-    from pyspark.sql.functions import pandas_udf
-
     cent = np.array(centroids, dtype=np.int64)          # (k, dim)
     cnorm = (cent * cent).sum(axis=1)                    # (k,)
 
-    @pandas_udf("int")
+    @F.pandas_udf("int")
     def nearest(v: pd.Series) -> pd.Series:
         X = np.vstack(v.to_numpy()).astype(np.int64)     # (batch, dim)
         d = cnorm[None, :] - 2 * (X @ cent.T)            # (batch, k), +|x|^2 const

@@ -331,7 +331,12 @@ def test_ivf_topk_recall_vs_brute_force(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     probe = emb.filter(F.col("vec_id") == 0)
     exact = [r["vec_id"] for r in SIM.cosine_topk(emb, probe, k=10).collect()]
-    approx = [r["vec_id"] for r in SIM.ivf_topk(emb, probe, k=10, num_cells=8, nprobe=4).collect()]
+    idx = SIM.build_ivf_index(emb, num_cells=8)
+    try:
+        vec = probe.first()["embedding"]
+        approx = [r["vec_id"] for r in SIM.ivf_probe_vector(idx, vec, k=10, nprobe=4).collect()]
+    finally:
+        idx.unpersist()
     # approximate search must at least find the probe itself and overlap well
     assert exact[0] == 0 and approx[0] == 0
     assert len(set(exact) & set(approx)) >= 5
@@ -348,7 +353,7 @@ def test_ivf_probe_prunes_to_nprobe_cells(spark):
     try:
         idx = SIM.build_ivf_index(corpus, num_cells=16)
         probe = corpus.filter(F.col("vec_id") == 0)
-        out = SIM.ivf_probe(idx, probe, k=10, nprobe=4)
+        out = SIM.ivf_probe_vector(idx, probe.first()["embedding"], k=10, nprobe=4)
         plan = I.formatted_plan(out)
         import re
         assert re.search(r"Condition : .*cell#\d+ IN ", plan), plan[:1500]
@@ -365,13 +370,12 @@ def test_ivf_probe_prunes_to_nprobe_cells(spark):
         corpus.unpersist()
 
 
-def test_ivf_batch_join_recall_and_delegation(spark, sf_dir):
+def test_ivf_batch_join_recall(spark, sf_dir):
     """Batch ANN join (q120b shape): per-probe results flow through ONE
     distributed plan. Properties: (a) every probe's rank-1 hit is itself
     (cos 1.0 — the probe is in the corpus and in its own nearest cell);
     (b) returned cosines agree with the exact scores (candidates are a
-    subset of the corpus, only the candidate SET is approximate);
-    (c) ivf_probe with a multi-row probe table delegates to the batch join."""
+    subset of the corpus, only the candidate SET is approximate)."""
     from spark_s3_shuffle_spark.sources.catalog import load_table
     emb = load_table(spark, sf_dir, "embeddings")
     idx = SIM.build_ivf_index(emb, num_cells=8)
@@ -394,11 +398,6 @@ def test_ivf_batch_join_recall_and_delegation(spark, sf_dir):
             exact = {r["vec_id"]: r["cos"] for r in SIM.cosine_topk(emb, probe, k=500).collect()}
             for r in rs:
                 assert exact[r["vec_id"]] == r["cos"]
-        # delegation: multi-row probe through ivf_probe == the batch join
-        via_dispatch = SIM.ivf_probe(
-            idx, probes, k=5, nprobe=4, probe_id_col="probe_id"
-        ).collect()
-        assert sorted(map(tuple, via_dispatch)) == sorted(map(tuple, rows))
     finally:
         idx.unpersist()
 
@@ -433,19 +432,43 @@ def test_lsh_topk_finds_probe_and_overlaps(spark, sf_dir):
     assert len(set(exact) & set(approx)) >= 3
 
 
+@pytest.mark.parametrize("num_planes,bands", [(10, 4), (4, 8), (16, 4)])
+def test_sign_lsh_keys_need_whole_bands(spark, num_planes, bands):
+    """Every sign-LSH key builder rejects a plane budget that does not split
+    into whole bands: 10 planes in 4 bands would drop 2 planes silently, and
+    8 bands of 4 planes would give every vector key 0 (all candidates)."""
+    rows = [(i, [float((i * 7 + j * 3) % 5 - 2) for j in range(4)]) for i in range(6)]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    probe = emb.filter(F.col("vec_id") == 0)
+    fake_keys = emb.withColumn("lsh_keys", F.array(*[F.lit(0).cast("long")] * bands))
+    builders = [
+        lambda: D.embedding_near_dup_pairs(emb, num_planes=num_planes, bands=bands, dim=4),
+        lambda: SIM.with_lsh_keys(emb, dim=4, num_planes=num_planes, bands=bands),
+        lambda: SIM.lsh_topk(fake_keys, probe, dim=4, num_planes=num_planes, bands=bands),
+    ]
+    if num_planes % bands:
+        for build in builders:
+            with pytest.raises(ValueError, match="divisible by bands"):
+                build()
+    else:
+        keyed = SIM.with_lsh_keys(emb, dim=4, num_planes=num_planes, bands=bands)
+        assert all(len(r["lsh_keys"]) == bands for r in keyed.collect())
+        top = SIM.lsh_topk(keyed, probe, dim=4, k=3, num_planes=num_planes, bands=bands)
+        assert top.first()["vec_id"] == 0
+        D.embedding_near_dup_pairs(emb, num_planes=num_planes, bands=bands, dim=4).collect()
+
+
 def test_ivf_build_probe_split(spark, sf_dir):
-    """The amortized path: one materialized index, repeated probes — probe
-    results must match the single-shot ivf_topk plan exactly."""
+    """The amortized path: one materialized index, repeated probes — each
+    probe finds itself first."""
     from spark_s3_shuffle_spark.sources.catalog import load_table
     emb = load_table(spark, sf_dir, "embeddings")
     idx = SIM.build_ivf_index(emb, num_cells=8)
     try:
         assert idx.assignments.columns == ["vec_id", "cell", "_v"]
         for probe_id in (0, 7):
-            probe = emb.filter(F.col("vec_id") == probe_id)
-            via_index = [tuple(r) for r in SIM.ivf_probe(idx, probe, k=5, nprobe=4).collect()]
-            one_shot = [tuple(r) for r in SIM.ivf_topk(emb, probe, k=5, num_cells=8, nprobe=4).collect()]
-            assert via_index == one_shot
+            vec = emb.filter(F.col("vec_id") == probe_id).first()["embedding"]
+            via_index = [tuple(r) for r in SIM.ivf_probe_vector(idx, vec, k=5, nprobe=4).collect()]
             assert via_index[0][0] == probe_id
     finally:
         idx.unpersist()
@@ -738,11 +761,6 @@ def test_quantized_topk_equals_exact(spark, sf_dir):
     exact = [tuple(r) for r in SIM.cosine_topk(emb, probe, k=10).collect()]
     quant = [tuple(r) for r in SIM.quantized_topk(emb, probe, k=10).collect()]
     assert quant == exact  # rescore recovers the true top-k, same order
-
-    # amortized path: pre-materialized int8 corpus gives the same answer
-    q = SIM.quantize_vectors(emb)
-    pre = [tuple(r) for r in SIM.quantized_topk(emb, probe, k=10, quantized=q).collect()]
-    assert pre == exact
 
 
 def test_quantize_vectors_int8_range_and_scale_invariance(spark):

@@ -1,9 +1,11 @@
 """t1 smoke: every registry query runs at sf0.001 with a stable schema.
 (The full value-level oracle sweep is tools/check_correctness.py / the
-driver's t2 gate; the media family and q161 are value-checked here, through
-the same comparator.) Also covers B2: parquet sink write + re-read
+driver's t2 gate; the media and vector families and q161 are value-checked
+here, through the same comparator, and the oracle-less vector queries are
+pinned by row digest.) Also covers B2: parquet sink write + re-read
 unchanged."""
 
+import hashlib
 import os
 import sys
 import tempfile
@@ -41,9 +43,11 @@ def test_q161_grouped_pairs_equivalent_to_self_join(spark, sf_dir):
     assert grouped == joined
 
 
-#: The media tier: every query plants (or reads) payloads and decodes them
-#: through multimodal's one Arrow scan.
-MEDIA_QUERIES = [
+#: Queries value-checked against their DuckDB oracle: the media tier (every
+#: query plants or reads payloads and decodes them through multimodal's one
+#: Arrow scan) and the oracle-backed vector family (similarity and the
+#: embedding near-dup operators of dedup).
+ORACLE_CHECKED_QUERIES = [
     "q47_multimodal_features",
     "q318_png_decode",
     "q319_jpeg_decode",
@@ -53,13 +57,22 @@ MEDIA_QUERIES = [
     "q324_ulaw_audio_decode",
     "q325_alaw_audio_decode",
     "q326_rle8_video_decode",
+    "q34_cosine_topk",
+    "q45_embedding_neardup",
+    "q81_semantic_dedup",
+    "q97_quantized_topk",
+    "q120_batch_ann_join",
+    "q328_kmeans_quantized",
+    "q330_label_centroid_profile",
 ]
 
 
-@pytest.mark.parametrize("name", MEDIA_QUERIES)
+@pytest.mark.parametrize("name", ORACLE_CHECKED_QUERIES)
 def test_media_query_matches_duckdb_oracle(spark, sf_dir, name):
-    """Each media query's decoded features equal its DuckDB oracle's
-    replay of the planted statistics — values, not only a row count."""
+    """Each query's rows equal its DuckDB oracle's: the media queries'
+    decoded features replay the planted statistics, and the vector queries'
+    top-k lists, near-dup pairs and cluster profiles replay exactly —
+    values, not only a row count."""
     spec = QUERIES[name]
     sdf = spec.builder(spark, sf_dir)
     rows = [tuple(r) for r in sdf.collect()]
@@ -67,6 +80,33 @@ def test_media_query_matches_duckdb_oracle(spark, sf_dir, name):
     cols = [d[0] for d in res.description]
     assert sorted(sdf.columns) == sorted(cols)
     assert rows and rows_canon(sdf.columns, rows) == rows_canon(cols, res.fetchall())
+
+
+def _rows_digest(sdf):
+    """sha256 of a frame's canonical rows: columns in name order, rows
+    sorted, floats rounded as the oracle comparator rounds them."""
+    rows = [tuple(r) for r in sdf.collect()]
+    canon = (sorted(sdf.columns), rows_canon(sdf.columns, rows))
+    return len(rows), hashlib.sha256(repr(canon).encode()).hexdigest()
+
+
+#: The approximate vector queries have no oracle; their rows at sf0.001 are
+#: pinned instead, so a change to the IVF or sign-LSH kernels that alters
+#: which neighbours they return fails here. (row count, digest)
+PINNED_VECTOR_DIGESTS = {
+    "q34b_ivf_topk": (10, "9b26680785423485020e97ccff41aab786a4275567de55e829ac2f5e86ecb9ba"),
+    "q34c_lsh_topk": (10, "0557bcc2720f6014abe796c0eb9f2fe8825f4da9a70a224ba677fbc6e77359ff"),
+    "q120b_batch_ivf_join": (
+        25, "e766663d3fb6be4dc1b12bcc020e163056672a69b0385aab6e6afc8ea5459388"
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(PINNED_VECTOR_DIGESTS))
+def test_approx_vector_query_rows_pinned(spark, sf_dir, name):
+    """The digests belong to the default sf0.001 fixture."""
+    got = _rows_digest(QUERIES[name].builder(spark, sf_dir))
+    assert got == PINNED_VECTOR_DIGESTS[name]
 
 
 def test_parquet_sink_roundtrip(spark, sf_dir):
