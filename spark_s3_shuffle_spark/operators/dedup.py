@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from spark_s3_shuffle_spark.operators import similarity as SIM
+from spark_s3_shuffle_spark.operators.materialize import materialize
 from spark_s3_shuffle_spark.operators.text import shingles
 from spark_s3_shuffle_spark.sources.catalog import widen_small_scan
 
@@ -216,14 +217,11 @@ def minhash_lsh_candidates(
     # scan -> shingle explode -> 32-hash -> partial-min -> band-explode ->
     # window subtree — the CPU bulk of the query, recomputed per leg when
     # the runtime does not reuse the window exchange (the repo's measured
-    # AQE-reuse caveat, r11). One lazy localCheckpoint materializes the
-    # NARROW annotated rows once (bands rows/doc of five fixed-width
-    # columns — §8's decide-with-small-rows shape: signatures and bucket
-    # metadata, never text or shingles) and every edge source reads it;
-    # blocks are ContextCleaner-released when the frame drops (the
-    # prefix.py/graph.py trade: executor loss after materialization means
-    # a job-level retry).
-    banded = banded.localCheckpoint(eager=False)
+    # AQE-reuse caveat, r11). Materialize the NARROW annotated rows once
+    # (bands rows/doc of five fixed-width columns — §8's
+    # decide-with-small-rows shape: signatures and bucket metadata, never
+    # text or shingles) and every edge source reads them.
+    banded = materialize(banded)
     small = banded.filter(F.col("_bsz") <= dense_bucket_limit)
     left = small.alias("l")
     right = small.alias("r")
@@ -297,7 +295,7 @@ def ngram_jaccard_pairs(
         "_id",
         F.array_distinct(shingles(F.col("_vt"), shingle_n)).alias("_sh"),
     )
-    sh = sh.localCheckpoint(eager=False)
+    sh = materialize(sh)
     scored = (
         candidates.join(sh.withColumnRenamed("_id", "a").withColumnRenamed("_sh", "sh_a"), "a")
         .join(sh.withColumnRenamed("_id", "b").withColumnRenamed("_sh", "sh_b"), "b")
@@ -334,14 +332,14 @@ def _verify_side_frame(
     base)`` where ``base`` is ``(_id, _vt)`` semi-join-restricted to ids
     that appear in the candidate pair list, so the expensive attribute
     projection above it runs ONCE, over candidate docs only; the caller
-    materializes the projected attribute frame with a lazy localCheckpoint
-    and feeds BOTH join legs from it. ``candidates`` comes back
-    checkpointed too (it is consumed three times: the id list + two legs).
+    materializes the projected attribute frame and feeds BOTH join legs
+    from it. ``candidates`` comes back materialized too (it is consumed
+    three times: the id list + two legs).
     Inner joins on a/b ignore non-candidate ids by definition, so the
     restriction is exact.
     """
     base = df.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_vt"))
-    candidates = candidates.localCheckpoint(eager=False)
+    candidates = materialize(candidates)
     ids = (
         candidates.select(F.col("a").alias("_id"))
         .union(candidates.select(F.col("b").alias("_id")))
@@ -500,7 +498,7 @@ def connected_components(
     # materialize the edge list ONCE: every propagation round joins against
     # it, and without this the (possibly expensive — LSH + verify) upstream
     # pair pipeline would re-execute per round per join side.
-    sym = sym.localCheckpoint(eager=True)
+    sym = materialize(sym, eager=True)
     labels = sym.select("_u").union(sym.select("_v")).distinct().select(
         F.col("_u").alias("_node"), F.col("_u").alias("_comp")
     )
@@ -518,7 +516,7 @@ def connected_components(
                 F.least(F.col("_comp"), F.coalesce(F.col("_ncomp"), F.col("_comp"))).alias("_comp"),
             )
         )
-        stepped = stepped.localCheckpoint(eager=False)  # truncate the iterative lineage
+        stepped = materialize(stepped)  # truncate the iterative lineage
         labels = stepped.select("_node", "_comp")
         # full count (no limit): materializes EVERY partition of the lazy
         # checkpoint in the same job that yields the convergence scalar
@@ -658,9 +656,9 @@ def simhash_near_dup_pairs(
     # Both self-join legs descend from the banded frame; without a
     # materialization each leg re-runs the whole upstream simhash
     # aggregation (shingle explode + packed-counter agg). Same narrow-row
-    # checkpoint as minhash_lsh_candidates: (id, hash, blk, bval) —
+    # materialization as minhash_lsh_candidates: (id, hash, blk, bval) —
     # 4 fixed-width columns, blocks rows/doc.
-    banded = banded.localCheckpoint(eager=False)
+    banded = materialize(banded)
     left, right = banded.alias("l"), banded.alias("r")
     return (
         left.join(
@@ -903,10 +901,10 @@ def embedding_near_dup_pairs(
     # The verify helper fans out into multiple consumers (sizes aggregate
     # + sized join), each of which would re-run the banding pandas_udf
     # over every vector (r12: q45's plan showed 4 ArrowEvalPython nodes
-    # for ONE banding pass). Checkpoint the narrow (id, band, bkey) rows
-    # once — vectors are re-attached by the join below, never
-    # materialized here.
-    banded = banded.localCheckpoint(eager=False)
+    # for ONE banding pass). Materialize the narrow (id, band, bkey) rows
+    # once — vectors are re-attached by the join below, never pinned
+    # here.
+    banded = materialize(banded)
     withv = banded.join(base, "_id")
     return _verify_pairs_within_groups(withv, ["band", "bkey"], threshold, max_group_rows)
 
@@ -978,9 +976,9 @@ def semantic_dedup_pairs(
     # The cap's build side, its semi-join probe side, and the verify
     # helper's two consumers all descend from `assigned` — without a
     # materialization each re-runs the assignment pandas_udf over every
-    # vector. One checkpoint of the narrow (id, cell) rows (r12, same
-    # rationale as the LSH banded frames above).
-    assigned = assigned.localCheckpoint(eager=False)
+    # vector. Materialize the narrow (id, cell) rows once (same rationale
+    # as the LSH banded frames above).
+    assigned = materialize(assigned)
     if max_cell_size:
         # Occupancy = DISTINCT members per cell. Under soft assignment each
         # vector lands in up to ``probes`` cells, so a raw row count would be
@@ -1015,7 +1013,6 @@ def fit_semantic_centroids(
     ``num_cells=None`` auto-sizes to the corpus (auto_dedup_cells)."""
     if num_cells is None:
         num_cells = SIM.auto_dedup_cells(df.count())
-    cents = SIM.kmeans_like_centroids(
+    return SIM.kmeans_like_centroids(
         df, num_cells=num_cells, id_col=id_col, vec_col=vec_col, iterations=iterations
     )
-    return [(r["cell"], r["centroid"]) for r in cents.collect()]

@@ -29,6 +29,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from spark_s3_shuffle_spark.operators.materialize import materialize
+
 #: Fixed-point scale: ranks are stored as r * 2^0 * 10^12 bigints.
 SCALE = 10**12
 
@@ -77,28 +79,14 @@ def pagerank_fixed(
     ranks). Iteration 0's rank is the uniform ``SCALE DIV nn`` so the
     first step needs only the 1-row node-count broadcast.
     """
-    nodes = (
+    nodes = materialize(
         edges.select(F.col("src").alias("n"))
         .unionByName(edges.select(F.col("dst").alias("n")))
         .distinct()
-        .localCheckpoint(eager=False)
     )
-    # The edge frame is scanned once per iteration: materialize it so each
-    # step reads the stored (src, dst, w, ow) partitions instead of
-    # re-planning the whole upstream lineage (standard practice for
-    # iterative graph jobs). localCheckpoint rather than persist(): it
-    # truncates lineage, so every per-iteration broadcast job plans over a
-    # leaf scan instead of re-analyzing the full upstream join tree, and
-    # its blocks are released by the ContextCleaner when the result frame
-    # is dropped instead of accumulating in the CacheManager for the
-    # session lifetime (same trade as operators/prefix.py — executor loss
-    # after materialization means a job-level retry).
+    # The edge frame is scanned once per iteration.
     outw = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    e = (
-        edges.join(outw, "src")
-        .select("src", "dst", "w", "ow")
-        .localCheckpoint(eager=False)
-    )
+    e = materialize(edges.join(outw, "src").select("src", "dst", "w", "ow"))
     # |nodes| as a 1-row broadcast frame — no driver-side count action.
     nn = nodes.agg(F.count(F.lit(1)).alias("nn"))
     base = SCALE * (damping_den - damping_num) // damping_den
@@ -174,16 +162,9 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
     # deg and oriented feed multiple branches — materialize so the
     # executed job computes each ONCE (the q137 pattern; the textual plan
     # re-prints the build lineage per reference, but the job does not).
-    # localCheckpoint rather than persist() (r12-opt): the operator never
-    # unpersisted, so every invocation leaked two CacheManager entries
-    # for the session lifetime — and every LATER query's planning walks
-    # the accumulated entries during cache lookup. Checkpoint blocks are
-    # released by the ContextCleaner when the result frame drops (same
-    # executor-loss retry trade as operators/prefix.py).
-    deg = (
+    deg = materialize(
         e.select(F.col("a").alias("n")).unionAll(e.select(F.col("b").alias("n")))
         .groupBy("n").agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)
     )
     # orient each edge toward the higher (degree, id) endpoint; carry both
     # endpoint degrees so the wedge canonicalization needs no re-join
@@ -192,11 +173,11 @@ def triangle_stats(edges: DataFrame) -> DataFrame:
         .join(F.broadcast(deg).withColumnRenamed("n", "b").withColumnRenamed("d", "db"), "b")
     )
     fwd = (F.col("da") < F.col("db")) | ((F.col("da") == F.col("db")) & (F.col("a") < F.col("b")))
-    oriented = ed.select(
+    oriented = materialize(ed.select(
         F.when(fwd, F.col("a")).otherwise(F.col("b")).alias("src"),
         F.when(fwd, F.col("b")).otherwise(F.col("a")).alias("dst"),
         F.when(fwd, F.col("db")).otherwise(F.col("da")).alias("ddst"),
-    ).localCheckpoint(eager=False)
+    ))
     x, y = oriented.alias("x"), oriented.alias("y")
     wedges = (
         x.join(y, F.col("x.src") == F.col("y.src"))

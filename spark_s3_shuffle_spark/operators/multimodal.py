@@ -62,25 +62,6 @@ MEDIA_SCHEMA = StructType([
 ])
 
 
-def pin_for_sort(df: DataFrame) -> DataFrame:
-    """Materialize a narrow computed frame once before a global sort
-    (media feature frames, per-doc text scores — any expensive
-    exchange-free segment under an ``orderBy``).
-
-    A global ``orderBy`` needs range-partition bounds, and Spark computes
-    them with a SAMPLING pass that executes the sort's whole child — for
-    the media queries that child is the plant+decode Arrow-scan
-    chain, so every query paid its Python decode TWICE (measured on
-    q319 at sf0.1: 2.81 s with the double execution, 1.29 s for the bare
-    chain, 1.48 s with this checkpoint — 1.9x). The lazy localCheckpoint
-    bounds what is materialized to the NARROW feature rows (a dozen
-    scalar columns; payloads are already gone), so at any scale the
-    sample and shuffle passes re-read a small local materialization
-    instead of re-decoding the corpus. §1.4/§8: decode once, sort the
-    decided rows."""
-    return df.localCheckpoint(eager=False)
-
-
 def as_media(df: DataFrame, id_col: str, payload_col: str, mime: str) -> DataFrame:
     """Wrap an arbitrary binary (or string) column into the canonical media
     schema. Pure projection — no shuffle, no Python."""

@@ -38,6 +38,8 @@ from typing import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from spark_s3_shuffle_spark.operators.materialize import materialize
+
 _PID = "__range_pid"
 _LOCAL = "__local_run"
 _PREV = "__prev_off"
@@ -49,34 +51,15 @@ def _with_range_pid(df: DataFrame, order: Sequence[Column | str]) -> DataFrame:
     Catalyst, so the projection cannot be pushed through the exchange —
     the pid observed is always the RANGE partition, by construction.
 
-    The pinned frame is local-checkpointed (eager=False): every prefix
-    primitive forks it (the running-window branch AND the per-shard
-    summary branch), and the same non-determinism that pins the pid also
-    blocks Catalyst's ReuseExchange canonicalization, so without
-    materialization each fork would replay the range exchange — with
-    freshly-sampled (possibly different) range boundaries, corrupting the
-    pid↔offset correspondence. ``localCheckpoint`` truncates lineage so
-    both forks read the SAME materialized shards, and — unlike
-    ``persist()`` — registers nothing in Catalyst's CacheManager: the
-    blocks are released by the ContextCleaner as soon as the caller drops
-    the result DataFrame, so a bench sweep over dozens of prefix queries
-    accumulates nothing for the session lifetime. The frame is the
-    narrow per-entity aggregate (not the fact table).
-
-    Fault-tolerance trade: ``localCheckpoint`` stores blocks on executor
-    LOCAL storage and truncates lineage, so on a cluster the loss of an
-    executor after materialization makes its blocks unrecoverable — the
-    query fails and must be retried at job level, where ``persist()``
-    would have allowed partition recompute. Acceptable here because the
-    pinned frame is the narrow per-entity aggregate (cheap to re-run
-    end-to-end) and the alternative leaks CacheManager entries across a
-    sweep; callers running long multi-tenant jobs on preemptible
-    executors should expect job-level retry semantics for the prefix
-    primitives."""
-    return (
-        df.repartitionByRange(*order)
-        .withColumn(_PID, F.spark_partition_id())
-        .localCheckpoint(eager=False)
+    The pinned frame is materialized because every prefix primitive
+    forks it (the running-window branch AND the per-shard summary
+    branch), and the same non-determinism that pins the pid also blocks
+    Catalyst's ReuseExchange canonicalization: without it each fork would
+    replay the range exchange with freshly-sampled (possibly different)
+    boundaries, corrupting the pid↔offset correspondence. The frame is
+    the narrow per-entity aggregate (not the fact table)."""
+    return materialize(
+        df.repartitionByRange(*order).withColumn(_PID, F.spark_partition_id())
     )
 
 
@@ -150,11 +133,10 @@ def _sorted_mid_pieces(
     unique; the non-deterministic mid/pid projection cannot be pushed
     below the sort or the exchange, and the checkpoint keeps both forks
     (rows + counts) reading the SAME materialized assignment."""
-    d = (
+    d = materialize(
         df.repartitionByRange(*order)
         .sortWithinPartitions(*order)
         .withColumn(_MID, F.monotonically_increasing_id())
-        .localCheckpoint(eager=False)
     )
     d = d.withColumns(
         {
@@ -280,7 +262,7 @@ def global_ntiles(
     profile an iterative composite actually pays (r12-opt; q160 measured
     anti-scaling, 8 cores beating 32, on the join form):
 
-    - ``df`` is materialized ONCE (``localCheckpoint``) and every spec's
+    - ``df`` is materialized ONCE and every spec's
       range exchange reads the stored blocks — the join form replayed
       the upstream aggregate once per spec, because the per-spec range
       exchange + pid pin cannot share lineage across different orders;
@@ -293,7 +275,7 @@ def global_ntiles(
       where the join form planned a broadcast-join job per extra spec.
     """
     outs = list(specs)
-    base = df.localCheckpoint(eager=False)
+    base = materialize(df)
     branches = []
     for out, order in specs.items():
         local, counts = _sorted_mid_pieces(base, order)

@@ -85,42 +85,6 @@ def cross_join(left: DataFrame, right: DataFrame, predicate: Column | None = Non
     return out.filter(predicate) if predicate is not None else out
 
 
-def salted_join(
-    skewed: DataFrame,
-    dim: DataFrame,
-    on: str | Sequence[str],
-    salt_buckets: int = 8,
-    how: str = "inner",
-) -> DataFrame:
-    """Skew-mitigated equi join: manual key salting (round-11 second pass).
-
-    AQE's skew-join split (``skewJoin.enabled``, on in the engine profile)
-    only repairs SORT-MERGE joins after a stage materializes; salting is
-    the PLAN-level tool for the same disease — one key carrying a
-    disproportionate share of a fact table (the null-key bucket, the
-    "unknown user", the viral item). Every skewed-side row gets a
-    deterministic salt ``xxhash64(whole row) % salt_buckets`` appended to
-    the join key; the other side is replicated ``salt_buckets`` ways
-    (explode over a literal sequence — only sane when that side is
-    dim-sized, which is exactly the skew scenario). The hot key's rows
-    then spread over ``salt_buckets`` reducers instead of one straggler
-    task. Row-content salting (not rand()) keeps the plan deterministic
-    and retry-safe: a re-executed task re-derives identical salts.
-
-    Result is EXACTLY the plain equi join (q331's oracle is the unsalted
-    join — the operator must be a pure physical rewrite). Inner and
-    left-outer ``how`` are supported; for outer joins the dim side is the
-    replicated one, so unmatched skewed rows still surface exactly once.
-    """
-    keys = [on] if isinstance(on, str) else list(on)
-    salt = (F.xxhash64(*[F.col(c) for c in skewed.columns]) % salt_buckets + salt_buckets) % salt_buckets
-    left = skewed.withColumn("_salt", salt.cast("int"))
-    right = dim.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(int(salt_buckets) - 1)))
-    ).withColumn("_salt", F.col("_salt").cast("int"))
-    return left.join(right, keys + ["_salt"], how).drop("_salt")
-
-
 def range_join(
     left: DataFrame,
     right: DataFrame,

@@ -186,7 +186,7 @@ def kmeans_like_centroids(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     iterations: int = 2,
-) -> DataFrame:
+) -> list[tuple[int, list[float]]]:
     """Deterministic centroid table for IVF — Forgy seeding + Lloyd rounds.
 
     Seeds are ``num_cells`` ACTUAL vectors (the hash-order-first rows — a
@@ -198,20 +198,19 @@ def kmeans_like_centroids(
 
     Each Lloyd round collects the (num_cells × dim) centroid matrix to the
     driver — O(C·d) floats, an offline build step — and re-assigns via one
-    numpy matmul per Arrow batch. Returns (cell, centroid array<double>).
+    numpy matmul per Arrow batch. Returns the last round's collected
+    ``(cell, centroid)`` rows, so no caller re-runs that round's scan.
     """
     v = vectors.select(F.col(id_col).alias("_id"), _as_double(F.col(vec_col)).alias("_v"))
     seeds = v.orderBy(F.xxhash64(F.col("_id"), F.lit(5))).limit(num_cells).collect()
     matrix = [r["_v"] for r in seeds]
     cells = list(range(len(matrix)))
-    assigned = None
     for _ in range(max(1, iterations)):
         assigned = v.withColumn("cell", _nearest_cell_udf(matrix, cells)(F.col("_v")))
-        centroids = _cell_means(assigned)
-        rows = centroids.collect()  # O(num_cells) — offline build step
+        rows = _cell_means(assigned).collect()  # O(num_cells) — offline build step
         matrix = [r["centroid"] for r in rows]
         cells = [r["cell"] for r in rows]
-    return _cell_means(assigned)
+    return list(zip(cells, matrix))
 
 
 @dataclass
@@ -241,7 +240,6 @@ class IVFIndex:
 
     def unpersist(self) -> None:
         self.assignments.unpersist()
-        self.centroids.unpersist()
 
 
 def _assign_cells(vectors: DataFrame, id_col: str, vec_col: str, matrix, cells) -> DataFrame:
@@ -268,16 +266,16 @@ def build_ivf_index(
     is only appropriate when the corpus size is known and bounded."""
     if num_cells is None:
         num_cells = auto_ivf_cells(vectors.count())
-    centroids = kmeans_like_centroids(vectors, num_cells, id_col, vec_col, iterations)
-    crows = centroids.collect()  # O(num_cells) — offline build step
-    cells = [r["cell"] for r in crows]
-    matrix = np.array([r["centroid"] for r in crows], dtype=np.float64)
+    crows = kmeans_like_centroids(vectors, num_cells, id_col, vec_col, iterations)
+    cells = [c for c, _ in crows]
+    matrix = np.array([m for _, m in crows], dtype=np.float64)
     # final assignment: same vectorized numpy-matmul path as the Lloyd
     # rounds — one scan, no join, no per-pair HOF cosine
     assignments = _assign_cells(vectors, id_col, vec_col, matrix, cells)
+    # An index, not an intermediate: held in memory until IVFIndex.unpersist.
     assignments = assignments.repartition("cell").persist()
     assignments.count()
-    centroids = centroids.persist()
+    centroids = vectors.sparkSession.createDataFrame(crows, "cell int, centroid array<double>")
     return IVFIndex(assignments, centroids, id_col, num_cells, cells, matrix)
 
 

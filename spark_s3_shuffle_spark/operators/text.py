@@ -16,6 +16,7 @@ import pandas as pd  # module-level: pandas_udf resolves stringized hints here
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from spark_s3_shuffle_spark.operators.materialize import materialize
 from spark_s3_shuffle_spark.sources.catalog import widen_small_scan
 
 #: Tiny deterministic English stoplist for quality scoring / lang-id.
@@ -364,14 +365,14 @@ def bpe_train(
     (r11-opt) removes the per-round Arrow/Python worker round-trip plus
     the per-round persist+count materialization job the Python UDF chain
     needed: a round is now exactly ONE action (the top-pair lookup) over
-    the persisted base frame with k cheap narrow rewrites on top.
+    the materialized base frame with k cheap narrow rewrites on top.
 
     Driver traffic per round: exactly ONE (pair, count) row. Returns the
     merge list in rank order — O(num_merges) strings, the model artifact.
     """
-    words = _word_counts(df, text_col).select(
-        F.expr("split(word, '')").alias("syms"), "cnt"
-    ).persist()
+    words = materialize(
+        _word_counts(df, text_col).select(F.expr("split(word, '')").alias("syms"), "cnt")
+    )
 
     def rewrite(syms, a: str, b: str):
         return F.aggregate(
@@ -390,12 +391,10 @@ def bpe_train(
     # Lineage bound (r12-opt, ADVICE r11): each round stacks one nested
     # aggregate() rewrite on the previous frame, so round i re-analyzes
     # and re-evaluates i prior rewrites — O(num_merges^2) plan growth.
-    # Collapsing the frame every _BPE_CHECKPOINT_EVERY merges
-    # (localCheckpoint: blocks released by the ContextCleaner, nothing
-    # registered in the CacheManager) bounds plan depth at a constant
-    # while keeping each round exactly ONE action. At the declared vocab
-    # sizes (num_merges <= 8 in the registry) this never triggers and
-    # the plan is byte-identical to the r11 shape.
+    # Materializing the frame every _BPE_CHECKPOINT_EVERY merges bounds
+    # plan depth at a constant while keeping each round exactly ONE
+    # action. At the declared vocab sizes (num_merges <= 8 in the
+    # registry) this never triggers.
     checkpoint_every = _BPE_CHECKPOINT_EVERY
     cur = words
     merges: list[tuple[str, str]] = []
@@ -419,8 +418,7 @@ def bpe_train(
         merges.append((a, b))
         cur = cur.select(rewrite(F.col("syms"), a, b).alias("syms"), "cnt")
         if (i + 1) % checkpoint_every == 0:
-            cur = cur.localCheckpoint(eager=False)
-    words.unpersist()
+            cur = materialize(cur)
     return merges
 
 

@@ -10,6 +10,7 @@ from spark_s3_shuffle_spark.operators import multimodal as MM
 from spark_s3_shuffle_spark.operators import similarity as SIM
 from spark_s3_shuffle_spark.operators import text as T
 from spark_s3_shuffle_spark.operators.asof import asof_join, asof_join_pandas
+from spark_s3_shuffle_spark.operators.materialize import materialize
 
 
 # ---------------------------------------------------------------------------
@@ -474,42 +475,51 @@ def test_ivf_build_probe_split(spark, sf_dir):
         idx.unpersist()
 
 
+def test_ivf_build_collects_centroids_once(spark, sf_dir):
+    """One build = the seed sample, one Lloyd round's centroid collect and
+    the assignment pin. The final centroids are the Lloyd round's rows
+    already on the driver; re-deriving them re-ran an assignment scan plus
+    a two-level aggregation (11 jobs per build instead of 8)."""
+    import uuid
+
+    from spark_s3_shuffle_spark.plans.inspect import job_group
+    from spark_s3_shuffle_spark.sources.catalog import load_table
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    tag = f"ivf-build-{uuid.uuid4().hex[:8]}"
+    with job_group(spark, tag):
+        idx = SIM.build_ivf_index(emb, num_cells=8, iterations=1)
+    try:
+        jobs = len(spark.sparkContext.statusTracker().getJobIdsForGroup(tag))
+        assert jobs <= 8, jobs
+        assert idx.centroids.schema.simpleString() == "struct<cell:int,centroid:array<double>>"
+        assert [r["cell"] for r in idx.centroids.collect()] == idx.cells
+    finally:
+        idx.unpersist()
+
+
 # ---------------------------------------------------------------------------
 # skew mitigation
 # ---------------------------------------------------------------------------
 
-def _max_task_shuffle_read(spark, group: str) -> int:
-    """Largest per-TASK shuffle-read record count across every stage of the
-    jobs tagged with ``group`` — read from the AppStatusStore (the UI's task
-    table) via the status tracker: real task-level listener metrics, no
-    callback plumbing."""
+def _task_shuffle_reads(spark, group: str) -> list[int]:
+    """Shuffle-read record count of every TASK of every stage of the jobs
+    tagged with ``group`` — read from the AppStatusStore (the UI's task
+    table): real task-level listener metrics, no callback plumbing. The
+    listener bus is drained first, so a stage whose completion event is
+    still queued does not read as partial metrics."""
     sc = spark.sparkContext
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     store = sc._jsc.sc().statusStore()
-    mx = 0
+    reads = []
     for jid in sc.statusTracker().getJobIdsForGroup(group):
         for sid in sc.statusTracker().getJobInfo(jid).stageIds:
             tasks = store.taskList(sid, 0, 10000)
             for j in range(tasks.size()):
                 tm = tasks.apply(j).taskMetrics()
                 if tm.isDefined():
-                    mx = max(mx, int(tm.get().shuffleReadMetrics().recordsRead()))
-    return mx
-
-
-def _sum_task_shuffle_read(spark, group: str) -> int:
-    """Total shuffle-read RECORDS across every task of the jobs tagged with
-    ``group`` (the volume twin of :func:`_max_task_shuffle_read`)."""
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    total = 0
-    for jid in sc.statusTracker().getJobIdsForGroup(group):
-        for sid in sc.statusTracker().getJobInfo(jid).stageIds:
-            tasks = store.taskList(sid, 0, 10000)
-            for j in range(tasks.size()):
-                tm = tasks.apply(j).taskMetrics()
-                if tm.isDefined():
-                    total += int(tm.get().shuffleReadMetrics().recordsRead())
-    return total
+                    reads.append(int(tm.get().shuffleReadMetrics().recordsRead()))
+    return reads
 
 
 def _zipf_frame(spark):
@@ -560,8 +570,8 @@ def test_skew_straggler_vs_salted_bound_via_task_metrics(spark):
         sc.setJobGroup(f"salted-{tag}", "salted per-task bound")
         SK.salted_top_k_per_group(df, ["k"], [F.col("v").desc()], 5, salt=16).count()
         sc.setJobGroup(f"done-{tag}", "")
-        unsalted = _max_task_shuffle_read(spark, f"unsalted-{tag}")
-        salted = _max_task_shuffle_read(spark, f"salted-{tag}")
+        unsalted = max(_task_shuffle_reads(spark, f"unsalted-{tag}"))
+        salted = max(_task_shuffle_reads(spark, f"salted-{tag}"))
         # straggler: one task swallowed at least the hot key (~100k rows)
         assert unsalted > 90_000, unsalted
         # salting spreads it: worst task reads at most half the straggler's
@@ -1605,7 +1615,7 @@ def test_salted_join_equals_plain_join_and_spreads_hot_key(spark):
     binomial band — the property the operator exists for."""
     from pyspark.sql import functions as F
 
-    from spark_s3_shuffle_spark.operators import relational as R
+    from spark_s3_shuffle_spark.operators import skew as SK
 
     n_hot, buckets = 4000, 8
     rows = [(1, i) for i in range(n_hot)] + [(k, 10_000 + k) for k in range(2, 50)]
@@ -1616,24 +1626,23 @@ def test_salted_join_equals_plain_join_and_spreads_hot_key(spark):
 
     for how in ("inner", "left"):
         got = sorted(
-            tuple(r) for r in R.salted_join(fact, dim, "k", buckets, how=how).collect()
+            tuple(r) for r in SK.salted_join(fact, dim, "k", how, salt=buckets).collect()
         )
         exp = sorted(tuple(r) for r in fact.join(dim, "k", how).collect())
         assert got == exp, how
 
     # spread: per-salt share of the hot key within [1/4x, 4x] of n/B
     salts = (
-        fact.where(F.col("k") == 1)
-        .select(((F.xxhash64("k", "payload") % buckets + buckets) % buckets).alias("s"))
-        .groupBy("s").count().collect()
+        SK.with_salt(fact.where(F.col("k") == 1), buckets)
+        .groupBy("_salt").count().collect()
     )
     assert len(salts) == buckets
     for r in salts:
         assert n_hot / buckets / 4 <= r["count"] <= n_hot / buckets * 4
 
     # determinism: two runs derive identical salted assignments
-    a = R.salted_join(fact, dim, "k", buckets).orderBy("payload").collect()
-    b = R.salted_join(fact, dim, "k", buckets).orderBy("payload").collect()
+    a = SK.salted_join(fact, dim, "k", salt=buckets).orderBy("payload").collect()
+    b = SK.salted_join(fact, dim, "k", salt=buckets).orderBy("payload").collect()
     assert a == b
 
 
@@ -1731,8 +1740,8 @@ def test_hll_by_key_shuffle_bounded_vs_exact_distinct(spark):
         sc.setJobGroup(f"hll-{tag}", "per-group HLL registers")
         hll_distinct_by_key(df, ["g"], "v").collect()
         sc.setJobGroup(f"done-{tag}", "")
-        exact_rows = _sum_task_shuffle_read(spark, f"exact-{tag}")
-        hll_rows = _sum_task_shuffle_read(spark, f"hll-{tag}")
+        exact_rows = sum(_task_shuffle_reads(spark, f"exact-{tag}"))
+        hll_rows = sum(_task_shuffle_reads(spark, f"hll-{tag}"))
         # exact: ~n distinct (g, v) pairs cross the wire; HLL: bounded by
         # |groups| * 256 per UPSTREAM PARTITION on the first exchange plus
         # the |groups|*256-row fold — measured 32,800 at 32 partitions,
@@ -2031,8 +2040,8 @@ def test_prefix_aggregates_avoid_single_task_funnel(spark):
             "b"
         ).count().collect()
         sc.setJobGroup(f"done-{tag}", "")
-        single_max = _max_task_shuffle_read(spark, f"single-{tag}")
-        dist_max = _max_task_shuffle_read(spark, f"dist-{tag}")
+        single_max = max(_task_shuffle_reads(spark, f"single-{tag}"))
+        dist_max = max(_task_shuffle_reads(spark, f"dist-{tag}"))
         assert single_max >= n, single_max
         assert dist_max * 4 <= single_max, (single_max, dist_max)
     finally:
@@ -2045,20 +2054,94 @@ def test_prefix_aggregates_avoid_single_task_funnel(spark):
         df.unpersist()
 
 
-def test_prefix_primitives_leave_no_cache_entry(spark):
-    """Round-7 leak fix: the pinned range frame uses localCheckpoint, not
-    persist(), so prefix primitives register NOTHING in Catalyst's
-    CacheManager — a bench sweep over dozens of prefix queries must not
-    accumulate session-lifetime cached frames. (localCheckpoint blocks
-    are ContextCleaner-released when the result frame is GC'd.)"""
+def _run_prefix(spark, docs, monkeypatch):
     from spark_s3_shuffle_spark.operators import prefix as PX
 
-    cm = spark._jsparkSession.sharedState().cacheManager()
-    cm.clearCache()
     df = _prefix_fixture(spark)
     PX.global_ntile(df, 4, ["grp", "k"], out="b").count()
     PX.running_sum(df, ["grp", "k"], "v").count()
-    assert cm.isEmpty(), "prefix primitives must not register cache entries"
+
+
+def _run_bpe_train(spark, docs, monkeypatch):
+    T.bpe_train(docs, num_merges=3)
+
+
+def _run_bpe_train_interrupted(spark, docs, monkeypatch):
+    # a zero collapse period raises right after the first round's action,
+    # i.e. after the word frame is materialized and before training ends
+    monkeypatch.setattr(T, "_BPE_CHECKPOINT_EVERY", 0)
+    with pytest.raises(ZeroDivisionError):
+        T.bpe_train(docs, num_merges=3)
+
+
+def _run_minhash_dedup(spark, docs, monkeypatch):
+    D.minhash_dedup(docs, num_hashes=32, bands=16).count()
+
+
+def _run_pagerank(spark, docs, monkeypatch):
+    from spark_s3_shuffle_spark.operators import graph as GR
+
+    raw = [(0, 1), (1, 2), (2, 0), (0, 2), (3, 0)]
+    edges = GR.edge_weights(spark.createDataFrame(raw, "a long, b long"), "a", "b")
+    GR.pagerank_fixed(edges, iterations=3).count()
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_run_prefix, _run_bpe_train, _run_bpe_train_interrupted, _run_minhash_dedup, _run_pagerank],
+    ids=["prefix", "bpe_train", "bpe_train_interrupted", "minhash_dedup", "pagerank"],
+)
+def test_primitives_leave_no_cache_entry(spark, docs, monkeypatch, run):
+    """Multi-job primitives pin their intermediates through
+    ``materialize``, which registers NOTHING in Catalyst's CacheManager —
+    a bench sweep over dozens of such queries must not accumulate
+    session-lifetime cached frames, and neither may a primitive that
+    raises half-way."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    cm.clearCache()
+    run(spark, docs, monkeypatch)
+    assert cm.isEmpty(), "primitives must not register cache entries"
+
+
+#: The only calls allowed to pin a frame: the materialization helper and
+#: the IVF index (a long-lived in-memory index with its own unpersist).
+_PIN_CALLS = {"localCheckpoint", "checkpoint", "persist", "cache"}
+_PIN_ALLOWED = {
+    ("operators/materialize.py", "materialize"),
+    ("operators/similarity.py", "build_ivf_index"),
+    ("operators/similarity.py", "extend_ivf_index"),
+}
+
+
+def test_materialization_goes_through_one_helper():
+    """Every ``.localCheckpoint(`` / ``.checkpoint(`` / ``.persist(`` /
+    ``.cache()`` call in the package sits in ``operators/materialize.py``
+    or at the IVF index build sites, so the materialization policy has one
+    switch point."""
+    import ast
+    import pathlib
+
+    import spark_s3_shuffle_spark
+
+    root = pathlib.Path(spark_s3_shuffle_spark.__file__).parent
+    found = []  # (module, enclosing function, method, line)
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        stack = [(ast.parse(path.read_text(), str(path)), None)]
+        while stack:
+            node, func = stack.pop()
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                func = node.name
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _PIN_CALLS
+            ):
+                found.append((rel, func, node.func.attr, node.lineno))
+            stack.extend((child, func) for child in ast.iter_child_nodes(node))
+    stray = sorted(f for f in found if f[:2] not in _PIN_ALLOWED)
+    assert not stray, stray
+    assert ("operators/materialize.py", "materialize") in {f[:2] for f in found}
 
 
 def test_quantized_batch_join_null_ragged_and_empty_probes(spark):
@@ -2288,14 +2371,14 @@ def test_jpeg_decode_spark_path(spark):
     assert got == {9: "false", 10: "false"}
 
 
-def test_pin_for_sort_equivalent(spark):
-    """The pin_for_sort materialization (decode once, then sort the narrow
-    feature rows) is a pure recompute cut: the ordered rows are the ones
-    the unpinned sort produced."""
+def test_materialize_before_sort_equivalent(spark):
+    """Materializing a media feature frame before its global sort (decode
+    once, then sort the narrow feature rows) is a pure recompute cut: the
+    ordered rows are the ones the unpinned sort produced."""
     df = spark.createDataFrame([(i,) for i in (9, 2, 41, 0, 17)], "doc_id long")
     rows = [
         tuple(r)
-        for r in MM.pin_for_sort(
+        for r in materialize(
             MM.extract_jpeg_features(MM.plant_jpeg_media(df, "doc_id"))
         ).orderBy("media_id").collect()
     ]

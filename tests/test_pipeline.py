@@ -340,7 +340,7 @@ def test_shard_assign_avoids_global_sort_bottleneck(spark):
     import uuid
 
     from pyspark.sql import Window
-    from tests.test_operators import _max_task_shuffle_read
+    from tests.test_operators import _task_shuffle_reads
 
     sc = spark.sparkContext
     n = 400_000
@@ -363,8 +363,8 @@ def test_shard_assign_avoids_global_sort_bottleneck(spark):
         # and make the comparison vacuous)
         PL.shard_assign(df, "doc_id", 16).repartition(16, F.col("shard")).count()
         sc.setJobGroup(f"done-{tag}", "")
-        global_max = _max_task_shuffle_read(spark, f"global-{tag}")
-        sharded_max = _max_task_shuffle_read(spark, f"sharded-{tag}")
+        global_max = max(_task_shuffle_reads(spark, f"global-{tag}"))
+        sharded_max = max(_task_shuffle_reads(spark, f"sharded-{tag}"))
         # the global-order window drags every row through ONE task
         assert global_max >= n, global_max
         # hash-mod sharding spreads the corpus: worst task holds a small
