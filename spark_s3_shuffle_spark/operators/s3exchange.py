@@ -54,9 +54,13 @@ cannot fake:
 
 Read-side concurrency is ADAPTIVE (A10 parity,
 `S3BufferedPrefetchIterator.scala:32-69`): see
-:class:`AdaptiveFetcher` — each reader task hill-climbs its prefetch
+:class:`AdaptiveFetcher` — a reader task hill-climbs its prefetch
 thread count from observed GET latencies instead of pinning a static
-readahead, and reports the latency histogram the tuner consumed.
+readahead, and reports the latency histogram the tuner consumed. The
+climb starts only after the first probe window of ``WINDOW`` (6) keys,
+fetched on ``MIN_THREADS`` (1) thread: a task with at most 6 keys
+fetches them one at a time. On 4 cores that is every reader task of
+the benchmark's ``exchange_rw`` (16 objects over 4 readers, 2 over 2).
 """
 
 from __future__ import annotations
@@ -298,7 +302,10 @@ class AdaptiveFetcher:
     window's aggregate throughput improved it keeps climbing, otherwise
     it steps back — converging near the store's sweet spot instead of
     pinning a static readahead. Records per-GET latencies so callers can
-    export the histogram the tuner consumed."""
+    export the histogram the tuner consumed.
+
+    The first window runs on ``MIN_THREADS``, so a call with at most
+    ``WINDOW`` keys never climbs: it fetches its keys one at a time."""
 
     MIN_THREADS = 1
     MAX_THREADS = 16

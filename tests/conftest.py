@@ -5,6 +5,9 @@ import pytest
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, _REPO)
+# tools/check_correctness.py holds the one DuckDB oracle comparator the
+# tests share.
+sys.path.insert(0, os.path.join(_REPO, "tools"))
 
 # transformWithState (B60) needs google.protobuf in BOTH the driver and the
 # Spark Python workers. This container has no protobuf wheel, but a pure-

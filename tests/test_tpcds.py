@@ -11,6 +11,7 @@ import datetime
 
 import pytest
 
+from check_correctness import duck_connection
 from spark_s3_shuffle_spark.sources import tpcds
 
 
@@ -162,20 +163,6 @@ def test_ds_pack_covers_all_99_official_numbers():
     assert covered == set(range(1, 100)), sorted(set(range(1, 100)) - covered)
 
 
-def _duck(sf_dir):
-    """DuckDB connection with the ten base fixture views registered — the
-    oracle engine runs the SAME composed text the Spark leg runs."""
-    import duckdb
-
-    con = duckdb.connect()
-    for t in ("region", "nation", "customer", "supplier", "part", "orders",
-              "lineitem", "events", "documents", "embeddings"):
-        con.execute(
-            f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con
-
-
 def test_ds64_preagg_grain_deviation_is_confined(sf_dir):
     """ds64 (round-10, per round-9 advice): the cs_ui legs pre-aggregate
     both catalog channels to the (item, order) grain before joining,
@@ -190,7 +177,7 @@ def test_ds64_preagg_grain_deviation_is_confined(sf_dir):
        sides, pre-agg-then-join and join-then-agg sums agree to the
        cent, and every differing item touches a repeated grain.
     """
-    con = _duck(sf_dir)
+    con = duck_connection(sf_dir)
     sql = tpcds.compose("""
 WITH official AS (
   SELECT cs_item_sk AS item, SUM(cs_ext_list_price) AS sale,
@@ -247,7 +234,7 @@ def test_ds14b_week_lookup_nonempty(sf_dir):
 
     from spark_s3_shuffle_spark.queries.registry import QUERIES
 
-    con = _duck(sf_dir)
+    con = duck_connection(sf_dir)
     for year in (1996, 1997):
         wk = con.execute(tpcds.compose(
             f"SELECT d_week_seq FROM date_dim WHERE d_year = {year} AND d_moy = 10 AND d_dom = 11"
@@ -258,5 +245,5 @@ def test_ds14b_week_lookup_nonempty(sf_dir):
     gate_sf = "/root/testdata/sf0.01"
     if not os.path.isdir(gate_sf):
         pytest.skip("oracle-gate fixture not present")
-    rows = _duck(gate_sf).execute(QUERIES["q316_sql_text_ds14b"].oracle).fetchall()
+    rows = duck_connection(gate_sf).execute(QUERIES["q316_sql_text_ds14b"].oracle).fetchall()
     assert len(rows) > 0, "ds14b returned no rows at the oracle-gate SF — fixture drift degraded the query"

@@ -3,6 +3,8 @@
 Runs every registry query through Spark AND its DuckDB oracle on the same
 parquet fixtures, then compares row count, column names, and values
 (columns sorted by name, rows sorted, floats rounded-as-declared).
+``check_query`` is the one comparator: tier-1's ``test_query_runs``
+(tests/test_queries_smoke.py) calls it for every oracle-backed query.
 
 Usage: python tools/check_correctness.py [--json OUT.json] [sf_dir] [query ...]
 
@@ -64,6 +66,63 @@ def rows_canon(cols, rows):
     return sorted((tuple(canon(r[i]) for i in order) for r in rows), key=repr)
 
 
+class SparkContextDead(RuntimeError):
+    """The session died under a query: an infra failure, not a verdict."""
+
+
+def check_query(spark, con, spec, sf_dir: str) -> dict:
+    """Run ``spec`` through Spark and its DuckDB oracle on ``con`` and
+    compare column names, row count, then canonical values; print one
+    ``ok``/``FAIL`` line and return the query's record. An oracle-less
+    query is rows-only: its ``hash_match`` stays None. Raises
+    SparkContextDead instead of recording a verdict when the session is
+    gone."""
+    name = spec.name
+    rec = {
+        "rows_match": False, "schema_match": False, "hash_match": None,
+        "spark_rows": None, "oracle_rows": None, "err": None,
+    }
+
+    def fail(err, shown=None):
+        rec["err"] = err
+        print(f"FAIL {name}: {shown or err}")
+        return rec
+
+    try:
+        sdf = spec.builder(spark, sf_dir)
+        scols = sdf.columns
+        srows = [tuple(r) for r in sdf.collect()]
+        rec["spark_rows"] = len(srows)
+    except Exception as e:  # noqa: BLE001
+        if "stopped SparkContext" in str(e) or spark.sparkContext._jsc is None:
+            raise SparkContextDead(type(e).__name__) from e
+        return fail(f"SPARK ERROR: {type(e).__name__}: {e}", f"spark error {e}")
+    if spec.oracle is None:
+        rec["rows_match"] = rec["schema_match"] = True
+        print(f"ok   {name}: rows-only ({len(srows)} rows)")
+        return rec
+    try:
+        res = con.execute(spec.oracle)
+        dcols = [d[0] for d in res.description]
+        drows = res.fetchall()
+        rec["oracle_rows"] = len(drows)
+    except Exception as e:  # noqa: BLE001
+        return fail(f"DUCKDB ERROR: {type(e).__name__}: {e}", f"duckdb error {e}")
+    if sorted(scols) != sorted(dcols):
+        return fail(f"columns {scols} vs {dcols}")
+    rec["schema_match"] = True
+    if len(srows) != len(drows):
+        return fail(f"rowcount {len(srows)} vs {len(drows)}")
+    rec["rows_match"] = True
+    sc, dc = rows_canon(scols, srows), rows_canon(dcols, drows)
+    if sc != dc:
+        diff = [(a, b) for a, b in zip(sc, dc) if a != b][:3]
+        return fail(f"values differ, first diffs: {diff}", f"values differ; first diffs: {diff}")
+    rec["hash_match"] = True
+    print(f"ok   {name}: {len(srows)} rows match")
+    return rec
+
+
 def main() -> int:
     argv = sys.argv[1:]
     json_out = None
@@ -89,73 +148,20 @@ def main() -> int:
                 json.dump(report, fh, indent=2)
             os.replace(tmp, json_out)
 
-    ran = 0
-    for name, spec in selected:
-        ran += 1
-        rec = {
-            "rows_match": False, "schema_match": False, "hash_match": None,
-            "spark_rows": None, "oracle_rows": None, "err": None,
-        }
-        report[name] = rec
+    for ran, (name, spec) in enumerate(selected, 1):
         try:
-            sdf = spec.builder(spark, sf_dir)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            rec["spark_rows"] = len(srows)
-        except Exception as e:  # noqa: BLE001
-            if "stopped SparkContext" in str(e) or spark.sparkContext._jsc is None:
-                # infra death, not a query verdict: drop the misleading
-                # per-query record and mark the whole sweep aborted.
-                del report[name]
-                meta["aborted"] = f"SparkContext dead at {name}: {type(e).__name__}"
-                print(f"ABORT {name}: {meta['aborted']}")
-                flush()
-                break
-            rec["err"] = f"SPARK ERROR: {type(e).__name__}: {e}"
+            report[name] = rec = check_query(spark, con, spec, sf_dir)
+        except SparkContextDead as e:
+            # infra death, not a query verdict: no per-query record, and
+            # the whole sweep is marked aborted.
+            meta["aborted"] = f"SparkContext dead at {name}: {e}"
+            print(f"ABORT {name}: {meta['aborted']}")
+            flush()
+            break
+        if rec["err"]:
             failures.append((name, rec["err"]))
-            print(f"FAIL {name}: spark error {e}")
-            meta["completed"] = ran
-            flush()
-            continue
-        try:
-            if spec.oracle is None:
-                rec["rows_match"] = rec["schema_match"] = True
-                print(f"ok   {name}: rows-only ({len(srows)} rows)")
-                continue
-            try:
-                res = con.execute(spec.oracle)
-                dcols = [d[0] for d in res.description]
-                drows = res.fetchall()
-                rec["oracle_rows"] = len(drows)
-            except Exception as e:  # noqa: BLE001
-                rec["err"] = f"DUCKDB ERROR: {type(e).__name__}: {e}"
-                failures.append((name, rec["err"]))
-                print(f"FAIL {name}: duckdb error {e}")
-                continue
-            if sorted(scols) != sorted(dcols):
-                rec["err"] = f"columns {scols} vs {dcols}"
-                failures.append((name, rec["err"]))
-                print(f"FAIL {name}: columns {scols} vs {dcols}")
-                continue
-            rec["schema_match"] = True
-            if len(srows) != len(drows):
-                rec["err"] = f"rowcount {len(srows)} vs {len(drows)}"
-                failures.append((name, rec["err"]))
-                print(f"FAIL {name}: rowcount {len(srows)} vs {len(drows)}")
-                continue
-            rec["rows_match"] = True
-            sc, dc = rows_canon(scols, srows), rows_canon(dcols, drows)
-            if sc != dc:
-                diff = [(a, b) for a, b in zip(sc, dc) if a != b][:3]
-                rec["err"] = f"values differ, first diffs: {diff}"
-                failures.append((name, rec["err"]))
-                print(f"FAIL {name}: values differ; first diffs: {diff}")
-                continue
-            rec["hash_match"] = True
-            print(f"ok   {name}: {len(srows)} rows match")
-        finally:
-            meta["completed"] = ran
-            flush()
+        meta["completed"] = ran
+        flush()
     done = meta["completed"]
     print(f"\n{done - len(failures)}/{done} pass ({done}/{meta['total']} ran)")
     if meta["aborted"]:
