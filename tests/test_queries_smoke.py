@@ -2,7 +2,8 @@
 oracle through tools/check_correctness.py's one comparator (``check_query``,
 the same code the full sweep runs), and returns rows unless it is empty on
 both sides at this scale. The seven oracle-less queries are pinned by row
-digest instead, at two shuffle-partition counts. Also covers B2: parquet
+digest instead, at two shuffle-partition counts, and the media and vector
+queries are value-checked at the second count too. Also covers B2: parquet
 sink write + re-read unchanged, and the correctness CLI's own contract."""
 
 import hashlib
@@ -11,6 +12,7 @@ import os
 import subprocess
 import sys
 import tempfile
+from contextlib import contextmanager
 
 import pytest
 
@@ -68,28 +70,34 @@ EMPTY_AT_SF0001 = frozenset({
     "q317_sql_text_ds64",
 })
 
-#: Shuffle-partition counts an oracle-less query's digest must hold at:
-#: the session's 8, and 7. Each count sets the whole engine SQL profile,
-#: AQE's initial partition number included, which AQE's shuffles use in
-#: place of spark.sql.shuffle.partitions.
-DIGEST_PARTITIONS = (8, 7)
+#: Shuffle-partition counts a query is checked at: the session's 8, and 7.
+#: Each count sets the whole engine SQL profile, AQE's initial partition
+#: number included, which AQE's shuffles use in place of
+#: spark.sql.shuffle.partitions.
+PARTITION_COUNTS = (8, 7)
 
 
-def _rows_digest(spark, sf_dir, spec, partitions):
-    """(row count, sha256) of ``spec``'s canonical rows (columns in name
-    order, rows sorted, floats rounded as the oracle comparator rounds
-    them), run under the engine SQL profile at ``partitions`` shuffle
+@contextmanager
+def _engine_profile(spark, partitions):
+    """Run the body under the engine SQL profile at ``partitions`` shuffle
     partitions; the session's confs are restored after."""
     confs = engine_sql_confs(partitions)
     saved = {k: spark.conf.get(k) for k in confs}
     try:
         for k, v in confs.items():
             spark.conf.set(k, v)
-        sdf = spec.builder(spark, sf_dir)
-        rows = [tuple(r) for r in sdf.collect()]
+        yield
     finally:
         for k, v in saved.items():
             spark.conf.set(k, v)
+
+
+def _rows_digest(spark, sf_dir, spec):
+    """(row count, sha256) of ``spec``'s canonical rows: columns in name
+    order, rows sorted, floats rounded as the oracle comparator rounds
+    them."""
+    sdf = spec.builder(spark, sf_dir)
+    rows = [tuple(r) for r in sdf.collect()]
     canon = (sorted(sdf.columns), rows_canon(sdf.columns, rows))
     return len(rows), hashlib.sha256(repr(canon).encode()).hexdigest()
 
@@ -98,16 +106,65 @@ def _rows_digest(spark, sf_dir, spec, partitions):
 def test_query_runs(spark, sf_dir, duck, name):
     """Each query's values equal its DuckDB oracle's (check_query's
     record), and it returns rows unless it is in EMPTY_AT_SF0001; an
-    oracle-less query gives its pinned digest at every DIGEST_PARTITIONS
+    oracle-less query gives its pinned digest at every PARTITION_COUNTS
     count."""
     spec = QUERIES[name]
     if spec.oracle is None:
-        for parts in DIGEST_PARTITIONS:
-            assert _rows_digest(spark, sf_dir, spec, parts) == PINNED_ROWS[name], parts
+        for parts in PARTITION_COUNTS:
+            with _engine_profile(spark, parts):
+                assert _rows_digest(spark, sf_dir, spec) == PINNED_ROWS[name], parts
         return
     rec = check_query(spark, duck, spec, sf_dir)
     assert rec["hash_match"] is True, rec["err"]
     assert (rec["spark_rows"] == 0) == (name in EMPTY_AT_SF0001), rec["spark_rows"]
+
+
+#: The oracle-backed queries whose operators compute per partition in
+#: Python: the media tier (every query plants or reads payloads and decodes
+#: them through multimodal's one Arrow scan) and the vector family
+#: (similarity and the embedding near-dup operators of dedup).
+ORACLE_CHECKED_QUERIES = [
+    "q47_multimodal_features",
+    "q318_png_decode",
+    "q319_jpeg_decode",
+    "q320_video_decode",
+    "q321_mjpeg_video_decode",
+    "q322_adpcm_audio_decode",
+    "q324_ulaw_audio_decode",
+    "q325_alaw_audio_decode",
+    "q326_rle8_video_decode",
+    "q34_cosine_topk",
+    "q45_embedding_neardup",
+    "q81_semantic_dedup",
+    "q97_quantized_topk",
+    "q120_batch_ann_join",
+    "q328_kmeans_quantized",
+    "q330_label_centroid_profile",
+]
+
+
+@pytest.mark.parametrize("name", ORACLE_CHECKED_QUERIES)
+def test_media_query_matches_duckdb_oracle(spark, sf_dir, duck, name):
+    """The media and vector queries equal their oracle, with rows, at the
+    second PARTITION_COUNTS count too (test_query_runs checks the first):
+    decoded features, top-k lists, near-dup pairs and cluster profiles do
+    not move with the partitioning their Arrow batches come from."""
+    with _engine_profile(spark, PARTITION_COUNTS[1]):
+        rec = check_query(spark, duck, QUERIES[name], sf_dir)
+    assert rec["hash_match"] is True, rec["err"]
+    assert rec["spark_rows"] > 0
+
+
+#: The approximate vector queries among PINNED_ROWS: a change to the IVF or
+#: sign-LSH kernels that alters which neighbours they return fails here.
+APPROX_VECTOR_QUERIES = ["q120b_batch_ivf_join", "q34b_ivf_topk", "q34c_lsh_topk"]
+
+
+@pytest.mark.parametrize("name", APPROX_VECTOR_QUERIES)
+def test_approx_vector_query_rows_pinned(spark, sf_dir, name):
+    """The digests belong to the default sf0.001 fixture, read in the
+    session as it stands, without a conf swap."""
+    assert _rows_digest(spark, sf_dir, QUERIES[name]) == PINNED_ROWS[name]
 
 
 def test_q161_grouped_pairs_equivalent_to_self_join(spark, sf_dir, duck):
