@@ -4,10 +4,9 @@ A brand-new, Spark-first re-expression of the capabilities validated by
 IBM/spark-s3-shuffle (reference surveyed in SURVEY.md): the full relational
 operator surface its TPC-DS + RDD-shuffle workloads exercise, an
 object-store-friendly materialized-exchange utility (the reference's one
-genuinely custom idea, re-expressed as partitioned Parquet staging), RDD
-K/V-shuffle parity ops, Structured Streaming windowing, and a
-training-data-pipeline tier (dedup, similarity search, text analysis,
-multimodal columns).
+genuinely custom idea, re-expressed as partitioned Parquet staging),
+Structured Streaming windowing, and a training-data-pipeline tier (dedup,
+similarity search, text analysis, multimodal columns).
 
 Everything relational is declared through the DataFrame/SQL API so Catalyst
 plans it (predicate pushdown, column pruning, broadcast selection, AQE);

@@ -239,20 +239,6 @@ def extract_features(df: DataFrame) -> DataFrame:
     return _decode_scan(df, decode_stub, FEATURE_SCHEMA)
 
 
-def frame_sample_stub(df: DataFrame, every_n: int = 2) -> DataFrame:
-    """Frame-sampling plumbing: one output row per sampled frame index.
-
-    The frame *decode* is stubbed (frame index only); the explode shape —
-    rows multiply by frames/every_n before any shuffle — is the real design
-    decision and is tested.
-    """
-    feats = extract_features(df)
-    return feats.select(
-        "media_id",
-        F.explode(F.sequence(F.lit(0), F.greatest(F.col("n_frames") - 1, F.lit(0)), F.lit(every_n))).alias("frame_idx"),
-    )
-
-
 def decode_ppm(payload: bytes | None) -> dict:
     """REAL image decoder for binary PPM (P6) — the uncompressed RGB
     format parseable with zero media libraries, which narrows the decode

@@ -17,8 +17,8 @@ This module is the shared two-phase fix, exact to the row:
    tasks each hold ONE range shard (~n/P rows), never the whole frame.
 3. A per-partition summary (ONE row per shard) is folded into exclusive
    prefix offsets by a window over the P-row summary table — thousands
-   of rows at 100 TB, not data rows (the ``validate_total_sort``
-   boundary trick, `relational.py:161`).
+   of rows at 100 TB, not data rows (the boundary trick of
+   ``relational.validate_total_sort``).
 4. Broadcast the offsets back and combine: offset + local running value
    reproduces the single-task window's output bit-for-bit, because the
    range exchange guarantees every row of shard i precedes every row of

@@ -1,4 +1,4 @@
-"""Skew-mitigation utilities: salted joins and salted aggregation.
+"""Skew-mitigation utilities: salted joins, per-group top-k and salted aggregation.
 
 AQE's skew-join splitting (on in the engine session) handles moderate skew
 by splitting oversized *partitions*, but it cannot split a single hot KEY:
@@ -10,6 +10,8 @@ task on the build of a sort-merge join. Salting fixes that shape:
   (key, salt), spreading each hot key over ``salt`` tasks. Replication
   multiplies the small side's shuffle volume by ``salt`` — use only when
   the small side is modest and the skew is key-concentrated.
+- salted_top_k_per_group: two-pass per-group top-k for a skewed group
+  key, exactly equal to the one-window ``top_k_per_group``.
 - salted_agg: two-phase aggregation for hot grouping keys — partial agg on
   (key, salt), final agg on key. Only aggregates expressible as
   partial+final pairs (sum/count/min/max) qualify; Spark's own partial
@@ -26,7 +28,7 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -80,6 +82,22 @@ def salted_join(
     return b.join(s, [*keys, "_salt"], how).drop("_salt")
 
 
+def top_k_per_group(
+    df: DataFrame,
+    partition_by: Sequence[str | Column],
+    order_by: Sequence[str | Column],
+    k: int,
+    out: str = "rk",
+) -> DataFrame:
+    """Per-group top-k via rank filter (TPC-DS q67 shape) — one shuffle on
+    the group keys; the rank filter runs streaming over the sorted
+    partition, so memory is O(1) per group regardless of group size. A
+    window partition is ONE task, so a hot group key needs
+    :func:`salted_top_k_per_group`."""
+    w = Window.partitionBy(*partition_by).orderBy(*order_by)
+    return df.withColumn(out, F.rank().over(w)).filter(F.col(out) <= k)
+
+
 def salted_top_k_per_group(
     df: DataFrame,
     keys: Sequence[str],
@@ -89,7 +107,7 @@ def salted_top_k_per_group(
     out: str = "rk",
 ) -> DataFrame:
     """Two-pass per-group top-k for skewed group keys — the shape
-    ``windowing.top_k_per_group`` cannot survive when one key holds a large
+    ``top_k_per_group`` cannot survive when one key holds a large
     share of the table (a window partition is ONE task; AQE does not split
     skewed window partitions).
 
@@ -100,12 +118,10 @@ def salted_top_k_per_group(
     group has rank ≤ k in its salt bucket too, so pass 1 never discards a
     final top-k row. The second exchange moves at most salt·k rows per key,
     not the key's full row count."""
-    from spark_s3_shuffle_spark.operators import windowing as W
-
     ks = list(keys)
     salted = with_salt(df, salt)
-    partial = W.top_k_per_group(salted, [*ks, "_salt"], order_by, k, out).drop(out, "_salt")
-    return W.top_k_per_group(partial, ks, order_by, k, out)
+    partial = top_k_per_group(salted, [*ks, "_salt"], order_by, k, out).drop(out, "_salt")
+    return top_k_per_group(partial, ks, order_by, k, out)
 
 
 def salted_agg(

@@ -1,6 +1,6 @@
 """Text-analysis operators over the ``documents`` table (SURVEY §2.2 B50;
 north-star text tier): tokenization, token counting, quality scoring,
-language ID, document fingerprinting.
+language ID.
 
 All hot paths are built-in Column expressions (split/filter/aggregate run
 in codegen); nothing here crosses the Python boundary, so these scale to a
@@ -27,13 +27,6 @@ def tokens(text: Column, delimiter: str = " ") -> Column:
     """Whitespace tokenization with empty-token filtering (both sides of the
     DuckDB oracle filter empties; FIXTURES §4 rule 6)."""
     return F.filter(F.split(F.lower(text), delimiter), lambda t: t != F.lit(""))
-
-
-def bpe_ish_tokens(text: Column) -> Column:
-    """BPE-ish regex tokenization: splits off punctuation and numbers as
-    separate tokens (a rough proxy for subword token counting)."""
-    cleaned = F.regexp_replace(F.lower(text), r"([^\w\s])", r" $1 ")
-    return F.filter(F.split(cleaned, r"\s+"), lambda t: t != F.lit(""))
 
 
 def token_count(text: Column) -> Column:
@@ -121,13 +114,6 @@ def lang_id(text: Column) -> Column:
 
 def with_lang_id(df: DataFrame, text_col: str = "text", out: str = "lang_pred") -> DataFrame:
     return df.withColumn(out, lang_id(F.col(text_col)))
-
-
-def fingerprint(text: Column) -> Column:
-    """Deterministic document fingerprint (content hash). MD5 is used because
-    the DuckDB oracle computes the identical digest; the dedup tier also
-    offers xxhash64 (faster, Spark-only)."""
-    return F.md5(text)
 
 
 def gopher_quality_flags(df: DataFrame, text_col: str = "text") -> DataFrame:

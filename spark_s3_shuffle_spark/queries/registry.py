@@ -30,12 +30,12 @@ from spark_s3_shuffle_spark.operators import grouped as G
 from spark_s3_shuffle_spark.operators import matview as MV
 from spark_s3_shuffle_spark.operators import multimodal as MM
 from spark_s3_shuffle_spark.operators import pipeline as PL
-from spark_s3_shuffle_spark.operators import relational as R
 from spark_s3_shuffle_spark.operators import similarity as SIM
 from spark_s3_shuffle_spark.operators import text as T
-from spark_s3_shuffle_spark.operators import windowing as W
 from spark_s3_shuffle_spark.operators.asof import asof_join, asof_join_pandas
 from spark_s3_shuffle_spark.operators.materialize import materialize
+from spark_s3_shuffle_spark.operators.relational import validate_total_sort
+from spark_s3_shuffle_spark.operators.skew import top_k_per_group
 from spark_s3_shuffle_spark.sources.catalog import load_table
 
 Builder = Callable[[SparkSession, str], DataFrame]
@@ -112,11 +112,11 @@ def q02(spark, sf_dir):
 )
 def q03(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    proj = R.project(
-        li, "l_orderkey", "l_linenumber",
+    proj = li.select(
+        "l_orderkey", "l_linenumber",
         F.round(F.col("l_quantity") * F.col("l_extendedprice"), 2).alias("gross"),
     )
-    return R.top_k(proj, 100, "l_orderkey", "l_linenumber", "gross")
+    return proj.orderBy("l_orderkey", "l_linenumber", "gross").limit(100)
 
 
 @_register(
@@ -127,8 +127,8 @@ def q03(spark, sf_dir):
 )
 def q04(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    return R.filter_rows(
-        o, (F.col("o_orderstatus") == "F") & F.col("o_totalprice").between(1000, 100000)
+    return o.filter(
+        (F.col("o_orderstatus") == "F") & F.col("o_totalprice").between(1000, 100000)
     ).agg(F.count(F.lit(1)).alias("n"))
 
 
@@ -144,15 +144,15 @@ _Q05_SQL = """SELECT n_name, COUNT(*) AS c FROM customer
 @_register("q05_join_agg", _Q05_SQL, "B7 equi-join (sort-merge eligible)")
 def q05(spark, sf_dir):
     c, n = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "nation")
-    j = R.join(c, n, c.c_nationkey == n.n_nationkey)
-    return R.aggregate(j, ["n_name"], [F.count(F.lit(1)).alias("c")]).orderBy("n_name")
+    j = c.join(n, c.c_nationkey == n.n_nationkey)
+    return j.groupBy("n_name").agg(F.count(F.lit(1)).alias("c")).orderBy("n_name")
 
 
 @_register("q05b_broadcast_join", _Q05_SQL, "B8 broadcast hash join — same result, zero fact-side shuffle")
 def q05b(spark, sf_dir):
     c, n = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "nation")
-    j = R.join(c, n, c.c_nationkey == n.n_nationkey, broadcast_right=True)
-    return R.aggregate(j, ["n_name"], [F.count(F.lit(1)).alias("c")]).orderBy("n_name")
+    j = c.join(F.broadcast(n), c.c_nationkey == n.n_nationkey)
+    return j.groupBy("n_name").agg(F.count(F.lit(1)).alias("c")).orderBy("n_name")
 
 
 @_register(
@@ -164,8 +164,8 @@ def q05b(spark, sf_dir):
 )
 def q06(spark, sf_dir):
     c, o = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    j = R.join(c, o, c.c_custkey == o.o_custkey, how="left")
-    return R.aggregate(j, [c.c_custkey], [F.count(o.o_orderkey).alias("c")]).orderBy("c_custkey")
+    j = c.join(o, c.c_custkey == o.o_custkey, how="left")
+    return j.groupBy(c.c_custkey).agg(F.count(o.o_orderkey).alias("c")).orderBy("c_custkey")
 
 
 @_register(
@@ -175,7 +175,7 @@ def q06(spark, sf_dir):
 )
 def q07(spark, sf_dir):
     c, o = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    return R.semi_join(c, o, c.c_custkey == o.o_custkey).agg(F.count(F.lit(1)).alias("n"))
+    return c.join(o, c.c_custkey == o.o_custkey, "left_semi").agg(F.count(F.lit(1)).alias("n"))
 
 
 @_register(
@@ -186,9 +186,8 @@ def q07(spark, sf_dir):
 )
 def q08(spark, sf_dir):
     c, o = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    return R.anti_join(c, o.filter(F.col("o_custkey").isNotNull()), c.c_custkey == o.o_custkey).agg(
-        F.count(F.lit(1)).alias("n")
-    )
+    o = o.filter(F.col("o_custkey").isNotNull())
+    return c.join(o, c.c_custkey == o.o_custkey, "left_anti").agg(F.count(F.lit(1)).alias("n"))
 
 
 @_register(
@@ -200,7 +199,7 @@ def q08(spark, sf_dir):
 def q09(spark, sf_dir):
     r1 = _t(spark, sf_dir, "region").alias("r1")
     r2 = _t(spark, sf_dir, "region").alias("r2")
-    return R.cross_join(r1, r2, F.col("r1.r_regionkey") < F.col("r2.r_regionkey")).agg(
+    return r1.crossJoin(r2).filter(F.col("r1.r_regionkey") < F.col("r2.r_regionkey")).agg(
         F.count(F.lit(1)).alias("n")
     )
 
@@ -214,10 +213,12 @@ def q09(spark, sf_dir):
 def q10(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").alias("o")
     li = _t(spark, sf_dir, "lineitem").alias("l")
-    j = R.range_join(
-        o, li,
-        F.col("o.o_orderkey") == F.col("l.l_orderkey"),
-        F.col("l.l_shipdate") > F.col("o.o_orderdate"),
+    # the explicit equi conjunct plans a hash/sort-merge join with the range
+    # predicate as a residual filter, not a nested loop
+    j = o.join(
+        li,
+        (F.col("o.o_orderkey") == F.col("l.l_orderkey"))
+        & (F.col("l.l_shipdate") > F.col("o.o_orderdate")),
     )
     return j.agg(F.count(F.lit(1)).alias("n"))
 
@@ -269,18 +270,14 @@ def q11b(spark, sf_dir):
 )
 def q12(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return R.aggregate(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")), 2).cast("double").alias("sum_qty"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.min("l_extendedprice").alias("min_price"),
-            F.max("l_extendedprice").alias("max_price"),
-            F.round(
-                F.sum(F.col("l_discount").cast("decimal(18,6)")).cast("double") / F.count(F.lit(1)), 4
-            ).alias("avg_disc"),
-        ],
+    return li.groupBy("l_returnflag", "l_linestatus").agg(
+        F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")), 2).cast("double").alias("sum_qty"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.min("l_extendedprice").alias("min_price"),
+        F.max("l_extendedprice").alias("max_price"),
+        F.round(
+            F.sum(F.col("l_discount").cast("decimal(18,6)")).cast("double") / F.count(F.lit(1)), 4
+        ).alias("avg_disc"),
     ).orderBy("l_returnflag", "l_linestatus")
 
 
@@ -291,7 +288,7 @@ def q12(spark, sf_dir):
 )
 def q13(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return R.aggregate(li, [F.col("l_suppkey").alias("k")], [F.count(F.lit(1)).alias("c")]).orderBy("k")
+    return li.groupBy(F.col("l_suppkey").alias("k")).agg(F.count(F.lit(1)).alias("c")).orderBy("k")
 
 
 @_register(
@@ -302,11 +299,11 @@ def q13(spark, sf_dir):
 )
 def q14(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return R.aggregate(
-        li,
-        [(F.col("l_orderkey") % 500).cast("long").alias("k")],
-        [F.sum(F.col("l_suppkey") * 2).cast("long").alias("v")],
-    ).orderBy("k")
+    return (
+        li.groupBy((F.col("l_orderkey") % 500).cast("long").alias("k"))
+        .agg(F.sum(F.col("l_suppkey") * 2).cast("long").alias("v"))
+        .orderBy("k")
+    )
 
 
 @_register(
@@ -316,7 +313,7 @@ def q14(spark, sf_dir):
 )
 def q15(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    return R.aggregate(o, ["o_custkey"], [F.count(F.lit(1)).alias("c")]).orderBy("o_custkey")
+    return o.groupBy("o_custkey").agg(F.count(F.lit(1)).alias("c")).orderBy("o_custkey")
 
 
 @_register("q16_count_distinct", "SELECT COUNT(DISTINCT o_custkey) AS n FROM orders", "B19 distinct")
@@ -335,14 +332,11 @@ def q16(spark, sf_dir):
 def q17(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     return (
-        R.rollup_agg(
-            li,
-            ["l_returnflag", "l_linestatus"],
-            [
-                F.round(F.sum("l_quantity"), 2).alias("s"),
-                F.grouping("l_returnflag").cast("int").alias("g1"),
-                F.grouping("l_linestatus").cast("int").alias("g2"),
-            ],
+        li.rollup("l_returnflag", "l_linestatus")
+        .agg(
+            F.round(F.sum("l_quantity"), 2).alias("s"),
+            F.grouping("l_returnflag").cast("int").alias("g1"),
+            F.grouping("l_linestatus").cast("int").alias("g2"),
         )
         .orderBy("g1", "g2", F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first())
     )
@@ -362,7 +356,7 @@ def q17(spark, sf_dir):
 )
 def q18(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    top = W.top_k_per_group(o, ["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey")], 3)
+    top = top_k_per_group(o, ["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey")], 3)
     return top.select("o_custkey", "o_orderkey", F.col("rk").cast("int").alias("rk")).orderBy(
         "o_custkey", "rk", "o_orderkey"
     )
@@ -381,11 +375,10 @@ def q18(spark, sf_dir):
 )
 def q19(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    lagged = W.with_lag(
-        li, "l_quantity", ["l_orderkey"],
-        ["l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax"],
-        1, 0, out="_lag",
+    w = Window.partitionBy("l_orderkey").orderBy(
+        "l_linenumber", "l_quantity", "l_extendedprice", "l_discount", "l_tax"
     )
+    lagged = li.withColumn("_lag", F.lag("l_quantity", 1, 0).over(w))
     return (
         lagged.select(
             "l_orderkey", "l_linenumber",
@@ -407,10 +400,12 @@ def q19(spark, sf_dir):
 )
 def q20(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    run = W.running_agg(
-        o, F.sum(F.col("o_totalprice").cast("decimal(18,6)")),
-        ["o_custkey"], ["o_orderdate", "o_orderkey"], out="_run",
+    w = (
+        Window.partitionBy("o_custkey")
+        .orderBy("o_orderdate", "o_orderkey")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
+    run = o.withColumn("_run", F.sum(F.col("o_totalprice").cast("decimal(18,6)")).over(w))
     return run.select(
         "o_custkey", "o_orderkey", F.round("_run", 2).cast("double").alias("run")
     ).orderBy("o_custkey", "o_orderkey")
@@ -428,9 +423,11 @@ def q20(spark, sf_dir):
 )
 def q21(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return R.top_k(
-        li, 500, F.col("l_extendedprice").desc(), "l_orderkey", "l_linenumber"
-    ).select("l_orderkey", "l_linenumber")
+    return (
+        li.orderBy(F.col("l_extendedprice").desc(), "l_orderkey", "l_linenumber")
+        .limit(500)
+        .select("l_orderkey", "l_linenumber")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -446,7 +443,7 @@ def q21(spark, sf_dir):
 def q22(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    return R.union_all(o, c).agg(F.count(F.lit(1)).alias("n"))
+    return o.unionByName(c).agg(F.count(F.lit(1)).alias("n"))
 
 
 @_register(
@@ -458,7 +455,7 @@ def q22(spark, sf_dir):
 def q23(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
-    return R.intersect(o, c).agg(F.count(F.lit(1)).alias("n"))
+    return o.intersect(c).agg(F.count(F.lit(1)).alias("n"))
 
 
 # ---------------------------------------------------------------------------
@@ -473,9 +470,11 @@ def q23(spark, sf_dir):
 )
 def q24(spark, sf_dir):
     c = _t(spark, sf_dir, "customer")
-    return R.aggregate(
-        c, [F.upper(F.substring("c_name", 1, 8)).alias("u")], [F.count(F.lit(1)).alias("c")]
-    ).orderBy("u", "c")
+    return (
+        c.groupBy(F.upper(F.substring("c_name", 1, 8)).alias("u"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy("u", "c")
+    )
 
 
 @_register(
@@ -486,9 +485,11 @@ def q24(spark, sf_dir):
 )
 def q25(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    return R.aggregate(
-        o, [F.year("o_orderdate").cast("int").alias("y")], [F.count(F.lit(1)).alias("c")]
-    ).orderBy("y")
+    return (
+        o.groupBy(F.year("o_orderdate").cast("int").alias("y"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy("y")
+    )
 
 
 @_register(
@@ -503,7 +504,8 @@ def q26(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     rev = F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)"))
     return (
-        R.aggregate(li, ["l_orderkey"], [F.round(rev, 2).cast("double").alias("rev")])
+        li.groupBy("l_orderkey")
+        .agg(F.round(rev, 2).cast("double").alias("rev"))
         .orderBy("l_orderkey")
         .limit(1000)
     )
@@ -541,9 +543,11 @@ def q28(spark, sf_dir):
 )
 def q29(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    return R.aggregate(
-        ev, [F.get_json_object("props", "$.k").alias("k")], [F.count(F.lit(1)).alias("c")]
-    ).orderBy(F.col("k").asc_nulls_first(), "c")
+    return (
+        ev.groupBy(F.get_json_object("props", "$.k").alias("k"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy(F.col("k").asc_nulls_first(), "c")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -558,11 +562,11 @@ def q29(spark, sf_dir):
 )
 def q30(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    return R.aggregate(
-        ev,
-        [F.floor(F.col("ts").cast("timestamp").cast("double") / 600).cast("bigint").alias("w")],
-        [F.count(F.lit(1)).alias("c")],
-    ).orderBy("w")
+    return (
+        ev.groupBy(F.floor(F.col("ts").cast("timestamp").cast("double") / 600).cast("bigint").alias("w"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy("w")
+    )
 
 
 @_register(
@@ -572,7 +576,7 @@ def q30(spark, sf_dir):
 )
 def q31(spark, sf_dir):
     ev = _t(spark, sf_dir, "events")
-    return R.distinct_rows(ev.select("user_id", "event_id")).agg(F.count(F.lit(1)).alias("n"))
+    return ev.select("user_id", "event_id").distinct().agg(F.count(F.lit(1)).alias("n"))
 
 
 # ---------------------------------------------------------------------------
@@ -593,9 +597,11 @@ def q32(spark, sf_dir):
         return s.str.strip().str.lower()
 
     c = _t(spark, sf_dir, "customer")
-    return R.aggregate(
-        c, [py_clean("c_mktsegment").alias("k")], [F.count(F.lit(1)).alias("c")]
-    ).orderBy("k", "c")
+    return (
+        c.groupBy(py_clean("c_mktsegment").alias("k"))
+        .agg(F.count(F.lit(1)).alias("c"))
+        .orderBy("k", "c")
+    )
 
 
 @_register(
@@ -827,7 +833,7 @@ def q40(spark, sf_dir):
 )
 def q41(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    return d.select("doc_id", T.fingerprint(F.col("text")).alias("fp")).orderBy("doc_id")
+    return d.select("doc_id", F.md5(F.col("text")).alias("fp")).orderBy("doc_id")
 
 
 @_register(
@@ -1427,26 +1433,22 @@ def q48(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     sup, nat = _t(spark, sf_dir, "supplier"), _t(spark, sf_dir, "nation")
     amt = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")
-    sales = R.filter_rows(li, F.col("l_returnflag") != "R").select(
+    sales = li.filter(F.col("l_returnflag") != "R").select(
         F.col("l_suppkey").alias("suppkey"), F.lit("sales").alias("channel"), amt.alias("amt")
     )
-    returns = R.filter_rows(li, F.col("l_returnflag") == "R").select(
+    returns = li.filter(F.col("l_returnflag") == "R").select(
         F.col("l_suppkey").alias("suppkey"),
         F.lit("returns").alias("channel"),
         (-F.col("l_extendedprice")).cast("decimal(18,6)").alias("amt"),
     )
-    channels = R.union_all(sales, returns)
-    j = R.join(channels, sup, channels.suppkey == sup.s_suppkey, broadcast_right=True)
-    j = R.join(j, nat, j.s_nationkey == nat.n_nationkey, broadcast_right=True)
-    return R.rollup_agg(
-        j,
-        ["n_name", "channel"],
-        [
-            F.round(F.sum("amt"), 2).cast("double").alias("total"),
-            F.count(F.lit(1)).alias("cnt"),
-            F.grouping("n_name").cast("int").alias("g1"),
-            F.grouping("channel").cast("int").alias("g2"),
-        ],
+    channels = sales.unionByName(returns)
+    j = channels.join(F.broadcast(sup), channels.suppkey == sup.s_suppkey)
+    j = j.join(F.broadcast(nat), j.s_nationkey == nat.n_nationkey)
+    return j.rollup("n_name", "channel").agg(
+        F.round(F.sum("amt"), 2).cast("double").alias("total"),
+        F.count(F.lit(1)).alias("cnt"),
+        F.grouping("n_name").cast("int").alias("g1"),
+        F.grouping("channel").cast("int").alias("g2"),
     ).orderBy("g1", "g2", F.col("n_name").asc_nulls_first(), F.col("channel").asc_nulls_first())
 
 
@@ -1473,17 +1475,13 @@ WHERE rk <= 5 ORDER BY y, rk, s"""
 def q49(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
-    j = R.join(li, o, li.l_orderkey == o.o_orderkey)
-    agg = R.aggregate(
-        j,
-        [F.year("o_orderdate").alias("y"), F.col("l_suppkey").alias("s")],
-        [
-            F.round(
-                F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")), 2
-            ).cast("double").alias("rev")
-        ],
+    j = li.join(o, li.l_orderkey == o.o_orderkey)
+    agg = j.groupBy(F.year("o_orderdate").alias("y"), F.col("l_suppkey").alias("s")).agg(
+        F.round(
+            F.sum((F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)")), 2
+        ).cast("double").alias("rev")
     )
-    top = W.top_k_per_group(agg, ["y"], [F.col("rev").desc(), F.col("s")], 5)
+    top = top_k_per_group(agg, ["y"], [F.col("rev").desc(), F.col("s")], 5)
     return top.select(
         F.col("y").cast("int").alias("y"), "s", "rev", F.col("rk").cast("int").alias("rk")
     ).orderBy("y", "rk", "s")
@@ -1518,21 +1516,19 @@ ORDER BY delta, s, cur_y LIMIT 100"""
 def q50(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
     o = _t(spark, sf_dir, "orders")
-    j = R.join(li, o, li.l_orderkey == o.o_orderkey)
+    j = li.join(o, li.l_orderkey == o.o_orderkey)
     amt = F.when(
         F.col("l_returnflag") != "R",
         (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast("decimal(18,6)"),
     ).otherwise((-F.col("l_extendedprice")).cast("decimal(18,6)"))
     # single-scan equivalent of the two UNION ALL channels: the channel split
     # is a row-level CASE, so one join + one agg replaces two of each
-    agg = R.aggregate(
-        j,
-        [F.year("o_orderdate").alias("y"), F.col("l_suppkey").alias("s")],
-        [F.round(F.sum(amt), 2).cast("double").alias("rev")],
+    agg = j.groupBy(F.year("o_orderdate").alias("y"), F.col("l_suppkey").alias("s")).agg(
+        F.round(F.sum(amt), 2).cast("double").alias("rev")
     )
     cur, prev = agg.alias("cur"), agg.alias("prev")
-    out = R.join(
-        cur, prev,
+    out = cur.join(
+        prev,
         (F.col("cur.s") == F.col("prev.s")) & (F.col("cur.y") == F.col("prev.y") + 1),
     ).select(
         F.col("cur.s").alias("s"),
@@ -1571,20 +1567,17 @@ FROM ranked WHERE rk <= 10 ORDER BY channel, rk, s"""
 )
 def q60(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    per_channel = R.aggregate(
-        li,
-        [F.col("l_linestatus").alias("channel"), F.col("l_suppkey").alias("s")],
-        [
+    per_channel = (
+        li.groupBy(F.col("l_linestatus").alias("channel"), F.col("l_suppkey").alias("s"))
+        .agg(
             F.round(F.sum(F.when(F.col("l_returnflag") == "R", F.col("l_quantity")).otherwise(0)), 2)
             .cast("double").alias("ret_qty"),
             F.round(F.sum("l_quantity"), 2).cast("double").alias("tot_qty"),
-        ],
-    ).filter(F.col("tot_qty") > 0)
-    ranked = W.ranked(
-        per_channel,
-        ["channel"],
-        [(F.col("ret_qty") / F.col("tot_qty")).desc(), F.col("s")],
+        )
+        .filter(F.col("tot_qty") > 0)
     )
+    w = Window.partitionBy("channel").orderBy((F.col("ret_qty") / F.col("tot_qty")).desc(), F.col("s"))
+    ranked = per_channel.withColumn("rk", F.rank().over(w))
     return (
         ranked.filter(F.col("rk") <= 10)
         .select(
@@ -1615,7 +1608,7 @@ def q60(spark, sf_dir):
 )
 def q61(spark, sf_dir):
     o = _t(spark, sf_dir, "orders")
-    w = W.spec(["o_custkey"], [F.col("o_totalprice").desc(), F.col("o_orderkey")])
+    w = Window.partitionBy("o_custkey").orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey"))
     return (
         o.select(
             "o_custkey", "o_orderkey",
@@ -1677,8 +1670,8 @@ def q62(spark, sf_dir):
 )
 def q51(spark, sf_dir):
     c, o = _t(spark, sf_dir, "customer"), _t(spark, sf_dir, "orders")
-    j = R.join(o, c, o.o_custkey == c.c_custkey, how="right")
-    return R.aggregate(j, [c.c_custkey], [F.count(o.o_orderkey).alias("c")]).orderBy("c_custkey")
+    j = o.join(c, o.o_custkey == c.c_custkey, how="right")
+    return j.groupBy(c.c_custkey).agg(F.count(o.o_orderkey).alias("c")).orderBy("c_custkey")
 
 
 @_register(
@@ -1694,15 +1687,16 @@ def q51(spark, sf_dir):
     " three null patterns (left-only / right-only / both) appear",
 )
 def q52(spark, sf_dir):
-    a = R.filter_rows(_t(spark, sf_dir, "customer"), F.col("c_custkey") <= 1000).select(
+    a = _t(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 1000).select(
         F.col("c_custkey").alias("k")
     ).alias("a")
-    b = R.distinct_rows(
-        R.filter_rows(_t(spark, sf_dir, "orders"), F.col("o_custkey") >= 500).select(
-            F.col("o_custkey").alias("k")
-        )
-    ).alias("b")
-    j = R.join(a, b, F.col("a.k") == F.col("b.k"), how="full")
+    b = (
+        _t(spark, sf_dir, "orders").filter(F.col("o_custkey") >= 500)
+        .select(F.col("o_custkey").alias("k"))
+        .distinct()
+        .alias("b")
+    )
+    j = a.join(b, F.col("a.k") == F.col("b.k"), how="full")
     return j.select(
         F.coalesce(F.col("a.k"), F.col("b.k")).alias("k"),
         F.when(F.col("a.k").isNull(), "right_only")
@@ -1726,7 +1720,7 @@ def q53(spark, sf_dir):
     o = _t(spark, sf_dir, "orders").select(F.col("o_custkey").alias("k"))
     c = _t(spark, sf_dir, "customer").select(F.col("c_custkey").alias("k"))
     return (
-        R.except_all(o, c)
+        o.exceptAll(c)
         .groupBy("k")
         .agg(F.count(F.lit(1)).alias("c"))
         .orderBy("k")
@@ -1745,14 +1739,10 @@ def q53(spark, sf_dir):
 )
 def q54(spark, sf_dir):
     li = _t(spark, sf_dir, "lineitem")
-    return R.cube_agg(
-        li,
-        ["l_returnflag", "l_linestatus"],
-        [
-            F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")), 2).cast("double").alias("s"),
-            F.grouping("l_returnflag").cast("int").alias("g1"),
-            F.grouping("l_linestatus").cast("int").alias("g2"),
-        ],
+    return li.cube("l_returnflag", "l_linestatus").agg(
+        F.round(F.sum(F.col("l_quantity").cast("decimal(18,6)")), 2).cast("double").alias("s"),
+        F.grouping("l_returnflag").cast("int").alias("g1"),
+        F.grouping("l_linestatus").cast("int").alias("g2"),
     ).orderBy("g1", "g2", F.col("l_returnflag").asc_nulls_first(), F.col("l_linestatus").asc_nulls_first())
 
 
@@ -1774,9 +1764,11 @@ def q55(spark, sf_dir):
     flat = enriched.select(
         F.col("m")["type"].alias("mtype"), F.col("s").getField("user_id").alias("uid")
     )
-    return R.aggregate(
-        flat, ["mtype"], [F.count(F.lit(1)).alias("c"), F.countDistinct("uid").alias("u")]
-    ).orderBy("mtype")
+    return (
+        flat.groupBy("mtype")
+        .agg(F.count(F.lit(1)).alias("c"), F.countDistinct("uid").alias("u"))
+        .orderBy("mtype")
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -1879,8 +1871,8 @@ def q58(spark, sf_dir):
         F.col("l_extendedprice").alias("payload"),
     )
     n_part = max(4, int(spark.conf.get("spark.sql.shuffle.partitions", "32")) // 4)
-    ts = R.sort_within_partitions(keyed, n_part, ["key"], "key")
-    return R.validate_total_sort(ts, "key")
+    ts = keyed.repartitionByRange(n_part, "key").sortWithinPartitions("key")
+    return validate_total_sort(ts, "key")
 
 
 @_register(
@@ -8269,8 +8261,8 @@ FROM documents ORDER BY doc_id"""
     "q329_bpe_train_encode",
     _Q329_SQL,
     "B50+ round-11 (second pass): REAL byte-pair encoding — the actual"
-    " Sennrich et al. 2016 algorithm (text.bpe_train / bpe_token_counts),"
-    " not the bpe_ish regex proxy. Training is distributed over the"
+    " Sennrich et al. 2016 algorithm (text.bpe_train / bpe_token_counts)."
+    " Training is distributed over the"
     " vocabulary-sized distinct-word frame: per round one map-side-"
     " combined pair count (shuffle bounded by |distinct pairs|), ONE"
     " (pair,count) row to the driver, and an Arrow-batched rewrite of"

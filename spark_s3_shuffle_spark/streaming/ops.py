@@ -38,11 +38,6 @@ def read_events_stream(spark: SparkSession, path: str, max_files_per_trigger: in
     return df.withColumn("event_ts", F.col("ts").cast("timestamp"))
 
 
-def with_watermark(df: DataFrame, delay: str = "10 minutes", ts_col: str = "event_ts") -> DataFrame:
-    """B40: late-data horizon; bounds all downstream state."""
-    return df.withWatermark(ts_col, delay)
-
-
 def tumbling_counts(df: DataFrame, window: str = "10 minutes", ts_col: str = "event_ts") -> DataFrame:
     """B37 tumbling window count (batch q30 is the oracle-checked twin)."""
     return df.groupBy(F.window(ts_col, window).alias("w")).agg(F.count(F.lit(1)).alias("c"))

@@ -267,8 +267,8 @@ def test_content_checksum_write_and_verify(spark, mgr):
 
 def test_content_checksum_invariant_to_read_parallelism(spark, mgr):
     """The content digest is an order-independent exact-integer sum, so
-    re-reading the same stage under different shuffle/read parallelism
-    (and after a key repartition) must verify identically."""
+    re-reading the same stage under a different scan parallelism (and after
+    a key repartition) must verify identically."""
     from spark_s3_shuffle_spark.operators.exchange import (
         verify_stage_checksum,
         write_stage_checksum,
@@ -277,13 +277,39 @@ def test_content_checksum_invariant_to_read_parallelism(spark, mgr):
     df = spark.range(3000).withColumn("k", F.col("id") % 11)
     mgr.stage_write(df, "ckp", keys=["k"], num_partitions=4)
     doc = write_stage_checksum(mgr, "ckp")
-    old = spark.conf.get("spark.sql.shuffle.partitions")
+    # Spark caps a scan split at min(maxPartitionBytes, max(openCostInBytes,
+    # (bytes + files * openCostInBytes) / minPartitionNum)); minPartitionNum
+    # defaults to the core count, which alone splits the 4 files 3-5 ways.
+    # With minPartitionNum=1 a 128 MiB cap packs them into one partition,
+    # and a 1 KiB cap cuts each file into several.
+    settings = {
+        "one": {
+            "spark.sql.files.maxPartitionBytes": str(128 << 20),
+            "spark.sql.files.openCostInBytes": "0",
+            "spark.sql.files.minPartitionNum": "1",
+        },
+        "many": {
+            "spark.sql.files.maxPartitionBytes": "1024",
+            "spark.sql.files.openCostInBytes": str(4 << 20),
+            "spark.sql.files.minPartitionNum": "1",
+        },
+    }
+    keys = settings["one"].keys()
+    old = {k: spark.conf.get(k, None) for k in keys}
+    widths = {}
     try:
-        for parts in ("5", "17"):
-            spark.conf.set("spark.sql.shuffle.partitions", parts)
-            assert verify_stage_checksum(mgr, "ckp"), parts
+        for name, confs in settings.items():
+            for k, v in confs.items():
+                spark.conf.set(k, v)
+            widths[name] = mgr.stage_read("ckp").rdd.getNumPartitions()
+            assert verify_stage_checksum(mgr, "ckp"), (name, widths[name])
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
+        for k, v in old.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)
+    assert widths["one"] == 1 and widths["many"] >= 4, widths
     # a REWRITE with different partitioning carries the same content:
     # recomputed digest equals the sidecar written before the rewrite
     re_read = mgr.stage_read("ckp").repartition(9, "k")

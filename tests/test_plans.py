@@ -85,11 +85,8 @@ def test_q50_limit_is_take_ordered(spark, sf_dir):
 def test_q58_terasort_is_range_partitioned(spark, sf_dir):
     """TeraSort analogue must plan a range exchange (sampled bounds), not a
     hash shuffle or a global single-partition sort."""
-    from spark_s3_shuffle_spark.operators import relational as R
-    li = load_table(spark, sf_dir, "lineitem")
-    keyed = li.select(F.unhex(F.md5(F.concat_ws("|", "l_orderkey", "l_linenumber"))).alias("key"))
-    ts = R.sort_within_partitions(keyed, 8, ["key"], "key")
-    plan = I.formatted_plan(ts)
+    q58 = QUERIES["q58_terasort"].builder(spark, sf_dir)
+    plan = I.formatted_plan(q58)
     assert "rangepartitioning" in plan.lower(), plan[:2000]
 
 

@@ -145,10 +145,8 @@ def test_salted_top_k_matches_unsalted(spark, rows, k, salt):
     """salted_top_k_per_group ≡ top_k_per_group on any input — few distinct
     keys + heavy value ties stress both the skew spreading and the
     rank tie policy (ties at rank k must survive in both)."""
-    from spark_s3_shuffle_spark.operators import windowing as W
-
     df = spark.createDataFrame(rows, "g long, v long, payload long")
-    plain = W.top_k_per_group(df, ["g"], [F.desc("v")], k)
+    plain = SK.top_k_per_group(df, ["g"], [F.desc("v")], k)
     salted = SK.salted_top_k_per_group(df, ["g"], [F.desc("v")], k, salt=salt)
     key = lambda r: (r["g"], r["v"], r["payload"], r["rk"])  # noqa: E731
     assert sorted(map(key, salted.collect())) == sorted(map(key, plain.collect()))

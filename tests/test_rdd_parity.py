@@ -1,10 +1,9 @@
 """RDD K/V parity tests mirroring the reference suite's computed-expected
 assertions (reference: S3ShuffleManagerTest.scala — fold identity :192-196,
-combine counts :131-139, sortedness scans :92-97,165-170)."""
+combine counts :131-139, sortedness scans :92-97,165-170). The RDD ops are
+Spark's own methods; the DataFrame forms are q13–q15 and q58."""
 
 import random
-
-from spark_s3_shuffle_spark.operators import rdd_parity as P
 
 
 def test_fold_by_key_identity(spark):
@@ -13,7 +12,7 @@ def test_fold_by_key_identity(spark):
     # key*2*2 + (key*2+1)*2 === value
     sc = spark.sparkContext
     rdd = sc.parallelize(range(1000), 10).map(lambda t: (t // 2, t * 2))
-    result = dict(P.fold_by_key(rdd, 0, lambda a, b: a + b, 5).collect())
+    result = dict(rdd.foldByKey(0, lambda a, b: a + b, 5).collect())
     assert len(result) == 500
     for key, value in result.items():
         assert key * 2 * 2 + (key * 2 + 1) * 2 == value
@@ -24,12 +23,11 @@ def test_combine_by_key_counts(spark):
     # values 0..999 keyed by v % 10 → each key combines exactly 100 values
     sc = spark.sparkContext
     rdd = sc.parallelize(range(1000), 8).map(lambda v: (v % 10, v))
-    combined = P.combine_by_key(
-        rdd,
-        create_combiner=lambda v: [v],
-        merge_value=lambda acc, v: acc + [v],
-        merge_combiners=lambda a, b: a + b,
-        num_partitions=5,
+    combined = rdd.combineByKey(
+        createCombiner=lambda v: [v],
+        mergeValue=lambda acc, v: acc + [v],
+        mergeCombiners=lambda a, b: a + b,
+        numPartitions=5,
     ).collect()
     assert len(combined) == 10
     for key, values in combined:
@@ -40,7 +38,7 @@ def test_combine_by_key_counts(spark):
 def test_reduce_by_key_matches_fold(spark):
     sc = spark.sparkContext
     rdd = sc.parallelize(range(1000), 8).map(lambda t: (t % 25, t))
-    reduced = dict(P.reduce_by_key(rdd, lambda a, b: a + b, 5).collect())
+    reduced = dict(rdd.reduceByKey(lambda a, b: a + b, 5).collect())
     assert len(reduced) == 25
     for key, value in reduced.items():
         assert value == sum(v for v in range(1000) if v % 25 == key)
@@ -51,11 +49,11 @@ def test_aggregate_by_key_mean(spark):
     sc = spark.sparkContext
     rdd = sc.parallelize(range(600), 6).map(lambda t: (t % 3, t))
     agg = dict(
-        P.aggregate_by_key(
-            rdd, (0, 0),
-            seq_func=lambda acc, v: (acc[0] + v, acc[1] + 1),
-            comb_func=lambda a, b: (a[0] + b[0], a[1] + b[1]),
-            num_partitions=4,
+        rdd.aggregateByKey(
+            (0, 0),
+            seqFunc=lambda acc, v: (acc[0] + v, acc[1] + 1),
+            combFunc=lambda a, b: (a[0] + b[0], a[1] + b[1]),
+            numPartitions=4,
         ).collect()
     )
     for key, (s, c) in agg.items():
@@ -67,7 +65,7 @@ def test_group_by_key_no_combine(spark):
     # mirrors runWithSparkConf_noMapSideCombine (S3ShuffleManagerTest.scala:56-73)
     sc = spark.sparkContext
     rdd = sc.parallelize(range(100), 4).map(lambda t: (t % 7, t))
-    grouped = dict(P.group_by_key(rdd, 3).mapValues(sorted).collect())
+    grouped = dict(rdd.groupByKey(3).mapValues(sorted).collect())
     assert len(grouped) == 7
     for key, values in grouped.items():
         assert values == sorted(v for v in range(100) if v % 7 == key)
@@ -75,14 +73,15 @@ def test_group_by_key_no_combine(spark):
 
 def test_sort_by_key_terasort_like(spark):
     # mirrors teraSortLike (S3ShuffleManagerTest.scala:146-174): random int
-    # keys, sortByKey(true, n), global sortedness via pairwise scan
+    # keys, sortByKey(true, n), global sortedness via pairwise scan: collect()
+    # concatenates partitions in order, so it equals the sorted list only if
+    # every partition is sorted and the partition ranges are ordered
     sc = spark.sparkContext
     rng = random.Random(42)
     data = [(rng.randint(0, 1 << 30), i) for i in range(5000)]
     rdd = sc.parallelize(data, 16)
-    sorted_rdd = P.sort_by_key(rdd, True, 7)
+    sorted_rdd = rdd.sortByKey(True, 7)
     assert sorted_rdd.getNumPartitions() == 7
-    assert P.is_globally_sorted(sorted_rdd)
     keys = [k for k, _ in sorted_rdd.collect()]
     assert keys == sorted(k for k, _ in data)
 
@@ -91,10 +90,9 @@ def test_sort_by_global(spark):
     # mirrors forced-sort-shuffle sortedness assert (S3ShuffleManagerTest.scala:75-101)
     sc = spark.sparkContext
     rdd = sc.parallelize([(i * 37) % 1000 for i in range(1000)], 8)
-    out = P.sort_by(rdd, lambda x: x, True, 5)
+    out = rdd.sortBy(lambda x: x, True, 5)
     vals = out.collect()
     assert vals == sorted(vals)
-    assert P.is_globally_sorted(out, keyfunc=lambda x: x)
 
 
 def test_validate_total_sort_plan_side(spark):
@@ -107,7 +105,7 @@ def test_validate_total_sort_plan_side(spark):
     df = spark.range(0, 5000).select(
         F.unhex(F.md5(F.col("id").cast("string"))).alias("key")
     )
-    ts = R.sort_within_partitions(df, 7, ["key"], "key")
+    ts = df.repartitionByRange(7, "key").sortWithinPartitions("key")
     row = R.validate_total_sort(ts, "key").collect()[0]
     assert row["n"] == 5000
     assert row["sorted"] == 1

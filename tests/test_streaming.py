@@ -25,7 +25,7 @@ def test_tumbling_stream_matches_batch(spark, sf_dir, events_drop_dir):
     out = f"{events_drop_dir}/out1"
     ckpt = f"{events_drop_dir}/ckpt1"
     stream = S.read_events_stream(spark, f"{events_drop_dir}/in")
-    agg = S.tumbling_counts(S.with_watermark(stream, "10 minutes"), "10 minutes")
+    agg = S.tumbling_counts(stream.withWatermark("event_ts", "10 minutes"), "10 minutes")
     S.run_stream_to_completion(S.parquet_sink(agg, out, ckpt))
 
     got = spark.read.parquet(out).select(F.col("w.start").alias("ws"), "c")
@@ -52,7 +52,7 @@ def test_stream_dedup_within_watermark(spark, events_drop_dir):
     out = f"{events_drop_dir}/out2"
     ckpt = f"{events_drop_dir}/ckpt2"
     stream = S.read_events_stream(spark, f"{events_drop_dir}/in")
-    deduped = S.dedup_stream(S.with_watermark(stream, "1 hour"), ["user_id", "event_id"])
+    deduped = S.dedup_stream(stream.withWatermark("event_ts", "1 hour"), ["user_id", "event_id"])
     S.run_stream_to_completion(S.parquet_sink(deduped, out, ckpt))
     got = spark.read.parquet(out)
     expected = spark.read.parquet(f"{events_drop_dir}/in").dropDuplicates(["user_id", "event_id"]).count()
@@ -133,7 +133,7 @@ def test_sliding_stream_matches_batch(spark, sf_dir, events_drop_dir):
     """B38 in streaming mode, verified against the batch twin: every emitted
     (window, count) must equal the batch sliding-window count; only
     tail windows the final watermark hasn't passed may be withheld."""
-    base = S.with_watermark(S.read_events_stream(spark, f"{events_drop_dir}/in"), "30 minutes")
+    base = S.read_events_stream(spark, f"{events_drop_dir}/in").withWatermark("event_ts", "30 minutes")
     agg = S.sliding_counts(base, "10 minutes", "5 minutes")
     out = f"{events_drop_dir}/out_slide"
     ckpt = f"{events_drop_dir}/ckpt_slide"
@@ -162,7 +162,7 @@ def test_sliding_stream_matches_batch(spark, sf_dir, events_drop_dir):
 def test_session_stream_matches_batch(spark, sf_dir, events_drop_dir):
     """B39 in streaming mode: emitted (user, session-start) counts must
     equal the batch session_window twin; withheld sessions are bounded."""
-    base = S.with_watermark(S.read_events_stream(spark, f"{events_drop_dir}/in"), "30 minutes")
+    base = S.read_events_stream(spark, f"{events_drop_dir}/in").withWatermark("event_ts", "30 minutes")
     agg = S.session_counts(base, "5 minutes")
     out = f"{events_drop_dir}/out_sess"
     ckpt = f"{events_drop_dir}/ckpt_sess"
@@ -275,7 +275,7 @@ def test_session_formulations_agree_batch_and_stream(spark, sf_dir, events_drop_
     assert per_user_sw == per_user_q64
 
     # streaming mode at the same gap: emitted ⊆ batch, values exact
-    base = S.with_watermark(S.read_events_stream(spark, f"{events_drop_dir}/in"), "30 minutes")
+    base = S.read_events_stream(spark, f"{events_drop_dir}/in").withWatermark("event_ts", "30 minutes")
     agg = S.session_counts(base, "30 minutes")
     out = f"{events_drop_dir}/out_sess30"
     ckpt = f"{events_drop_dir}/ckpt_sess30"
@@ -335,7 +335,7 @@ def test_late_rows_older_than_watermark_are_dropped(spark):
     assert len([f for f in os.listdir(indir) if f.startswith("part-")]) == 3
 
     stream = S.read_events_stream(spark, indir, max_files_per_trigger=1)
-    agg = S.tumbling_counts(S.with_watermark(stream, "5 minutes"), "10 minutes")
+    agg = S.tumbling_counts(stream.withWatermark("event_ts", "5 minutes"), "10 minutes")
     q = (
         agg.writeStream.format("memory")
         .queryName("late_counts")
@@ -488,9 +488,8 @@ def test_timer_sessionize_tws_matches_batch_session_window(spark, sf_dir):
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     try:
-        stream = S.with_watermark(
-            S.read_events_stream(spark, f"{tmp}/in", max_files_per_trigger=1),
-            "1 minute",
+        stream = S.read_events_stream(spark, f"{tmp}/in", max_files_per_trigger=1).withWatermark(
+            "event_ts", "1 minute"
         )
         sess = ST.sessionize_tws(stream, gap_us)
         q = (
@@ -654,9 +653,8 @@ def test_funnel_tws_matches_batch_stage_windows(spark, sf_dir):
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
-    stream = S.with_watermark(
-        S.read_events_stream(spark, f"{tmp}/in", max_files_per_trigger=1),
-        "1 minute",
+    stream = S.read_events_stream(spark, f"{tmp}/in", max_files_per_trigger=1).withWatermark(
+        "event_ts", "1 minute"
     )
     fun = ST.funnel_tws(stream)
     q = (
@@ -928,7 +926,7 @@ def test_late_data_replay_matches_batch_oracle_with_same_cutoff(spark):
 
     out, ckpt = f"{tmp}/out", f"{tmp}/ckpt"
     stream = S.read_events_stream(spark, indir, max_files_per_trigger=1)
-    agg = S.tumbling_counts(S.with_watermark(stream, "10 minutes"), "10 minutes")
+    agg = S.tumbling_counts(stream.withWatermark("event_ts", "10 minutes"), "10 minutes")
     q = S.parquet_sink(agg, out, ckpt).start()
     q.awaitTermination(120)
     if q.isActive:
